@@ -46,6 +46,8 @@ from cozo_spark.fixed_rules import get_fixed_rule
 from cozo_spark.functions.aggregates import AGGREGATIONS
 
 import itertools as _itertools
+from collections import OrderedDict as _OrderedDict
+from contextlib import contextmanager as _contextmanager
 
 _log = _logging.getLogger("cozo_spark.engine")
 
@@ -995,7 +997,8 @@ class CozoDb:
         against the same registered frames rebuilds an identical lazy plan.
         The cache returns the previously built (still lazy, still
         re-executed on every action) DataFrame. Entries are invalidated by
-        relation identity (any mutation swaps rel.df), fixed-rule registry
+        the state of the relations the plan READ (see _read_stamps — a
+        write to an unrelated relation keeps them), fixed-rule registry
         changes, and params. Programs whose EVALUATION already ran Spark
         jobs (recursive fixpoints, eager fixed rules) are never cached, so
         a cache hit never skips real work — only plan construction."""
@@ -1017,24 +1020,32 @@ class CozoDb:
                     if res is not None:
                         return res
             self._had_eager_eval = False
-            pre = self._version_vector()
-            res = self._run_program(parsed)
+            pre = self._version_map()
+            with self._recording_reads() as reads:
+                res = self._run_program(parsed)
             if (key is not None and not self._had_eager_eval
                     and isinstance(res, DataFrame)
-                    and pre == self._version_vector()):
-                # version guard: a concurrent writer mutating DURING this
-                # evaluation would make the put-time snapshot postdate the
-                # plan — recording it would let a later same-state get hit
-                # a stale plan. Skip caching instead (r11).
-                self._plan_cache_put(key, res)
+                    and self._unchanged_since(pre, reads)):
+                # version guard: a concurrent writer mutating a relation
+                # this plan read DURING its evaluation would make the
+                # put-time stamps postdate the plan — recording it would
+                # let a later same-state get hit a stale plan. Skip
+                # caching instead (r11).
+                self._plan_cache_put(key, res, reads)
             return res
         # imperative program
         from cozo_spark.datalog.imperative import run_imperative
         return run_imperative(self, parsed)
 
-    def _version_vector(self):
-        return tuple(sorted((n, r.created_seq, r.version)
-                            for n, r in self.relations.items()))
+    def _version_map(self) -> dict:
+        return {n: (r.created_seq, r.version)
+                for n, r in self.relations.items()}
+
+    def _unchanged_since(self, pre: dict, reads) -> bool:
+        """True if no relation named in ``reads`` was created, dropped or
+        written since ``pre`` (a _version_map)."""
+        cur = self._version_map()
+        return all(pre.get(n) == cur.get(n) for n in reads)
 
     # Fixed rules whose plan construction is lazy AND whose output is a
     # deterministic function of their inputs/options — safe to serve from
@@ -1055,15 +1066,18 @@ class CozoDb:
         "DegreeCentrality",
     })
     _PLAN_CACHE_MAX = 64
-    _plan_cache: dict = {}  # key -> (df, headers, spark, rel_snapshot)
+    # key -> entry dict (df, headers + _entry_validity fields); both this
+    # and _skel_cache are least-recently-used: a hit moves the entry to
+    # the end, and the front is evicted past _PLAN_CACHE_MAX
+    _plan_cache: "_OrderedDict" = _OrderedDict()
     _plan_cache_lock = _threading.Lock()
 
     def _plan_cache_key(self, script: str, params: Optional[dict],
                         prog: Program):
         """None = not cacheable. The key carries the script text, params,
-        and fixed-rule registry version; relation/session identity is
-        checked against the stored snapshot at hit time (strong refs in
-        the snapshot keep ids from being recycled)."""
+        and fixed-rule registry version; the session and the relations the
+        plan read are checked against the entry's stamps at hit time
+        (_entry_valid)."""
         import cozo_spark.fixed_rules as _fr
 
         o = prog.opts
@@ -1094,81 +1108,128 @@ class CozoDb:
             return None
         return (script, params_key, _fr.REGISTRY_VERSION)
 
-    def _rel_snapshot(self):
-        # access_level and the index set change read semantics WITHOUT
-        # swapping rel.df — they must invalidate cached plans too.
-        # r11: RAW flat_df identity + the LOGICAL VERSION, NOT rel.df —
-        # the property would force a lazy view rebuild of every dirty
-        # relation on every cache check, even relations the plan never
-        # reads. The version counter bumps on every logical mutation
-        # (put/rm/update/import), so same (id, version) means the
-        # relation's CONTENT is what the plan was compiled against;
-        # content-preserving swaps (compaction installs, ::compact, txn
-        # publish) change the id instead. The dirty FLAG is deliberately
-        # NOT in the snapshot: an extended-seed interleaving fuzz caught a
-        # stale cache hit where an entry recorded mid-evaluation as
-        # (id, dirty=True) matched a LATER dirty state whose pending log
-        # had gained a newer delta — (id, dirty) does not identify a
-        # state, (id, version) does.
-        return tuple(sorted(
-            (name, id(rel.flat_df), rel.version,
-             tuple(c.name for c in rel.keys),
-             rel.keys_trusted, rel.access_level,
-             tuple(sorted(rel.indices)))
-            for name, rel in self.relations.items()))
+    # -- per-relation plan validity ---------------------------------------------
+    #
+    # A cached plan, skeleton or template depends only on the relations its
+    # translation READ. Translation reaches the registry through exactly four
+    # methods — _resolve_relation, _resolve_keys, _resolve_trusted_keys and
+    # _search — which note each name into the calling thread's active
+    # recording (_recording_reads). An entry stamps every recorded name
+    # (_read_stamps), including names that were absent, so creating such a
+    # relation later invalidates it too; a write to any other relation
+    # leaves the entry hittable. Without an active recording (e.g. a direct
+    # _build_skeleton call) an entry conservatively stamps every relation.
+
+    @_contextmanager
+    def _recording_reads(self):
+        """Collect the relation names translation reads on this thread;
+        a nested recording also reports its names to the outer one."""
+        outer = getattr(self._tls, "reads", None)
+        reads: set = set()
+        self._tls.reads = reads
+        try:
+            yield reads
+        finally:
+            self._tls.reads = outer
+            if outer is not None:
+                outer |= reads
+
+    def _note_read(self, name: str) -> None:
+        reads = getattr(self._tls, "reads", None)
+        if reads is not None:
+            reads.add(name)
+
+    def _rel_stamp(self, name: str):
+        """What a plan compiled against relation ``name`` depends on: the
+        RAW flat_df (held strongly, compared by identity — reading the
+        ``df`` property would force a lazy view rebuild; a CozoDb holding
+        the same frame may share the entry), the LOGICAL version (bumped by
+        put/rm/update/import; content-preserving swaps such as compaction
+        installs change the frame instead), keys,
+        key trust, access level and index set (the last three change read
+        semantics without swapping the frame). None = absent. The lazy
+        view's dirty flag is deliberately NOT stamped: an interleaving fuzz
+        caught an entry recorded mid-evaluation as (frame, dirty) matching
+        a LATER dirty state with a newer pending delta — (frame, version)
+        identifies a state, (frame, dirty) does not."""
+        rel = self.relations.get(name)
+        if rel is None:
+            return None
+        return (rel.flat_df, (rel.version, tuple(c.name for c in rel.keys),
+                              rel.keys_trusted, rel.access_level,
+                              tuple(sorted(rel.indices))))
+
+    def _read_stamps(self, reads=None) -> tuple:
+        names = self.relations if reads is None else reads
+        return tuple((n, self._rel_stamp(n)) for n in sorted(names))
+
+    def _stamp_current(self, name: str, stamp) -> bool:
+        cur = self._rel_stamp(name)
+        if stamp is None or cur is None:
+            return stamp is cur
+        return stamp[0] is cur[0] and stamp[1] == cur[1]
+
+    def _entry_validity(self, reads=None) -> dict:
+        """The fields every cache entry carries for its hit-time check;
+        ``reads`` defaults to the thread's active recording."""
+        if reads is None:
+            reads = getattr(self._tls, "reads", None)
+        return {"spark": self.spark, "reads": self._read_stamps(reads),
+                "db": id(self)}
+
+    def _entry_valid(self, ent: dict) -> bool:
+        if ent["spark"] is not self.spark or self.temp_relations:
+            return False
+        return all(self._stamp_current(n, st) for n, st in ent["reads"])
+
+    @staticmethod
+    def _lru_get(cache, key):
+        """Caller holds _plan_cache_lock."""
+        ent = cache.get(key)
+        if ent is not None:
+            cache.move_to_end(key)
+        return ent
+
+    def _lru_put(self, cache, key, ent) -> None:
+        with CozoDb._plan_cache_lock:
+            cache[key] = ent
+            cache.move_to_end(key)
+            while len(cache) > self._PLAN_CACHE_MAX:
+                cache.popitem(last=False)
 
     def _plan_cache_get(self, key):
         with CozoDb._plan_cache_lock:
-            ent = CozoDb._plan_cache.get(key)
-            if ent is None:
-                return None
-            df, headers, spark, snapshot, rel_refs, _dbid = ent
-            if spark is not self.spark or self.temp_relations:
-                return None
-            # identity check: every relation the db holds now must be the
-            # exact frame the plan was compiled against (raw flat_df —
-            # see _rel_snapshot for why the property must not fire here)
-            if snapshot != self._rel_snapshot():
-                return None
-            if any(self.relations[name].flat_df is not ref
-                   for name, ref in rel_refs):
-                return None
-            return df, headers
+            ent = self._lru_get(CozoDb._plan_cache, key)
+        if ent is None or not self._entry_valid(ent):
+            return None
+        return ent["df"], ent["headers"]
 
-    def _plan_cache_put(self, key, df: DataFrame) -> None:
-        rel_refs = tuple((name, rel.flat_df)
-                         for name, rel in sorted(self.relations.items()))
-        ent = (df, self._entry_display_headers, self.spark,
-               self._rel_snapshot(), rel_refs, id(self))
-        with CozoDb._plan_cache_lock:
-            cache = CozoDb._plan_cache
-            cache[key] = ent
-            while len(cache) > self._PLAN_CACHE_MAX:
-                cache.pop(next(iter(cache)))
+    def _plan_cache_put(self, key, df: DataFrame, reads: set) -> None:
+        ent = {"df": df, "headers": self._entry_display_headers,
+               **self._entry_validity(reads)}
+        self._lru_put(CozoDb._plan_cache, key, ent)
 
-    def _sweep_stale_plan_entries(self) -> None:
-        """Drop cached plans/skeletons compiled against frames this db no
-        longer serves. The snapshot check already makes them unhittable
-        after a mutation — but until LRU eviction their strong refs pin
-        the OLD checkpoint lineage (localCheckpoint blocks stay persisted
-        while referenced), which is real executor storage for a big
-        relation. Called on the write path; pure-Python id comparisons,
-        no py4j. Scoped by the RECORDING db's identity (entries carry
-        id(db)) so sibling CozoDb instances on the same SparkSession — in
-        particular a MultiTransaction's shadow db, whose relation names
-        mirror the base's exactly — never have their live entries wiped
-        by this db's mutations (r11 review fix). Within this db, ANY
-        snapshot mismatch sweeps: a registry that gained or lost a
-        relation makes old entries permanently unhittable too."""
+    def _sweep_stale_plan_entries(self, name: str) -> None:
+        """Drop this db's cached plans/skeletons that read relation
+        ``name`` and no longer match it. The hit-time check already makes
+        them unhittable after a mutation — but until LRU eviction their
+        strong refs pin the OLD checkpoint lineage (localCheckpoint blocks
+        stay persisted while referenced), which is real executor storage
+        for a big relation. Called on the write path; pure-Python, no
+        py4j. Entries that never read ``name`` stay. Scoped by the
+        RECORDING db's identity (entries carry id(db)) so sibling CozoDb
+        instances on the same SparkSession — in particular a
+        MultiTransaction's shadow db, whose relation names mirror the
+        base's exactly — never have their live entries wiped by this db's
+        mutations."""
         me = id(self)
-        snap = self._rel_snapshot()
         with CozoDb._plan_cache_lock:
-            for k in [k for k, e in CozoDb._plan_cache.items()
-                      if e[5] == me and e[3] != snap]:
-                del CozoDb._plan_cache[k]
-            for k in [k for k, e in CozoDb._skel_cache.items()
-                      if e.get("db") == me and e["snapshot"] != snap]:
-                del CozoDb._skel_cache[k]
+            for cache in (CozoDb._plan_cache, CozoDb._skel_cache):
+                stale = [k for k, e in cache.items() if e["db"] == me
+                         and any(n == name and not self._stamp_current(n, st)
+                                 for n, st in e["reads"])]
+                for k in stale:
+                    del cache[k]
 
     # -- prepared statements (plan-skeleton cache) ----------------------------------
     #
@@ -1194,8 +1255,26 @@ class CozoDb:
     # falls back to the per-value plan cache. Mirrors the reference's
     # parametrized-script re-compile (runtime/db.rs run_script params), done
     # once instead of per call.
+    #
+    # Key-aware binding: when the skeleton carries hoisted columns beyond
+    # the head, the bind projects them away and would need a distinct — a
+    # shuffle and an extra Spark job on every call. The skeleton entry keeps
+    # the translator's unique-key variable sets of the entry body
+    # (ClauseTranslator.last_ukeys) and the "pinned" fresh vars of
+    # `{col: $p}` / positional `$p` column bindings, each filtered to ONE
+    # value by raw Column equality. If some key lies within head + pinned
+    # vars, the bound rows are already a set and the distinct is skipped —
+    # the key-FD elision the unprepared path applies to `{col: <const>}`.
+    # A user-written `x == $p` never pins (Cozo's `==` equates 115 and
+    # 115.0, which are distinct keys).
+    #
+    # Validity: skeletons, templates and per-value plans are each stamped
+    # with only the relations their translation read (see
+    # _recording_reads), so a write to an unrelated relation leaves them
+    # hittable and sweeps only the entries that read the written relation.
 
-    _skel_cache: dict = {}   # (script, param names, registry ver) -> entry
+    # (script, param names, registry ver) -> entry; LRU like _plan_cache
+    _skel_cache: "_OrderedDict" = _OrderedDict()
     _skel_neg: set = set()   # scripts proven STRUCTURALLY ineligible
     #                          (independent of relation state; evaluation
     #                          failures return _SKEL_RETRY and are NOT
@@ -1205,13 +1284,10 @@ class CozoDb:
         import cozo_spark.fixed_rules as _fr
         return (script, tuple(sorted(params)), _fr.REGISTRY_VERSION)
 
-    def _skel_entry_valid(self, ent: dict) -> bool:
-        if ent["spark"] is not self.spark or self.temp_relations:
-            return False
-        if ent["snapshot"] != self._rel_snapshot():
-            return False
-        return all(self.relations[n].flat_df is ref
-                   for n, ref in ent["rel_refs"])
+    def _skel_cache_put(self, script: str, params: dict, ent: dict) -> dict:
+        ent.update(self._entry_validity())
+        self._lru_put(CozoDb._skel_cache, self._skel_key(script, params), ent)
+        return ent
 
     def _run_prepared(self, script: str, params: dict, parsed: Program,
                       key) -> Optional[DataFrame]:
@@ -1220,41 +1296,42 @@ class CozoDb:
         with CozoDb._plan_cache_lock:
             if skey in CozoDb._skel_neg:
                 return None
-            ent = CozoDb._skel_cache.get(skey)
-        if ent is not None and not self._skel_entry_valid(ent):
+            ent = self._lru_get(CozoDb._skel_cache, skey)
+        pre = self._version_map()
+        if ent is not None and not self._entry_valid(ent):
             ent = None
-        if ent is None:
-            pre = self._version_vector()
-            ent = self._build_skeleton(script, params)
-            if (ent is not None and ent is not _SKEL_RETRY
-                    and pre != self._version_vector()):
-                # a concurrent mutation landed mid-build: the recorded
-                # snapshot postdates some cached translations, so a later
-                # same-state get could hit a stale skeleton. Serve this
-                # call from the fresh build but drop the cache write
-                # (same guard as the per-value plan cache, r11).
-                with CozoDb._plan_cache_lock:
-                    CozoDb._skel_cache.pop(skey, None)
-            if ent is None or ent is _SKEL_RETRY:
-                # only STRUCTURAL ineligibility is cached — a skeleton that
-                # failed to EVALUATE (e.g. a relation that doesn't exist
-                # yet) may succeed after the state changes
-                if ent is None:
+        with self._recording_reads() as reads:
+            if ent is None:
+                ent = self._build_skeleton(script, params)
+                if ent is None or ent is _SKEL_RETRY:
+                    # only STRUCTURAL ineligibility is cached — a skeleton
+                    # that failed to EVALUATE (e.g. a relation that doesn't
+                    # exist yet) may succeed after the state changes
+                    if ent is None:
+                        with CozoDb._plan_cache_lock:
+                            if len(CozoDb._skel_neg) > 256:
+                                CozoDb._skel_neg.clear()
+                            CozoDb._skel_neg.add(skey)
+                    return None
+                if not self._unchanged_since(pre, reads):
+                    # a concurrent mutation of a relation the skeleton read
+                    # landed mid-build: the recorded stamps postdate some
+                    # cached translations, so a later same-state get could
+                    # hit a stale skeleton. Serve this call from the fresh
+                    # build but drop the cache write (same guard as the
+                    # per-value plan cache, r11).
                     with CozoDb._plan_cache_lock:
-                        if len(CozoDb._skel_neg) > 256:
-                            CozoDb._skel_neg.clear()
-                        CozoDb._skel_neg.add(skey)
-                return None
-        self._had_eager_eval = False
-        pre = self._version_vector()
-        res = self._bind_skeleton(ent, params, parsed)
+                        CozoDb._skel_cache.pop(skey, None)
+            self._had_eager_eval = False
+            res = self._bind_skeleton(ent, params, parsed)
+        reads.update(n for n, _ in ent["reads"])
         if (isinstance(res, DataFrame) and not self._had_eager_eval
-                and pre == self._version_vector()):
+                and self._unchanged_since(pre, reads)):
             # same-value repeats then hit the exact per-value cache first
             # (template binds run the fixpoint eagerly — never cached, so
             # a hit can't hide executed work; same policy as run_script_df,
             # including the mid-evaluation mutation guard)
-            self._plan_cache_put(key, res)
+            self._plan_cache_put(key, res, reads)
         return res
 
     def _build_skeleton(self, script: str, params: dict) -> Optional[dict]:
@@ -1356,6 +1433,11 @@ class CozoDb:
         unify_param_ids: set = set()
         used_names = set(head_names) | _body_var_names(body)
         fresh_n = 0
+        # fresh vars bound to ONE value by a column-binding residual (raw
+        # Column equality, like the unprepared path's const-arg filter);
+        # user-written `x == $p` conditions never pin: Cozo's `==` equates
+        # 115 and 115.0, which are distinct keys
+        pinned: set = set()
 
         def _fresh() -> str:
             nonlocal fresh_n
@@ -1380,6 +1462,7 @@ class CozoDb:
                 for x in atom.args:
                     if isinstance(x, Param):
                         fresh = _fresh()
+                        pinned.add(fresh)
                         new_args.append(Var(fresh))
                         residuals.append(Call("eq", (Var(fresh), x)))
                     elif x is not None and not isinstance(x, str) \
@@ -1401,6 +1484,7 @@ class CozoDb:
                 for c, v in atom.pairs.items():
                     if isinstance(v, Param):
                         fresh = _fresh()
+                        pinned.add(fresh)
                         new_pairs[c] = Var(fresh)
                         residuals.append(Call("eq", (Var(fresh), v)))
                     elif v is not None and expr_has_param(v):
@@ -1473,7 +1557,7 @@ class CozoDb:
         if agg_head:
             return self._build_skeleton_agg(script, params, dprog, clause,
                                             skel_body, residuals, resid_vars,
-                                            head_names, computed)
+                                            head_names, computed, pinned)
         base = [h for h in head_names if h not in comp_names]
         ext = base + [v for v in sorted(resid_vars) if v not in set(base)]
         if not ext:
@@ -1482,6 +1566,7 @@ class CozoDb:
         skel_prog.rules["?"] = [
             RuleClause([HeadVar(v) for v in ext], skel_body)]
         self._had_eager_eval = False
+        self._tls.entry_ukeys = ()
         try:
             skel_df = self._run_program(skel_prog)
         except QueryError:
@@ -1499,27 +1584,21 @@ class CozoDb:
             "df": skel_df, "residuals": tuple(residuals),
             "head": tuple(head_names),
             "computed": tuple(computed),
-            # distinct re-projection needed when the skeleton carries
-            # columns beyond the (non-computed) head, or an exploding
-            # `y in list` can duplicate rows
+            # re-projection needed when the skeleton carries columns
+            # beyond the (non-computed) head, or an exploding `y in list`
+            # can duplicate rows; it skips the distinct when a unique key
+            # of the skeleton body survives in head + pinned vars
             "extras": (len(ext) > len(base)
                        or any(m for _, _, m in computed)),
-            "spark": self.spark, "snapshot": self._rel_snapshot(),
-            "rel_refs": tuple((n, rel.flat_df)
-                              for n, rel in sorted(self.relations.items())),
-            "db": id(self),
+            "ukeys": self._tls.entry_ukeys, "pinned": frozenset(pinned),
         }
-        with CozoDb._plan_cache_lock:
-            cache = CozoDb._skel_cache
-            cache[self._skel_key(script, params)] = ent
-            while len(cache) > self._PLAN_CACHE_MAX:
-                cache.pop(next(iter(cache)))
-        return ent
+        return self._skel_cache_put(script, params, ent)
 
     def _build_skeleton_agg(self, script: str, params: dict, dprog: Program,
                             clause, skel_body: list, residuals: list,
                             resid_vars: set, input_names: list,
-                            computed: tuple | list = ()):
+                            computed: tuple | list = (),
+                            pinned: set = frozenset()):
         """Aggregation-head plan skeleton (r7): the skeleton is the entry
         body's RAW multiset match stream (translate(..., raw=True) — the
         exact stream the unprepared path feeds aggregate_head) projected to
@@ -1628,21 +1707,13 @@ class CozoDb:
         ent = {
             "df": named, "residuals": tuple(residuals),
             "agg_head": tuple(head), "resid_pos": resid_pos,
+            "pinned": frozenset(pinned),
             "computed": tuple(computed), "comp_pos": comp_pos,
             "uniq": tuple(uniq), "keys": keys, "aggs": aggs,
             "dtypes": dtypes,
             "display": headers if uniq != headers else None,
-            "spark": self.spark, "snapshot": self._rel_snapshot(),
-            "rel_refs": tuple((n, rel.flat_df)
-                              for n, rel in sorted(self.relations.items())),
-            "db": id(self),
         }
-        with CozoDb._plan_cache_lock:
-            cache = CozoDb._skel_cache
-            cache[self._skel_key(script, params)] = ent
-            while len(cache) > self._PLAN_CACHE_MAX:
-                cache.pop(next(iter(cache)))
-        return ent
+        return self._skel_cache_put(script, params, ent)
 
     def _try_template(self, script: str, params: dict):
         """Parse-and-template wrapper for the last-resort path (the flat
@@ -1856,17 +1927,8 @@ class CozoDb:
             return None  # nothing value-independent to cache
         ent = {
             "template": True, "drops": drops, "repls": repls,
-            "spark": self.spark, "snapshot": self._rel_snapshot(),
-            "rel_refs": tuple((n, rel.flat_df)
-                              for n, rel in sorted(self.relations.items())),
-            "db": id(self),
         }
-        with CozoDb._plan_cache_lock:
-            cache = CozoDb._skel_cache
-            cache[self._skel_key(script, params)] = ent
-            while len(cache) > self._PLAN_CACHE_MAX:
-                cache.pop(next(iter(cache)))
-        return ent
+        return self._skel_cache_put(script, params, ent)
 
     def _bind_recursive_template(self, ent: dict, params: dict,
                                  parsed: Program):
@@ -1921,6 +1983,37 @@ class CozoDb:
         return self._run_program(parsed, seed_stores=seed_stores,
                                  seed_unique=seed_unique)
 
+    @staticmethod
+    def _bind_residuals(df: DataFrame, ent: dict, params: dict, bound: set,
+                        typer) -> DataFrame:
+        """Filter a skeleton frame by its hoisted residuals, bound to
+        ``params``."""
+        from cozo_spark.datalog.translate import compile_expr
+
+        cond = None
+        for r in ent["residuals"]:
+            b = subst_params_expr(r, params)
+            if (isinstance(b, Call) and b.fn == "eq"
+                    and isinstance(b.args[0], Var)
+                    and b.args[0].name in ent["pinned"]
+                    and isinstance(b.args[1], Const)):
+                # column-binding residual: RAW Column equality, exactly
+                # what the unprepared path compiles for `{col: <const>}` —
+                # compile_expr's eq would instead fold a type-mismatched
+                # param to False statically, silently changing behavior
+                # between the two paths. A user-written `x == $p` compiles
+                # through compile_expr below, like its literal form.
+                c = F.col(b.args[0].name) == F.lit(b.args[1].value)
+            elif isinstance(b, Call) and b.fn == "__raw_eq":
+                # hoisted bound-var unification (r9): raw Column equality
+                # like the translator's `df.filter(col == F.col(var))`
+                c = (compile_expr(b.args[1], bound, typer)
+                     == F.col(b.args[0].name))
+            else:
+                c = compile_expr(b, bound, typer)
+            cond = c if cond is None else (cond & c)
+        return df if cond is None else df.where(cond)
+
     def _bind_skeleton_agg(self, ent: dict, params: dict,
                            parsed: Program) -> DataFrame:
         from cozo_spark.datalog.translate import compile_expr
@@ -1939,25 +2032,7 @@ class CozoDb:
             typer = dict(df.dtypes).get
             for i in ent["comp_pos"].get(y, ()):
                 df = df.withColumn(f"__h{i}", F.col(y))
-        cond = None
-        for r in ent["residuals"]:
-            b = subst_params_expr(r, params)
-            if (isinstance(b, Call) and b.fn == "eq" and len(b.args) == 2
-                    and isinstance(b.args[0], Var)
-                    and isinstance(b.args[1], Const)):
-                # synthetic column-binding residual — RAW Column equality,
-                # matching the unprepared path (see _bind_skeleton)
-                c = F.col(b.args[0].name) == F.lit(b.args[1].value)
-            elif isinstance(b, Call) and b.fn == "__raw_eq":
-                # hoisted bound-var unification (r9): raw == like the
-                # translator's bound-unify filter
-                c = (compile_expr(b.args[1], bound, typer)
-                     == F.col(b.args[0].name))
-            else:
-                c = compile_expr(b, bound, typer)
-            cond = c if cond is None else (cond & c)
-        if cond is not None:
-            df = df.where(cond)
+        df = self._bind_residuals(df, ent, params, bound, typer)
         # pre-built Column objects: where -> groupBy.agg -> reorder select
         grouped = (df.groupBy(*ent["keys"]).agg(*ent["aggs"])
                    if ent["keys"] else df.agg(*ent["aggs"]))
@@ -1986,31 +2061,18 @@ class CozoDb:
             df = df.withColumn(y, F.explode(col) if multi else col)
             bound = bound | {y}
             typer = _df_typer(df)
-        cond = None
-        for r in ent["residuals"]:
-            b = subst_params_expr(r, params)
-            if (isinstance(b, Call) and b.fn == "eq" and len(b.args) == 2
-                    and isinstance(b.args[0], Var)
-                    and isinstance(b.args[1], Const)):
-                # synthetic column-binding residual: RAW Column equality,
-                # exactly what the unprepared path compiles for
-                # `{col: <const>}` — compile_expr's eq would instead fold
-                # a type-mismatched param to False statically, silently
-                # changing behavior between the two paths
-                c = F.col(b.args[0].name) == F.lit(b.args[1].value)
-            elif isinstance(b, Call) and b.fn == "__raw_eq":
-                # hoisted bound-var unification: raw Column equality like
-                # the translator's `df.filter(col == F.col(var))`
-                c = (compile_expr(b.args[1], bound, typer)
-                     == F.col(b.args[0].name))
-            else:
-                c = compile_expr(b, bound, typer)
-            cond = c if cond is None else (cond & c)
-        if cond is not None:
-            df = df.where(cond)
+        df = self._bind_residuals(df, ent, params, bound, typer)
         if ent["extras"]:
-            # project the hoisted columns away and restore set semantics
-            df = df.select(*ent["head"]).distinct()
+            # project the hoisted columns away and restore set semantics —
+            # unless a unique key of the skeleton body lies within the head
+            # and the pinned vars (each filtered to one value above): then
+            # the rows are already a set and distinct() would only add a
+            # shuffle (the key-FD elision of the unprepared path)
+            df = df.select(*ent["head"])
+            keep = set(ent["head"]) | ent["pinned"]
+            if (any(m for _, _, m in ent["computed"])
+                    or not any(k <= keep for k in ent["ukeys"])):
+                df = df.distinct()
         elif ent.get("computed"):
             # no distinct needed (deterministic 1:1 columns over an
             # already-distinct skeleton) but head order must be restored
@@ -2635,11 +2697,13 @@ class CozoDb:
         return resolve
 
     def _resolve_keys(self, name: str) -> Optional[list]:
+        self._note_read(name)
         rel = self.relations.get(name)
         return rel.key_names if rel else None
 
     def _resolve_trusted_keys(self, name: str) -> Optional[list]:
         """PK columns the rows are KNOWN unique on (distinct-elision gate)."""
+        self._note_read(name)
         rel = self.relations.get(name)
         return rel.key_names if rel is not None and rel.keys_trusted else None
 
@@ -2659,6 +2723,7 @@ class CozoDb:
     def _search(self, rel_name: str, idx_name: str, opts: dict):
         from cozo_spark.operators import indices as IX
 
+        self._note_read(rel_name)
         rel = self.relations.get(rel_name)
         if rel is None:
             raise QueryError(f"relation {rel_name!r} not found")
@@ -2673,6 +2738,7 @@ class CozoDb:
             # lazy projection it is always fresh; at scale it would be a
             # second sorted/bucketed materialization.
             rel_name, idx_name = name.split(":", 1)
+            self._note_read(rel_name)
             rel = self.relations.get(rel_name)
             if rel is not None:
                 idx = rel.indices.get(idx_name)
@@ -2688,6 +2754,7 @@ class CozoDb:
 
                     return IX.hnsw_graph_df(self, rel, idx_name)
             return None
+        self._note_read(name)
         rel = self.relations.get(name)
         if rel is not None and rel.access_level == "hidden":
             # reads require >= ReadOnly (compile.rs:221) — hidden blocks them
@@ -2730,6 +2797,10 @@ class CozoDb:
         for cl in clauses:
             parts.append(self._canon(tr.translate(cl.head, cl.body)))
             part_unique.append(tr.last_unique)
+        if name == "?":
+            # the body keys of a single-clause entry, for the prepared
+            # skeleton's bind-time distinct elision (_bind_skeleton)
+            self._tls.entry_ukeys = tr.last_ukeys if len(parts) == 1 else ()
         if len(parts) == 1 and part_unique[0]:
             # provably duplicate-free (key-FD tracking): skip the set-semantics
             # dedup shuffle entirely
@@ -3881,7 +3952,7 @@ class CozoDb:
         IX.apply_mutation(rel, kind, rows)
         # unpin old checkpoint lineage held by now-stale cached plans
         # (pure-Python sweep; see _sweep_stale_plan_entries)
-        self._sweep_stale_plan_entries()
+        self._sweep_stale_plan_entries(rel.name)
         feed = getattr(self, "changefeed", None)
         if feed is not None:
             feed.record(rel.name, kind, rows, old_rows)
@@ -4542,6 +4613,8 @@ class MultiTransaction:
                     del merged[n]  # removed in base while untouched here
             self.base.relations = merged
             self.base.temp_relations = self.shadow.temp_relations
+            for n in touched:
+                self.base._sweep_stale_plan_entries(n)
         self.done = True
 
     def abort(self) -> None:

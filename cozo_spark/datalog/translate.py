@@ -433,6 +433,10 @@ class ClauseTranslator:
         # True after translate() iff the head projection was provably
         # duplicate-free and distinct() was skipped
         self.last_unique: bool = False
+        # the body frame's unique-key variable sets after translate() (the
+        # final ``_ukeys``): lets a caller that filters or projects the
+        # head further decide whether its own dedup is a no-op
+        self.last_ukeys: tuple = ()
 
     def translate(self, head, body: list, raw: bool = False) -> DataFrame:
         atoms = list(body)
@@ -440,6 +444,7 @@ class ClauseTranslator:
         bound: set = set()
         self._ukeys: list = []
         self.last_unique = False
+        self.last_ukeys = ()
         progress = True
         deferred_negs: list[Negation] = []
         while atoms and progress:
@@ -473,6 +478,7 @@ class ClauseTranslator:
             df = self.spark.range(1).select(F.lit(1).alias("__unit__"))
             bound = set()
             self._ukeys = [frozenset()]
+        self.last_ukeys = tuple(self._ukeys)
         if raw:
             # positional projection of the head's input columns, multiplicity
             # preserved — the caller unions clause streams and aggregates once

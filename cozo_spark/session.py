@@ -31,6 +31,17 @@ _DEFAULTS = {
 }
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, at most 48g. In local mode the driver JVM is
+    the whole cluster; a heap larger than the host lets it grow until the
+    kernel kills it (every later Spark call then fails)."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1, min(48, ram // (2 << 30)))}g"
+
+
 def get_spark(app_name: str = "cozo_spark", **overrides: str) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -42,7 +53,8 @@ def get_spark(app_name: str = "cozo_spark", **overrides: str) -> SparkSession:
     if not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
         # In local mode driver memory is the only knob; leave headroom.
-        builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        builder = builder.config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
     conf = dict(_DEFAULTS)
     # Shuffle partitions ~ parallelism locally; AQE coalesces the rest.
     conf.setdefault("spark.sql.shuffle.partitions", cpus)

@@ -6,7 +6,10 @@ non-recursive helper-rule args, aggregation-head bodies, :sort/:limit
 combos). Each script runs through run_script_df(script, params) — which
 may take the skeleton-bind path — and must produce exactly the rows of
 the same script with the values inlined as literals (which re-translates
-from scratch). Seeds are fixed; failures reproduce."""
+from scratch). A second variant interleaves puts and removes on the read
+relation and on an unrelated one between the binds, so cached entries
+are reused across unrelated writes and rebuilt after relevant ones.
+Seeds are fixed; failures reproduce."""
 
 from __future__ import annotations
 
@@ -172,3 +175,52 @@ def test_prepared_matches_literal(spark, seed):
     got2 = _rows(db.run_script_df(script, params=dict(params2)))
     want2 = _rows(db.run_script_df(_literal(script, params2)))
     assert got2 == want2, f"seed={seed} (2nd values)\n{script}\n{params2}"
+
+
+def _keyed_db(spark):
+    """`t` as an engine relation with a trusted key (so binds may skip
+    their distinct), plus an unrelated relation `u`."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = CozoDb(spark)
+    db.run_script(":create t {k: Int => v: Int, s: String}")
+    db.run_script(":create u {k: Int => v: Int}")
+    rows = ", ".join(f"[{i}, {(i * 7) % 23}, 's{i % 5}']" for i in range(200))
+    db.run_script(f"?[k, v, s] <- [{rows}] :put t {{k => v, s}}")
+    db.run_script("?[k, v] <- [[1, 1]] :put u {k => v}")
+    return db
+
+
+def _write(db, rnd: random.Random) -> None:
+    k = rnd.randrange(0, 220)
+    if rnd.random() < 0.5:
+        if rnd.random() < 0.7:
+            db.run_script(f"?[k, v, s] <- [[{k}, {rnd.randrange(0, 23)}, "
+                          f"'s{rnd.randrange(0, 5)}']] :put t {{k => v, s}}")
+        else:
+            db.run_script(f"?[k] <- [[{k}]] :rm t {{k}}")
+    elif rnd.random() < 0.7:
+        db.run_script(f"?[k, v] <- [[{k}, {k}]] :put u {{k => v}}")
+    else:
+        db.run_script(f"?[k] <- [[{k}]] :rm u {{k}}")
+
+
+@pytest.mark.parametrize("seed", range(16))
+def test_prepared_matches_literal_under_writes(spark, seed):
+    db = _keyed_db(spark)
+    rnd = random.Random(1000 + seed)
+    script, params = _gen(rnd)
+    for step in range(4):
+        try:
+            got = _rows(db.run_script_df(script, params=dict(params)))
+        except Exception as e:
+            with pytest.raises(type(e)):
+                db.run_script_df(_literal(script, params))
+            return
+        want = _rows(db.run_script_df(_literal(script, params)))
+        assert got == want, \
+            f"seed={seed} step={step}\nscript:\n{script}\nparams={params}"
+        _write(db, rnd)
+        if step % 2:
+            params = {k: (v + 1 if isinstance(v, int) else "s0")
+                      for k, v in params.items()}

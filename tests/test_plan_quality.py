@@ -418,3 +418,88 @@ def test_pq_topk_plan(spark):
     for node in ("ArrowEvalPython", "BatchEvalPython",
                  "FlatMapGroupsInPandas", "MapInPandas"):
         assert node not in p["plan"]
+
+
+# --- prepared binds -------------------------------------------------------------
+
+
+def _spark_jobs(spark, df, tag):
+    """(number of Spark jobs one collect of ``df`` runs, its sorted rows)"""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        rows = sorted(tuple(r) for r in df.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag) or []), rows
+
+
+def _inline(script, params):
+    for k, v in params.items():
+        script = script.replace(f"${k}", repr(v))
+    return script
+
+
+PREPARED_KEYED = {
+    "pk": ("?[nm, nk] := *pcust{ck: $k, nm, nk}", {"k": 3}, {"k": 7}),
+    "kv_point": ("?[v, w] := *pkv{k: $k, v, w}", {"k": 1}, {"k": 2}),
+    "topk": ("?[ok, price] := *pord{ok, price, prio: $prio}, price < $cap\n"
+             ":order -price, ok\n:limit 10",
+             {"prio": "p1", "cap": 500.0}, {"prio": "p2", "cap": 800.0}),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(PREPARED_KEYED))
+def test_prepared_keyed_bind_has_no_dedup_shuffle(spark, kind):
+    """A bound skeleton whose rows a key proves unique (the key lies in the
+    head plus the vars a `{col: $p}` binding pins) needs no distinct: the
+    bind runs as one job like the literal script, not two."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = CozoDb(spark)
+    db.register_dataframe("pcust", spark.range(500).selectExpr(
+        "id AS ck", "id % 25 AS nk", "concat('c', id) AS nm"), keys=["ck"])
+    db.register_dataframe("pord", spark.range(2000).selectExpr(
+        "id AS ok", "cast(id * 7 % 1000 AS double) AS price",
+        "concat('p', id % 5) AS prio"), keys=["ok"])
+    db.run_script(":create pkv {k: Int => v: Int, w: Int}")
+    db.run_script("?[k, v, w] <- [[1, 10, 100], [2, 20, 200]] "
+                  ":put pkv {k => v, w}")
+    db.run_script("::compact")
+    script, first, second = PREPARED_KEYED[kind]
+    db.run_script_df(script, first)  # builds the skeleton
+    ent = CozoDb._skel_cache.get(db._skel_key(script, second))
+    assert ent is not None and "head" in ent, "not a flat skeleton"
+    bound = db.run_script_df(script, second)
+    plan = bound._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning" not in plan, plan
+    n_bound, got = _spark_jobs(spark, bound, f"prepared-{kind}")
+    n_lit, want = _spark_jobs(
+        spark, db.run_script_df(_inline(script, second)), f"literal-{kind}")
+    assert got == want and got
+    assert n_bound == n_lit, (n_bound, n_lit)
+
+
+def test_prepared_bind_keeps_distinct_for_user_equality(spark):
+    """`b == $x` is a user condition, not a column binding: Cozo's `==`
+    equates 115 and 115.0, which are distinct keys, so b does not count as
+    pinned and the bind keeps its distinct."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = CozoDb(spark)
+    db.run_script(":create pedge {fr: Int, to: Any}")
+    db.run_script("?[a, b] <- [[102, 115]] :put pedge {fr, to}")
+    db.run_script("?[a, b] <- [[102, 115.0]] :put pedge {fr, to}")
+    assert len(db.run_script("?[a, b] := *pedge{fr: a, to: b}").rows) == 2
+    script = "?[a] := *pedge{fr: a, to: b}, b == $x"
+    db.run_script_df(script, {"x": 1})
+    for x in (115, 115.0, "115"):
+        bound = db.run_script_df(script, {"x": x})
+        # the analyzed plan: the optimizer folds a type-mismatched
+        # equality to an empty relation, the bind's dedup stays visible
+        plan = bound._jdf.queryExecution().analyzed().toString()
+        assert plan.startswith("Deduplicate [a#"), plan
+        got = sorted(tuple(r) for r in bound.collect())
+        want = sorted(tuple(r) for r in
+                      db.run_script_df(_inline(script, {"x": x})).collect())
+        assert got == want, x
