@@ -482,13 +482,14 @@ class ClauseTranslator:
         if raw:
             # positional projection of the head's input columns, multiplicity
             # preserved — the caller unions clause streams and aggregates once
-            cols = []
-            for i, h in enumerate(head):
-                nm = h.name if isinstance(h, HeadVar) else h.var
+            # (select by name + toDF: a third of the py4j round-trips of
+            # per-column F.col(..).alias(..))
+            names = [h.name if isinstance(h, HeadVar) else h.var for h in head]
+            for nm in names:
                 if nm not in bound:
                     raise QueryError(f"head variable {nm!r} unbound in body")
-                cols.append(F.col(nm).alias(f"__h{i}"))
-            return df.select(*cols)
+            return df.select(*names).toDF(
+                *[f"__h{i}" for i in range(len(names))])
         return self._project_head(df, bound, head)
 
     # -- atom application -------------------------------------------------------
@@ -852,6 +853,45 @@ class ClauseTranslator:
         return aggregate_head(raw, head)
 
 
+def unique_names(names) -> list:
+    """``names`` with each repeat of an earlier name given trailing
+    underscores — DataFrame columns must be unique, while `?[a, a]` and
+    `?[k, count(v), sum(v)]` are legal heads."""
+    used: set = set()
+    out = []
+    for name in names:
+        while name in used:
+            name += "_"
+        used.add(name)
+        out.append(name)
+    return out
+
+
+def head_aggregates(head: list, inputs: list, dtype_of, names: list):
+    """(group-key Columns, aggregation Columns, output names) of an
+    aggregation head. Position i reads column ``inputs[i]`` (typed by
+    ``dtype_of``) and is output as ``unique_names(names)[i]``; the
+    Columns are plan-free, so a caller may build them once and apply
+    them to any frame that carries the input columns."""
+    names = unique_names(names)
+    keys, aggs = [], []
+    for i, h in enumerate(head):
+        col = F.col(inputs[i])
+        if isinstance(h, HeadVar):
+            keys.append(col.alias(names[i]))
+            continue
+        if h.aggr not in AGGREGATIONS:
+            raise QueryError(f"unknown aggregation {h.aggr!r}")
+        spec = AGGREGATIONS[h.aggr]
+        extra = [const_eval(e) for e in h.extra]
+        try:
+            agg_col = spec.build(col, *extra, dtype=dtype_of(inputs[i]))
+        except TypeError:
+            agg_col = spec.build(col, *extra)
+        aggs.append(agg_col.alias(names[i]))
+    return keys, aggs, names
+
+
 def aggregate_head(raw: DataFrame, head: list) -> DataFrame:
     """Head aggregation over the raw positional match stream (__h0..__hN).
 
@@ -860,37 +900,10 @@ def aggregate_head(raw: DataFrame, head: list) -> DataFrame:
     eval.rs:381-506) — air_routes.rs:189-210 asserts `a[count(fr)] :=
     *route{fr}` is 50,637 (per-row multiplicity), NOT the distinct fr set.
     So no dedup before aggregating; set semantics applies to the aggregated
-    OUTPUT (which groupBy produces deduplicated by construction)."""
-    aggs = []
-    for i, h in enumerate(head):
-        if not isinstance(h, HeadAggr):
-            continue
-        if h.aggr not in AGGREGATIONS:
-            raise QueryError(f"unknown aggregation {h.aggr!r}")
-        spec = AGGREGATIONS[h.aggr]
-        extra = [const_eval(e) for e in h.extra]
-        dt = dict(raw.dtypes).get(f"__h{i}")
-        try:
-            agg_col = spec.build(F.col(f"__h{i}"), *extra, dtype=dt)
-        except TypeError:
-            agg_col = spec.build(F.col(f"__h{i}"), *extra)
-        aggs.append(agg_col.alias(f"__agg_{i}"))
-    keys = [f"__h{i}" for i, h in enumerate(head) if isinstance(h, HeadVar)]
+    OUTPUT (which groupBy produces deduplicated by construction). Output
+    columns keep their var names, in head order."""
+    keys, aggs, names = head_aggregates(
+        head, [f"__h{i}" for i in range(len(head))], dict(raw.dtypes).get,
+        [h.name if isinstance(h, HeadVar) else h.var for h in head])
     out = raw.groupBy(*keys).agg(*aggs) if keys else raw.agg(*aggs)
-    # restore head ordering; aggregate output columns keep their var names
-    sel = []
-    used: set = set()
-    for i, h in enumerate(head):
-        if isinstance(h, HeadVar):
-            name = h.name
-            while name in used:
-                name += "_"
-            used.add(name)
-            sel.append(F.col(f"__h{i}").alias(name))
-        else:
-            name = h.var
-            while name in used:  # e.g. ?[k, count(v), sum(v)]
-                name += "_"
-            used.add(name)
-            sel.append(F.col(f"__agg_{i}").alias(name))
-    return out.select(*sel)
+    return out.select(*names)

@@ -96,7 +96,7 @@ def test_recursive_param_neg_cached_structurally(spark):
     skey = db._skel_key(RECURSIVE_PARAM_ARG, {"s": 1})
     ent = CozoDb._skel_cache.get(skey)
     assert (ent is not None and ent.get("template")) \
-        or skey in CozoDb._skel_neg
+        or CozoDb._skel_cache.get(("ineligible", skey), {}).get("ineligible")
 
 
 def test_fresh_var_collision_with_user_name(spark):

@@ -8,7 +8,9 @@ may take the skeleton-bind path — and must produce exactly the rows of
 the same script with the values inlined as literals (which re-translates
 from scratch). A second variant interleaves puts and removes on the read
 relation and on an unrelated one between the binds, so cached entries
-are reused across unrelated writes and rebuilt after relevant ones.
+are reused across unrelated writes and rebuilt after relevant ones. A
+third variant adds param-free negations and `or` disjunctions to the entry
+body under plain and aggregation heads.
 Seeds are fixed; failures reproduce."""
 
 from __future__ import annotations
@@ -224,3 +226,71 @@ def test_prepared_matches_literal_under_writes(spark, seed):
         if step % 2:
             params = {k: (v + 1 if isinstance(v, int) else "s0")
                       for k, v in params.items()}
+
+
+def _gen_neg_disj(rnd: random.Random):
+    """One random (script, params) pair whose entry body also carries a
+    param-free negation and/or an `or` disjunction, under a plain or an
+    aggregation head, over `_keyed_db`. Params sit only where the hoisted
+    skeleton takes them (conditions, column bindings), so every script
+    prepares as a skeleton; a disjunctive body is a union of disjunct
+    streams that no key makes unique."""
+    params = {}
+
+    def p(val):
+        name = f"p{len(params)}"
+        params[name] = val
+        return f"${name}"
+
+    helper = ""
+    pin_s = rnd.random() < 0.3  # `s: $p` binds s to the param, not a var
+    if pin_s:
+        body = [f"*t{{k, v, s: {p('s' + str(rnd.randrange(0, 5)))}}}"]
+    else:
+        body = ["*t{k, v, s}"]
+    neg = rnd.choice(["rule", "rel", "rel_const", None])
+    if neg == "rule":
+        helper = rnd.choice(["helper[k] := *t{k, s: 's1'}\n",
+                             "helper[k] := *u{k}\n"])
+        body.append("not helper[k]")
+    elif neg == "rel":
+        body.append("not *u{k}")
+    elif neg == "rel_const":
+        body.append(f"not *t{{k, v: {rnd.randrange(0, 23)}}}")
+    disj = rnd.choice(["conds", "atom", None] if neg else ["conds", "atom"])
+    if disj == "conds":
+        body.append(f"(v < {rnd.randrange(3, 15)} or "
+                    f"k > {rnd.randrange(50, 180)})")
+    elif disj == "atom":
+        other = "v > 15" if pin_s else f"s == 's{rnd.randrange(0, 5)}'"
+        body.append(f"(*u{{k}} or {other})")
+    for _ in range(rnd.randrange(1, 3)):
+        if rnd.random() < 0.5:
+            body.append(f"k > {p(rnd.randrange(0, 120))}")
+        else:
+            body.append(f"v < {p(rnd.randrange(5, 23))}")
+    head = rnd.choice(["?[k]", "?[k, v]", "?[v]", "?[s, v]",
+                       "?[s, count(k)]", "?[count(k), sum(v)]",
+                       "?[v, count(k)]", "?[s, min(v), max(k)]"])
+    if pin_s:
+        head = head.replace("?[s, v]", "?[v]").replace("?[s, ", "?[v, ")
+    return helper + head + " := " + ", ".join(body), params
+
+
+@pytest.mark.parametrize("seed", range(24))
+def test_prepared_neg_disj_matches_literal(spark, seed):
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = _keyed_db(spark)
+    db.run_script("?[k, v] <- [[3, 3], [150, 1], [170, 2]] :put u {k => v}")
+    rnd = random.Random(5000 + seed)
+    script, params = _gen_neg_disj(rnd)
+    for step in range(2):
+        got = _rows(db.run_script_df(script, params=dict(params)))
+        want = _rows(db.run_script_df(_literal(script, params)))
+        assert got == want, \
+            f"seed={seed} step={step}\nscript:\n{script}\nparams={params}"
+        ent = CozoDb._skel_cache.get(db._skel_key(script, params))
+        assert ent is not None and "aggs" in ent, "not a hoisted skeleton"
+        params = {k: (v + 7 if isinstance(v, int) else "s2")
+                  for k, v in params.items()}

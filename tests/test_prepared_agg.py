@@ -65,7 +65,7 @@ def test_agg_head_skeleton_reused_and_correct(spark):
         CozoDb._build_skeleton = orig
     # one real skeleton build; later calls bind (or hit the per-value cache)
     real = [b for b in builds if isinstance(b, dict)]
-    assert len(real) == 1 and "agg_head" in real[0]
+    assert len(real) == 1 and real[0]["aggs"]
     for lo, got in [(50000.0, r1), (150000.0, r2), (50000.0, r3)]:
         want = _rows(db.run_script_df(AGG_SCRIPT.replace("$lo", str(lo))))
         assert got == want and got

@@ -98,7 +98,7 @@ def test_skeleton_eval_failure_not_permanently_cached(spark):
     q = "?[v] := *latecomer{k: $k, v}"
     with pytest.raises(Exception):
         db.run_script_df(q, {"k": 1})
-    assert db._skel_key(q, {"k": 1}) not in CozoDb._skel_neg
+    assert ("ineligible", db._skel_key(q, {"k": 1})) not in CozoDb._skel_cache
     db.run_script("?[k, v] <- [[1, 'a']] :create latecomer {k => v}")
     assert [tuple(r) for r in db.run_script_df(q, {"k": 1}).collect()] == \
         [("a",)]
