@@ -20,6 +20,7 @@ real deployment, plain DataFrame swaps here (same semantics, SURVEY §7).
 
 from __future__ import annotations
 
+import datetime as _datetime
 import logging as _logging
 import threading as _threading
 from dataclasses import dataclass, field
@@ -42,7 +43,7 @@ from cozo_spark.datalog.translate import (
     ClauseTranslator, QueryError, expand_disjunctions, head_aggregates,
     unique_names,
 )
-from cozo_spark.datalog.fixpoint import _checkpoint
+from cozo_spark.datalog.fixpoint import _checkpoint, epochs_exceeded
 from cozo_spark.fixed_rules import get_fixed_rule
 from cozo_spark.functions.aggregates import AGGREGATIONS
 
@@ -708,6 +709,31 @@ def _pure_projection_rows(df: DataFrame, static_ck: dict,
         return None
     except Exception:
         return None
+
+
+def _local_py_type(t: T.DataType) -> Optional[type]:
+    """The Python type of a collected value of a column the driver-side
+    fixpoint compares exactly as Spark does (and that a constant compared
+    with it must have); None for the rest. Floats stay on Spark, which
+    normalises NaN and -0.0 in joins and distinct."""
+    if isinstance(t, T.BooleanType):
+        return bool
+    if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return int
+    if isinstance(t, T.DateType):
+        return _datetime.date
+    if t == T.StringType():   # binary collation only
+        return str
+    return None
+
+
+def _local_type(t: T.DataType) -> bool:
+    return _local_py_type(t) is not None
+
+
+def _local_const(v, t: T.DataType) -> bool:
+    py = _local_py_type(t)
+    return py is not None and type(v) is py
 
 
 def _col_type(s: Optional[str]) -> T.DataType:
@@ -2671,6 +2697,9 @@ class CozoDb:
         occurrence's store replaced by its delta (other occurrences see the
         running total); clauses referencing no recursive rule seed epoch 0.
         Meet-aggregation rules merge per epoch and emit changed rows as delta.
+        A small SCC runs the same loop on the driver instead
+        (``_eval_recursive_local``); ``_last_fixpoint_path`` records which
+        loop ran and ``_last_fixpoint_epochs`` its epoch count.
         """
         # fixpoints run jobs NOW (checkpoint + count per epoch) — the
         # compiled-plan cache must not serve results that embed this work
@@ -2679,6 +2708,51 @@ class CozoDb:
         deltas: dict[str, Optional[DataFrame]] = {r: None for r in scc}
         meet = {r: any(isinstance(h, HeadAggr) for cl in clause_map[r] for h in cl.head)
                 for r in scc}
+
+        # :limit early exit (QueryLimiter eval.rs:33-61, applied db.rs:1529-1539):
+        # Datalog is monotone within a stratum, so any entry row derived from
+        # *partial* recursive totals is in the final result — when the query is
+        # unordered with a :limit, probe the entry rule against the running
+        # totals each epoch and stop the whole fixpoint at limit+offset rows.
+        # Sound only when: nothing but '?' reads this SCC (its totals stay
+        # partial), '?' touches the SCC positively (no negation — that's
+        # non-monotone), '?' has no normal aggregation (wrong over a partial
+        # set), and all of '?'s other deps are already evaluated.
+        early_stop_at = None
+        entry_dep_rules: set = set()
+        opts = getattr(prog, "opts", None)
+        if (opts is not None and opts.limit is not None and not opts.sorters
+                and opts.assert_kind is None):
+            target = opts.limit + (opts.offset or 0)
+            if not self._scc_read_outside(scc, prog, exclude={"?"}):
+                # '?' can never sit inside a recursive SCC: the grammar
+                # (reference cozoscript.pest:72,86) allows prog_entry '?'
+                # only in rule heads, never body atoms, so no rule can read
+                # it and close a cycle through it.
+                if "?" in clause_map and "?" not in scc:
+                    d, nd = set(), set()
+                    for cl in clause_map["?"]:
+                        for atom in cl.body:
+                            self._collect_deps(atom, prog, d, nd)
+                    entry_aggr = any(isinstance(h, HeadAggr)
+                                     for cl in clause_map["?"] for h in cl.head)
+                    entry_dep_rules = d & set(scc)
+                    if (entry_dep_rules and not (nd & set(scc)) and not entry_aggr
+                            and not any(meet.get(r, False) for r in entry_dep_rules)
+                            and not ((d - set(scc)) - set(stores))):
+                        early_stop_at = target
+
+        # Small SCCs run on the driver (fixpoint.local_semi_naive; the gate
+        # is in _eval_recursive_local): one collect per input instead of
+        # about four Spark jobs per epoch. Decided before the static-side
+        # materialization below, so a local run performs no checkpoint.
+        # The Spark loop below handles every SCC the gate refuses, an armed
+        # :limit early exit, and any input, total or candidate set over
+        # fixpoint.LOCAL_FIXPOINT_MAX_ROWS.
+        if early_stop_at is None and self._eval_recursive_local(
+                scc, clause_map, stores):
+            return
+        self._last_fixpoint_path = "spark"
 
         # r11 (guide §2.4): a RECURSIVE clause re-executes the full plan of
         # every stored relation / lower-stratum rule it scans on EVERY
@@ -2791,39 +2865,6 @@ class CozoDb:
             static_ck[nm] = _checkpoint(
                 src.observe(_obs, F.count(F.lit(1)).alias("n")))
             static_ck_rows[nm] = int(_obs.get["n"])
-
-        # :limit early exit (QueryLimiter eval.rs:33-61, applied db.rs:1529-1539):
-        # Datalog is monotone within a stratum, so any entry row derived from
-        # *partial* recursive totals is in the final result — when the query is
-        # unordered with a :limit, probe the entry rule against the running
-        # totals each epoch and stop the whole fixpoint at limit+offset rows.
-        # Sound only when: nothing but '?' reads this SCC (its totals stay
-        # partial), '?' touches the SCC positively (no negation — that's
-        # non-monotone), '?' has no normal aggregation (wrong over a partial
-        # set), and all of '?'s other deps are already evaluated.
-        early_stop_at = None
-        entry_dep_rules: set = set()
-        opts = getattr(prog, "opts", None)
-        if (opts is not None and opts.limit is not None and not opts.sorters
-                and opts.assert_kind is None):
-            target = opts.limit + (opts.offset or 0)
-            if not self._scc_read_outside(scc, prog, exclude={"?"}):
-                # '?' can never sit inside a recursive SCC: the grammar
-                # (reference cozoscript.pest:72,86) allows prog_entry '?'
-                # only in rule heads, never body atoms, so no rule can read
-                # it and close a cycle through it.
-                if "?" in clause_map and "?" not in scc:
-                    d, nd = set(), set()
-                    for cl in clause_map["?"]:
-                        for atom in cl.body:
-                            self._collect_deps(atom, prog, d, nd)
-                    entry_aggr = any(isinstance(h, HeadAggr)
-                                     for cl in clause_map["?"] for h in cl.head)
-                    entry_dep_rules = d & set(scc)
-                    if (entry_dep_rules and not (nd & set(scc)) and not entry_aggr
-                            and not any(meet.get(r, False) for r in entry_dep_rules)
-                            and not ((d - set(scc)) - set(stores))):
-                        early_stop_at = target
 
         def _entry_rows_reached() -> bool:
             if early_stop_at is None:
@@ -2967,9 +3008,238 @@ class CozoDb:
                 break
             if _entry_rows_reached():
                 break
+        else:
+            raise epochs_exceeded(self.MAX_FIXPOINT_EPOCHS)
         for r in scc:
             stores[r] = totals[r] if totals[r] is not None else self.spark.createDataFrame(
                 [], T.StructType([]))
+
+    def _eval_recursive_local(self, scc, clause_map, stores) -> bool:
+        """Run the fixpoint of ``scc`` on the driver and set its stores, or
+        return False, having set nothing, when the gate refuses it (see the
+        fixpoint module docstring). Every check reads only the AST, the
+        frames' schemas and the collected rows. Each input is collected
+        once, capped at ``LOCAL_FIXPOINT_MAX_ROWS + 1`` rows: a base clause
+        that is one plain atom, and every non-recursive atom of a recursive
+        clause, reads a shared projection of its relation; other base
+        clauses are evaluated by Spark and collected per rule."""
+        from pyspark.errors import AnalysisException
+
+        from cozo_spark.datalog.fixpoint import (
+            LOCAL_FIXPOINT_MAX_ROWS as cap, LocalClause, LocalOverflow,
+            local_semi_naive)
+        from cozo_spark.plans.local import local_frame
+
+        def plain(a) -> bool:
+            if isinstance(a, NamedRelApply):
+                args = [x for x in a.pairs.values() if x is not None]
+            elif isinstance(a, (RuleApply, RelApply)):
+                args = a.args
+            else:
+                return False
+            return (getattr(a, "validity", None) is None
+                    and all(isinstance(x, (Var, Const)) for x in args))
+
+        def recursive(a) -> bool:
+            return isinstance(a, RuleApply) and a.name in scc
+
+        for r in scc:
+            cls = clause_map[r]
+            if (len({len(cl.head) for cl in cls}) != 1
+                    or not all(isinstance(h, HeadVar)
+                               for cl in cls for h in cl.head)):
+                return False
+            for cl in cls:
+                if (any(recursive(a) for a in cl.body)
+                        and not all(plain(a) for a in cl.body)):
+                    return False
+
+        tr = self._translator(stores)
+        frames: dict = {}   # input key -> frame to collect
+
+        def shared_input(a, need: set):
+            """(input key, clause variables) of a non-recursive atom: its
+            frame with the variables renamed by first appearance and
+            projected to those in ``need``, so atoms reading the same
+            columns share one collect."""
+            canon: dict = {}
+
+            def rename(x):
+                if isinstance(x, Var) and x.name != "_":
+                    return Var(canon.setdefault(x.name, f"_l{len(canon)}"))
+                return x
+
+            if isinstance(a, NamedRelApply):
+                ca = NamedRelApply(a.name, {
+                    c: rename(Var(c) if x is None else x)
+                    for c, x in a.pairs.items()})
+                frame = tr._named_frame(ca)
+            else:
+                ca = type(a)(a.name, [rename(x) for x in a.args])
+                frame = tr._positional_frame(ca)
+            sel = tuple(c for v, c in canon.items() if v in need)
+            key = (repr(ca), sel)
+            if key not in frames:
+                frames[key] = (frame.select(*sel) if sel else frame.select(
+                    F.lit(1).alias("__exists__")).limit(1))
+            back = {c: v for v, c in canon.items()}
+            return key, tuple(back[c] for c in sel)
+
+        # frames and types first (analysis only, no job), then the collects
+        types: dict = {}       # rule -> column types
+        spark_bases: dict = {}  # rule -> frame of its other base clauses
+        local_bases: list = []  # (rule, input key, clause vars, head)
+        plans: list = []       # (rule, clause, [RuleApply | (key, vars)])
+        try:
+            for r in sorted(scc):
+                other = []
+                for cl in clause_map[r]:
+                    head = tuple(h.name for h in cl.head)
+                    if any(recursive(a) for a in cl.body):
+                        atoms = []
+                        for i, a in enumerate(cl.body):
+                            if recursive(a):
+                                atoms.append(a)
+                                continue
+                            need = set(head)
+                            for j, b in enumerate(cl.body):
+                                if j != i:
+                                    need |= _atom_ref_vars(b)
+                            atoms.append(shared_input(a, need))
+                        plans.append((r, cl, atoms))
+                    elif len(cl.body) == 1 and plain(cl.body[0]):
+                        key, vs = shared_input(cl.body[0], set(head))
+                        if not set(head) <= set(vs):
+                            return False
+                        local_bases.append((r, key, vs, head))
+                    else:
+                        other.append(cl)
+                if other:
+                    spark_bases[r] = self._eval_clauses_once(r, other, stores)
+                    types[r] = [f.dataType
+                                for f in spark_bases[r].schema.fields]
+        except (QueryError, AnalysisException):
+            return False
+
+        def col_types(key, vs) -> dict:
+            schema = frames[key].schema
+            return {v: schema[c].dataType for v, c in zip(vs, key[1])}
+
+        if not all(_local_type(f.dataType) for df in frames.values()
+                   for f in df.schema.fields if f.name != "__exists__"):
+            return False
+        for r, key, vs, head in local_bases:
+            ct = col_types(key, vs)
+            ht = [ct[h] for h in head]
+            if types.setdefault(r, ht) != ht:
+                return False
+        if not all(_local_type(t) for ts in types.values() for t in ts):
+            return False
+
+        # recursive clauses, to a fixpoint of known types: a rule without
+        # base clauses takes its column types from the first clause whose
+        # recursive atoms all have them; a rule that never does never gets
+        # rows (its store stays None, as in the Spark loop)
+        def typed(plan) -> bool:
+            return all(not isinstance(x, RuleApply) or x.name in types
+                       for x in plan[2])
+
+        clauses: dict = {r: [] for r in scc}
+        pending = plans
+        while any(typed(p) for p in pending):
+            ready = [p for p in pending if typed(p)]
+            pending = [p for p in pending if not typed(p)]
+            for r, cl, atoms in ready:
+                got = self._local_clause(cl, atoms, types, col_types)
+                if got is None or types.setdefault(r, got[1]) != got[1]:
+                    return False
+                clauses[r].append(got[0])
+
+        def collect(df) -> Optional[set]:
+            # one partition, so the capped take is one job (a take over n
+            # partitions runs a job on the first, then more on the rest)
+            got = df.coalesce(1).limit(cap + 1).collect()
+            return None if len(got) > cap else {tuple(x) for x in got}
+
+        inputs: dict = {}
+        for i, (key, df) in enumerate(frames.items()):
+            got = collect(df)
+            if got is None:
+                return False
+            inputs[key] = (got if key[1] else {()} if got else set(), i)
+        base: dict = {r: None for r in scc}
+        for r, df in spark_bases.items():
+            base[r] = collect(df)
+            if base[r] is None:
+                return False
+        for r, key, vs, head in local_bases:
+            pos = [vs.index(h) for h in head]
+            rows = {tuple(t[p] for p in pos) for t in inputs[key][0]}
+            base[r] = rows if base[r] is None else base[r] | rows
+        clauses = {r: [LocalClause(head, rec, tuple(
+                       (vs, *inputs[key]) for key, vs in static))
+                       for head, rec, static in cls]
+                   for r, cls in clauses.items()}
+        self._last_fixpoint_path = "local"
+        try:
+            totals, epochs = local_semi_naive(
+                base, clauses, self.MAX_FIXPOINT_EPOCHS, cap)
+        except LocalOverflow:
+            return False
+        self._last_fixpoint_epochs = epochs
+        for r in scc:
+            if totals[r] is None:
+                stores[r] = local_frame(self.spark, [], T.StructType([]))
+                continue
+            schema = T.StructType([T.StructField(f"_c{i}", t, True)
+                                   for i, t in enumerate(types[r])])
+            stores[r] = local_frame(self.spark, list(totals[r]), schema)
+        return True
+
+    @staticmethod
+    def _local_clause(cl, atoms, types, col_types):
+        """``((head, RecAtoms, [(input key, vars)]), head column types)``
+        for a recursive clause; None unless each variable binds columns of
+        one type, each constant compared on the driver has its column's
+        Python type and every head variable is bound."""
+        from cozo_spark.datalog.fixpoint import RecAtom
+
+        var_type: dict = {}
+
+        def bind(v, t) -> bool:
+            return var_type.setdefault(v, t) == t
+
+        rec, static = [], []
+        for a in atoms:
+            if not isinstance(a, RuleApply):
+                if not all(bind(v, t) for v, t in col_types(*a).items()):
+                    return None
+                static.append(a)
+                continue
+            ts = types[a.name]
+            if len(a.args) > len(ts):
+                return None
+            names, cols, consts, eqs = [], [], [], []
+            for pos, arg in enumerate(a.args):
+                if isinstance(arg, Const):
+                    if not _local_const(arg.value, ts[pos]):
+                        return None
+                    consts.append((pos, arg.value))
+                elif arg.name != "_":
+                    if not bind(arg.name, ts[pos]):
+                        return None
+                    if arg.name in names:
+                        eqs.append((pos, cols[names.index(arg.name)]))
+                    else:
+                        names.append(arg.name)
+                        cols.append(pos)
+            rec.append(RecAtom(a.name, tuple(names), tuple(cols),
+                               tuple(consts), tuple(eqs)))
+        head = tuple(h.name for h in cl.head)
+        if not all(h in var_type for h in head):
+            return None
+        # every type here came from a checked input column or rule column
+        return (head, tuple(rec), tuple(static)), [var_type[h] for h in head]
 
     def _meet_merge(self, head, total: Optional[DataFrame], cand: DataFrame,
                     n_total: int = 0):

@@ -19,7 +19,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
     """``createDataFrame`` for small driver-side row lists, preferring a
-    JVM LocalRelation. ``schema`` may be a StructType or a DDL string."""
+    JVM LocalRelation. ``schema`` may be a StructType or a DDL string.
+    An empty list becomes an empty LocalRelation directly (Arrow turns an
+    empty pandas frame into a python-RDD leaf too)."""
+    if not rows and not isinstance(schema, (list, tuple)):
+        try:
+            if not hasattr(schema, "fields"):
+                schema = spark.createDataFrame([], schema).schema
+            jss = spark._jsparkSession
+            return DataFrame(jss.createDataFrame(
+                spark._jvm.java.util.ArrayList(),
+                jss.parseDataType(schema.json())), spark)
+        except Exception:
+            pass
     if rows and not _has_nan(rows):
         try:
             import pandas as pd

@@ -383,13 +383,19 @@ def test_fuzz_aggregation_mixes_vs_duckdb(spark, seed):
                 _close(a, b) for a, b in zip(gr, wr)), (cozo, gr, wr)
 
 
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
 @pytest.mark.parametrize("seed", [11, 22, 33])
-def test_fuzz_recursion_vs_duckdb(spark, seed):
+def test_fuzz_recursion_vs_duckdb(spark, seed, cap, monkeypatch):
     """Differential fuzz of the semi-naive fixpoint (incl. the magic-set
     seeded path and meet-min recursion) against DuckDB recursive CTEs on
-    random graphs — the engine paths the scan/join fuzz can't reach."""
+    random graphs — the engine paths the scan/join fuzz can't reach. Each
+    seed runs at the default driver-side fixpoint cap and at cap 0, which
+    sends every recursion to the Spark loop."""
+    import cozo_spark.datalog.fixpoint as FP
     from cozo_spark.datalog.engine import CozoDb
 
+    if cap is not None:
+        monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", cap)
     rnd = random.Random(seed)
     db = CozoDb(spark)
     con = duckdb.connect()

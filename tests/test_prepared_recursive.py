@@ -196,9 +196,16 @@ def test_param_in_recursive_clause_still_correct(spark):
             _literal(db, s, {"start": sd, "cap": cap})
 
 
-def test_prepared_limit_with_recursion(spark):
+def test_prepared_limit_with_recursion(spark, monkeypatch):
     """`:limit $n` + recursion: the per-call parse carries the bound
     limit, so the fixpoint early-exit sees the real value."""
+    import cozo_spark.datalog.fixpoint as FP
+
+    # pinned to the Spark loop, which the early exit always takes: _edges
+    # holds every edge twice under a declared key, and the Spark loop keeps
+    # such duplicates where the driver-side loop (the literal run without
+    # :limit) returns a set
+    monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", 0)
     db = _db(spark)
     s = REACH + "\n:limit $n"
     for sd, n in ((1, 3), (1, 7), (42, 2)):
@@ -358,11 +365,17 @@ def test_template_invalidated_on_mutation(spark):
         "template bind served stale pre-mutation stores"
 
 
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
 @pytest.mark.parametrize("seed", range(12))
-def test_fuzz_recursive_prepared(spark, seed):
+def test_fuzz_recursive_prepared(spark, seed, cap, monkeypatch):
     """Differential fuzz over recursive shapes with params in every
     bindable spot: entry seed, support-rule filters, recursive-clause
-    conditions, entry-side filters, prepared :limit."""
+    conditions, entry-side filters, prepared :limit. Each seed runs at the
+    default driver-side fixpoint cap and at cap 0 (the Spark loop)."""
+    import cozo_spark.datalog.fixpoint as FP
+
+    if cap is not None:
+        monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", cap)
     db = _db(spark)
     rnd = random.Random(1000 + seed)
     params = {}

@@ -229,14 +229,18 @@ def test_plan_memo_rotating_cache_generation(spark):
     assert _rows(p1, "id_a", "id_b") == _rows(p3, "id_a", "id_b")
 
 
-def test_recursive_static_ck_prunes_wide_columns(spark):
+def test_recursive_static_ck_prunes_wide_columns(spark, monkeypatch):
     # a recursive clause reading a 2-ary prefix of a wide relation must
     # not change results when the unused wide column is pruned from the
     # once-per-fixpoint materialization. keys=["src","dst"] is what arms
     # the pruning: with default keys (= all columns) every column is a key
     # column and nothing can be dropped.
     import cozo_spark.datalog.engine as E
+    import cozo_spark.datalog.fixpoint as FX
     from cozo_spark.datalog.engine import CozoDb
+
+    # pinned to the Spark loop: a graph this small runs on the driver
+    monkeypatch.setattr(FX, "LOCAL_FIXPOINT_MAX_ROWS", 0)
 
     db = CozoDb(spark)
     edges = spark.createDataFrame(
@@ -444,7 +448,7 @@ def test_label_propagation_early_exit(spark):
     assert len(calls) <= 6
 
 
-def test_epoch0_reuses_static_checkpoint(spark):
+def test_epoch0_reuses_static_checkpoint(spark, monkeypatch):
     # r11 session 8: when the base clause is a pure projection of an
     # already-materialized static input (the canonical TC shape with
     # TRUSTED keys eliding the set-semantics dedup), epoch 0 must reuse
@@ -456,6 +460,8 @@ def test_epoch0_reuses_static_checkpoint(spark):
     import cozo_spark.datalog.fixpoint as FX
     from cozo_spark.datalog.engine import CozoDb
 
+    # pinned to the Spark loop: a graph this small runs on the driver
+    monkeypatch.setattr(FX, "LOCAL_FIXPOINT_MAX_ROWS", 0)
     edges = [(i, i + 1) for i in range(9)] + [(2, 20), (20, 21), (30, 31)]
     edf = spark.createDataFrame(edges, "src long, dst long")
     calls = [0]

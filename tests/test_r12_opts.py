@@ -110,12 +110,17 @@ def test_magic_restricted_set_recorded_on_prog():
     assert not rec_conds
 
 
-def test_unrestricted_recursion_still_materializes_static_side(spark):
+def test_unrestricted_recursion_still_materializes_static_side(spark,
+                                                               monkeypatch):
     """The r11 static-side checkpoint must keep firing for recursions the
     magic rewrite does NOT bound (full closure reads every edge every
     epoch otherwise — the r11 win this gate must not regress)."""
     import cozo_spark.datalog.engine as E
+    import cozo_spark.datalog.fixpoint as FP
     from cozo_spark.datalog.engine import CozoDb
+
+    # pinned to the Spark loop: a graph this small runs on the driver
+    monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", 0)
 
     db = CozoDb(spark)
     chain = spark.range(60).select(
