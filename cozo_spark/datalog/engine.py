@@ -45,6 +45,7 @@ from cozo_spark.datalog.translate import (
 )
 from cozo_spark.datalog.fixpoint import _checkpoint, epochs_exceeded
 from cozo_spark.fixed_rules import get_fixed_rule
+from cozo_spark.plans.local import local_frame
 from cozo_spark.functions.aggregates import AGGREGATIONS
 
 import itertools as _itertools
@@ -404,9 +405,8 @@ def _hoist_entry(dprog: Program):
     entry rule (see "prepared statements" in CozoDb). Returns
     (rules, head, body, cols, residuals, computed, pinned):
 
-    - ``rules``: dprog.rules, or a hoisted copy when support rules carry
-      params (_hoist_support_params rewrites in place, and the caller's
-      template fallback needs the parse untouched);
+    - ``rules``: dprog.rules, rewritten in place by _hoist_support_params
+      when support rules carry params;
     - ``body``: the entry body with every param atom rewritten or removed;
     - ``cols``: the variables the raw body stream must carry (the head's
       non-computed inputs, then the residuals' other vars);
@@ -414,9 +414,7 @@ def _hoist_entry(dprog: Program):
       (var, expr, explode) columns; ``pinned``: fresh vars of column
       bindings, each filtered to ONE value by raw Column equality.
 
-    None = not hoistable (the caller prepares a template instead)."""
-    import copy
-
+    None = not hoistable (the caller runs the ordinary path)."""
     from cozo_spark.datalog.translate import (_atom_output_vars,
                                               flatten_conjunction)
 
@@ -441,7 +439,7 @@ def _hoist_entry(dprog: Program):
                for h in head):
             return None
         if any(isinstance(r, FixedApply) for r in dprog.rules.values()):
-            return None  # fixed-rule support: prepared as a template
+            return None  # fixed-rule support: left to the ordinary path
         group_names = [h.name for h in head if isinstance(h, HeadVar)]
         if len(set(group_names)) != len(group_names):
             return None
@@ -454,10 +452,9 @@ def _hoist_entry(dprog: Program):
            for rname, rule in rules.items()):
         # r8 (VERDICT r7 #5): params in NON-recursive support rules are
         # hoisted to their application sites, where the entry hoist
-        # below takes over (the caller routes recursion to the template,
-        # so the migration runs on a DAG). Ineligible shapes refuse the
-        # skeleton.
-        rules = copy.deepcopy(rules)
+        # below takes over (the caller refuses recursion first, so the
+        # migration runs on a DAG). Ineligible shapes refuse the
+        # skeleton; nothing reads the partly rewritten parse after that.
         if not _hoist_support_params(rules):
             return None
     body = flatten_conjunction(rules["?"][0].body)
@@ -1338,7 +1335,7 @@ class CozoDb:
 
     # -- per-relation plan validity ---------------------------------------------
     #
-    # A cached plan, skeleton or template depends only on the relations its
+    # A cached plan or skeleton depends only on the relations its
     # translation READ. Translation reaches the registry through exactly four
     # methods — _resolve_relation, _resolve_keys, _resolve_trusted_keys and
     # _search — which note each name into the calling thread's active
@@ -1466,52 +1463,48 @@ class CozoDb:
     # plan's literals cannot be swapped after the fact. The reference
     # re-parses a parametrized script on every call (runtime/db.rs
     # run_script params); here it is parsed once with params DEFERRED (Param
-    # AST nodes) and compiled once, into one of two forms:
+    # AST nodes) and compiled once into a hoisted SKELETON, for
+    # non-recursive programs with a single-clause entry rule. _hoist_entry
+    # lifts every param out of the entry body (support rules first migrate
+    # theirs to the entry, _hoist_support_params): a whole condition
+    # becomes a residual predicate, a column binding becomes a fresh
+    # "pinned" var plus an equality residual, a unification becomes a
+    # bind-time column or a filter. The param-free remainder compiles once
+    # into the body's RAW match stream — a multiset with one column per
+    # variable, one translation per disjunct, unioned (~1000 py4j
+    # round-trips). A bind adds the computed columns, filters by the
+    # residuals, and then either aggregates with group and aggregation
+    # Columns built at compile time or projects the head and restores set
+    # semantics (a few dozen py4j calls). Catalyst re-optimizes the bound
+    # plan per action, so the literal equality still reaches the parquet
+    # scan as a pushed filter.
     #
-    # 1. The hoisted SKELETON, for non-recursive programs with a
-    #    single-clause entry rule. _hoist_entry lifts every param out of the
-    #    entry body (support rules first migrate theirs to the entry,
-    #    _hoist_support_params): a whole condition becomes a residual
-    #    predicate, a column binding becomes a fresh "pinned" var plus an
-    #    equality residual, a unification becomes a bind-time column or a
-    #    filter. The param-free remainder compiles once into the body's RAW
-    #    match stream — a multiset with one column per variable, one
-    #    translation per disjunct, unioned (~1000 py4j round-trips). A bind
-    #    adds the computed columns, filters by the residuals, and then either
-    #    aggregates with group and aggregation Columns built at compile time
-    #    or projects the head and restores set semantics (a few dozen py4j
-    #    calls). Catalyst re-optimizes the bound plan per action, so the
-    #    literal equality still reaches the parquet scan as a pushed filter.
+    # Hoisting is SOUND because the residuals are pure row predicates over
+    # the body's bindings: they commute with joins, anti-joins and
+    # deterministic unification on the multiset stream, and the aggregation
+    # or the set-semantics distinct comes after them, exactly where the
+    # unprepared evaluation applies it. Params under negation, disjunction
+    # or search, in aggregation arguments, or nested in an argument
+    # expression are not hoisted.
     #
-    #    Hoisting is SOUND because the residuals are pure row predicates over
-    #    the body's bindings: they commute with joins, anti-joins and
-    #    deterministic unification on the multiset stream, and the
-    #    aggregation or the set-semantics distinct comes after them, exactly
-    #    where the unprepared evaluation applies it. Params under negation,
-    #    disjunction or search, in aggregation arguments, or nested in an
-    #    argument expression are not hoisted.
+    # Key-aware binding: the set-semantics distinct is a shuffle and a Spark
+    # job per call. It is skipped when a unique key of the body stream
+    # (ClauseTranslator.last_ukeys; single-disjunct bodies only — a union of
+    # disjuncts carries no key) lies within the head plus the pinned vars,
+    # each filtered to ONE value by raw Column equality — the key-FD elision
+    # the unprepared path applies to `{col: <const>}`. A user-written
+    # `x == $p` never pins (Cozo's `==` equates 115 and 115.0, which are
+    # distinct keys).
     #
-    #    Key-aware binding: the set-semantics distinct is a shuffle and a
-    #    Spark job per call. It is skipped when a unique key of the body
-    #    stream (ClauseTranslator.last_ukeys; single-disjunct bodies only —
-    #    a union of disjuncts carries no key) lies within the head plus the
-    #    pinned vars, each filtered to ONE value by raw Column equality — the
-    #    key-FD elision the unprepared path applies to `{col: <const>}`. A
-    #    user-written `x == $p` never pins (Cozo's `==` equates 115 and
-    #    115.0, which are distinct keys).
+    # Every other $param script — recursion-reaching or unhoistable — caches
+    # an "ineligible" marker entry under the same LRU (key ("ineligible",
+    # skeleton key)), so later calls skip the build attempt and run the
+    # ordinary parse -> magic rewrite -> translate -> evaluate path, where
+    # the per-value plan cache serves repeats of lazily evaluated programs.
+    # A build that fails to EVALUATE (_SKEL_RETRY) caches nothing, since
+    # the relation state may change.
     #
-    # 2. The TEMPLATE (_build_recursive_template), for recursion-reaching
-    #    programs and every shape the skeleton cannot hoist: it caches the
-    #    translation of each param-free clause or clause prefix, and a bind
-    #    evaluates the per-call parse with those stores injected, so
-    #    magic-set seeds stay intact.
-    #
-    # A script neither form accepts caches an "ineligible" marker entry under
-    # the same LRU (key ("ineligible", skeleton key)), so later calls skip
-    # the build attempt; a build that fails to EVALUATE (_SKEL_RETRY) caches
-    # nothing, since the relation state may change.
-    #
-    # Validity: skeletons, templates and per-value plans are each stamped
+    # Validity: skeletons and per-value plans are each stamped
     # with only the relations their translation read (see
     # _recording_reads), so a write to an unrelated relation leaves them
     # hittable and sweeps only the entries that read the written relation.
@@ -1568,17 +1561,15 @@ class CozoDb:
         if (isinstance(res, DataFrame) and not self._had_eager_eval
                 and self._unchanged_since(pre, reads)):
             # same-value repeats then hit the exact per-value cache first
-            # (template binds run the fixpoint eagerly — never cached, so
-            # a hit can't hide executed work; same policy as run_script_df,
-            # including the mid-evaluation mutation guard)
+            # (same policy as run_script_df, including the eager-evaluation
+            # and mid-evaluation mutation guards)
             self._plan_cache_put(key, res, reads)
         return res
 
     def _build_skeleton(self, script: str, params: dict):
-        """Compile a $param-ized script once: a hoisted skeleton or a
-        template entry (cached and returned), None when neither applies,
-        or _SKEL_RETRY when evaluation failed for a state-dependent
-        reason."""
+        """Compile a $param-ized script once into a hoisted skeleton
+        (cached and returned), None when it does not apply, or _SKEL_RETRY
+        when evaluation failed for a state-dependent reason."""
         try:
             dprog = parse_script(script, params, defer_params=True)
         except Exception:
@@ -1589,16 +1580,13 @@ class CozoDb:
         # ANY recursion would make the skeleton's evaluation eager (the
         # fixpoint runs at build time) and therefore uncacheable — and a
         # hoisted param would strip the magic seed, computing a full
-        # UNRESTRICTED closure. r10 (VERDICT r9 #2): the TEMPLATE keeps the
-        # seed intact (binding substitutes the param per call, so the
-        # restriction fires on the cached lazy base plans) and caches every
-        # param-free clause translation. It is also the last resort for
-        # every shape _hoist_entry refuses: a full evaluation of the
-        # per-call parse, sound for ANY shape by construction.
+        # UNRESTRICTED closure. Such scripts, and every shape _hoist_entry
+        # refuses, take the ordinary path: the per-call parse carries the
+        # value, so the magic rewrite seeds the recursion with it.
         hoisted = (None if _reaches_recursion(dprog.rules)
                    else _hoist_entry(dprog))
         if hoisted is None:
-            return self._build_recursive_template(script, params, dprog)
+            return None
         rules, head, body, cols, residuals, computed, pinned = hoisted
         # evaluate the support rules once (lazy plans), then translate the
         # entry body raw with the rewrites _eval_scc gives a non-recursive
@@ -1621,7 +1609,7 @@ class CozoDb:
         if self._had_eager_eval:
             # a support rule ran Spark jobs (eager fixed rule): the skeleton
             # cannot be cached, so every call would rebuild it
-            return self._build_recursive_template(script, params, dprog)
+            return None
         raw = parts[0]
         for p in parts[1:]:
             raw = raw.unionByName(p)
@@ -1641,261 +1629,6 @@ class CozoDb:
             ent.update(group=group, aggs=aggs, head=tuple(names),
                        display=headers if names != headers else None)
         return self._skel_cache_put(script, params, ent)
-
-    def _build_recursive_template(self, script: str, params: dict,
-                                  dprog: Program):
-        """Prepared statements for RECURSION-REACHING programs (r10,
-        VERDICT r9 #2). The seeded fixpoint is different WORK per seed
-        value — magic restriction (magic.rs:55-642 parity, magic.py) is
-        exactly the point — so unlike the flat skeleton there is no single
-        lazy plan to cache. What IS value-independent is the translation
-        of every param-free clause over stored relations: support rules,
-        and crucially the recursive rule's BASE clauses — the ones the
-        magic rewrite restricts to the seed.
-
-        Build: pre-translate those clauses into cached LAZY stores
-        (never executed here — no unrestricted closure is computed).
-        Bind: in the per-call parse (parse-time param substitution, the
-        reference's own semantics — parse/mod.rs:306-353), swap each
-        cached clause's body for a positional reference to its store,
-        drop fully-covered support rules, and run the ordinary
-        magic-restricted evaluation with the stores injected. The magic
-        seed condition then lands as a filter ON TOP of the cached lazy
-        base plan and Catalyst pushes it into the scan — goal-directed
-        scale behavior is identical to the unprepared path, and results
-        are bit-identical by construction (same parse, same adornment,
-        same stratified fixpoint; only redundant re-translation of
-        value-independent clauses is skipped)."""
-        rules = dprog.rules
-        deps: dict = {}
-        for name, rule in rules.items():
-            if isinstance(rule, list):
-                d: set = set()
-                for cl in rule:
-                    d |= _body_rule_refs(cl.body)
-            elif isinstance(rule, FixedApply):
-                d = {inp.name for inp in rule.inputs if inp.kind == "rule"}
-            else:
-                d = set()
-            deps[name] = d & set(rules)
-        cyclic: set = set()
-        sccs = _condensation(set(rules), deps)
-        for scc in sccs:
-            if len(scc) > 1 or next(iter(scc)) in deps[next(iter(scc))]:
-                cyclic |= scc
-
-        dropped: dict = {}   # rule name -> (store DF, unique positions)
-        drops: list = []
-        repls: list = []
-        slot_seq = [0]
-
-        def _resolver():
-            stores = {n: s for n, (s, _u) in dropped.items()}
-            return self._make_resolver(stores)
-
-        def _unique_resolver(n):
-            ent = dropped.get(n)
-            return ent[1] if ent is not None else None
-
-        def _tr():
-            return ClauseTranslator(
-                self.spark, _resolver(),
-                key_resolver=self._resolve_keys,
-                search_resolver=self._search,
-                rule_unique_resolver=_unique_resolver,
-                trusted_key_resolver=self._resolve_trusted_keys)
-
-        def _atom_ok(a) -> bool:
-            if isinstance(a, (Conj, Disj, SearchApply)):
-                return False
-            if atom_has_param(a) or _atom_nondet(a):
-                return False
-            if isinstance(a, Negation):
-                inner = a.atom
-                if not isinstance(inner,
-                                  (RelApply, NamedRelApply, RuleApply)):
-                    return False
-                if isinstance(inner, RuleApply) \
-                        and inner.name not in dropped:
-                    return False
-            elif isinstance(a, RuleApply) and a.name not in dropped:
-                return False  # per-call rule store: not cacheable
-            return True
-
-        def _clause_ok(cl) -> bool:
-            if any(not isinstance(h, HeadVar) for h in cl.head):
-                return False  # agg heads need the raw multiset stream
-            return all(_atom_ok(a) for a in cl.body)
-
-        def _try_prefix_split(name, j, cl):
-            """PREFIX template (r11): a param-carrying clause whose body
-            starts with clean (param-free, deterministic, resolvable)
-            atoms caches THAT PREFIX as a store; the bind keeps the
-            per-call suffix. Sound for set-semantic rules: the store
-            projects to exactly the prefix vars the suffix or head
-            consume, and collapsing bindings that differ only in unused
-            vars cannot change the rule's (distinct) result. Agg heads
-            are refused — they need the raw multiset stream the
-            projection would collapse. Measured WHY (BASELINE r11): the
-            agg-argument and multi-clause families bound at ~1x because
-            every clause carried the param — this recovers the param-free
-            scan/join work those clauses start with."""
-            if any(not isinstance(h, HeadVar) for h in cl.head):
-                return None
-            k = 0
-            while k < len(cl.body) and _atom_ok(cl.body[k]):
-                k += 1
-            if k == 0 or k >= len(cl.body):
-                return None  # nothing clean, or _clause_ok handled it
-            prefix = cl.body[:k]
-            if not any(isinstance(a, (RelApply, NamedRelApply, RuleApply))
-                       for a in prefix):
-                return None  # no driving relation: store would be invalid
-            later = set()
-            for a in cl.body[k:]:
-                later |= _atom_ref_vars(a)
-            later |= {h.name for h in cl.head}
-            pre = set()
-            for a in prefix:
-                pre |= _atom_ref_vars(a)
-            needed = sorted((pre & later) - {"_"})
-            if not needed:
-                return None
-            slot = f"__tpl{slot_seq[0]}_"
-            slot_seq[0] += 1
-            if slot in rules:
-                return None  # checked BEFORE the (py4j-heavy) translate
-            try:
-                tr = _tr()
-                store = self._canon(tr.translate(
-                    [HeadVar(v) for v in needed], list(prefix)))
-            except QueryError:
-                return None  # e.g. an existential negation var leaked in
-            return {"name": name, "idx": j, "clause": cl, "slot": slot,
-                    "store": store, "arity": len(needed),
-                    "unique": bool(tr.last_unique),
-                    "prefix_len": k, "slot_args": tuple(needed)}
-
-        self._had_eager_eval = False
-        try:
-            # dependencies-first: a support rule dropped earlier lets its
-            # consumers qualify (their RuleApply refs resolve to cached
-            # stores). EVERY member of a multi-rule SCC is visited (sorted
-            # for determinism) — mutual recursion has base clauses in each
-            # member (r10 review: next(iter(scc)) cached only one,
-            # nondeterministically).
-            for scc in sccs:
-                for name in sorted(scc):
-                    rule = rules.get(name)
-                    if not isinstance(rule, list) or not rule:
-                        continue
-                    recursive = name in cyclic
-                    if not recursive and name != "?" \
-                            and all(_clause_ok(cl) for cl in rule):
-                        # whole support rule cacheable: drop it at bind and
-                        # serve its set-semantics store (same plan shape as
-                        # _eval_clauses_once)
-                        tr = _tr()
-                        parts, uniq = [], []
-                        for cl in rule:
-                            parts.append(self._canon(
-                                tr.translate(cl.head, cl.body)))
-                            uniq.append(tr.last_unique)
-                        if len(parts) == 1 and uniq[0]:
-                            store = parts[0]
-                        else:
-                            store = parts[0]
-                            for p in parts[1:]:
-                                store = store.unionByName(p)
-                            store = store.distinct()
-                        upos = frozenset(range(len(rule[0].head)))
-                        dropped[name] = (store, upos)
-                        drops.append({"name": name, "clauses": rule,
-                                      "store": store, "unique": upos})
-                        continue
-                    # per-clause replacement (recursive rules' base clauses,
-                    # partially-cacheable support rules, param-free entry)
-                    for j, cl in enumerate(rule):
-                        if recursive and (_body_rule_refs(cl.body) & scc):
-                            continue  # recursive clause: per-epoch deltas
-                        if not _clause_ok(cl):
-                            split = _try_prefix_split(name, j, cl)
-                            if split is not None:
-                                repls.append(split)
-                            continue
-                        tr = _tr()
-                        store = self._canon(tr.translate(cl.head, cl.body))
-                        slot = f"__tpl{slot_seq[0]}_"
-                        slot_seq[0] += 1
-                        if slot in rules:
-                            return None
-                        repls.append({"name": name, "idx": j, "clause": cl,
-                                      "slot": slot, "store": store,
-                                      "arity": len(cl.head),
-                                      "unique": bool(tr.last_unique)})
-        except QueryError:
-            return _SKEL_RETRY  # state-dependent (e.g. missing relation)
-        if self._had_eager_eval:
-            return None  # a translation ran jobs: not cacheable
-        if not drops and not repls:
-            return None  # nothing value-independent to cache
-        ent = {
-            "template": True, "drops": drops, "repls": repls,
-        }
-        return self._skel_cache_put(script, params, ent)
-
-    def _bind_recursive_template(self, ent: dict, params: dict,
-                                 parsed: Program):
-        """Bind a recursive template: verify the per-call parse still
-        matches the template structurally (param-free clauses parse
-        identically call-to-call; any mismatch falls back to the
-        unprepared path), then swap cached clauses in and evaluate."""
-        rules = parsed.rules
-        for d in ent["drops"]:
-            r = rules.get(d["name"])
-            if not isinstance(r, list) or r != d["clauses"]:
-                return None
-        for p in ent["repls"]:
-            r = rules.get(p["name"])
-            if (not isinstance(r, list) or p["idx"] >= len(r)
-                    or p["slot"] in rules):
-                return None
-            k = p.get("prefix_len")
-            if k is None:
-                if r[p["idx"]] != p["clause"]:
-                    return None
-            else:
-                # prefix repl: only the cached PREFIX must parse
-                # identically (it is param-free); the suffix differs per
-                # call by construction and is kept from the per-call parse
-                cl2 = r[p["idx"]]
-                if (cl2.head != p["clause"].head
-                        or cl2.body[:k] != p["clause"].body[:k]):
-                    return None
-        seed_stores: dict = {}
-        seed_unique: dict = {}
-        for d in ent["drops"]:
-            del rules[d["name"]]
-            seed_stores[d["name"]] = d["store"]
-            seed_unique[d["name"]] = d["unique"]
-        for p in ent["repls"]:
-            seed_stores[p["slot"]] = p["store"]
-            if p["unique"]:
-                seed_unique[p["slot"]] = frozenset(range(p["arity"]))
-            cl = rules[p["name"]][p["idx"]]
-            k = p.get("prefix_len")
-            if k is None:
-                rules[p["name"]][p["idx"]] = RuleClause(
-                    list(cl.head),
-                    [RuleApply(p["slot"], [Var(h.name) for h in cl.head])])
-            else:
-                rules[p["name"]][p["idx"]] = RuleClause(
-                    list(cl.head),
-                    [RuleApply(p["slot"],
-                               [Var(v) for v in p["slot_args"]])]
-                    + list(cl.body[k:]))
-        return self._run_program(parsed, seed_stores=seed_stores,
-                                 seed_unique=seed_unique)
 
     @staticmethod
     def _bind_residuals(df: DataFrame, ent: dict, params: dict, bound: set,
@@ -1932,8 +1665,6 @@ class CozoDb:
                        parsed: Program) -> DataFrame:
         from cozo_spark.datalog.translate import _df_typer, compile_expr
 
-        if ent.get("template"):
-            return self._bind_recursive_template(ent, params, parsed)
         df = ent["df"]
         bound = set(ent["dtypes"])
         typer = ent["dtypes"].get
@@ -1968,13 +1699,12 @@ class CozoDb:
 
     # -- program evaluation --------------------------------------------------------
 
-    def _run_program(self, prog: Program, seed_stores: Optional[dict] = None,
-                     seed_unique: Optional[dict] = None) -> Any:
+    def _run_program(self, prog: Program) -> Any:
         if not prog.rules:
             # options-only script (e.g. bare `:create rel {...}`): unit seed
             seed = self.spark.range(1).select(F.lit(1).alias("__unit__"))
             return self._output_stage(seed, prog.opts, prog)
-        stores = self._evaluate_rules(prog, seed_stores, seed_unique)
+        stores = self._evaluate_rules(prog)
         if "?" not in stores:
             raise QueryError("program has no entry rule '?'")
         headers = self._entry_headers(prog)
@@ -2009,14 +1739,8 @@ class CozoDb:
             names.append(n)
         return names
 
-    def _evaluate_rules(self, prog: Program,
-                        seed_stores: Optional[dict] = None,
-                        seed_unique: Optional[dict] = None
-                        ) -> dict[str, DataFrame]:
-        # seed_stores/seed_unique: pre-translated stores injected by the
-        # recursive-template bind (r10) — resolved before stored relations,
-        # with their set-uniqueness claims preserved for distinct elision
-        stores: dict[str, DataFrame] = dict(seed_stores) if seed_stores else {}
+    def _evaluate_rules(self, prog: Program) -> dict[str, DataFrame]:
+        stores: dict[str, DataFrame] = {}
         self._fixed_rule_run_info = {}  # fresh per program (see
         #                                 _eval_fixed_rule / NamedRows.metadata)
 
@@ -2049,8 +1773,6 @@ class CozoDb:
         # unique on their group-key (HeadVar) positions; const rules are
         # distinct-ed at evaluation; fixed-rule outputs make no claim
         self._rule_unique = {}
-        if seed_unique:
-            self._rule_unique.update(seed_unique)
         for name, rule in prog.rules.items():
             if isinstance(rule, ConstRule):
                 h = rule.head or []
@@ -2401,16 +2123,7 @@ class CozoDb:
         names = names or [f"_{i}" for i in range(width)]
         schema = self._infer_schema(rows, names)
         rows = [self._coerce_row(r, schema) for r in rows]
-        return self._local_frame(rows, schema).distinct()
-
-    def _local_frame(self, rows: list, schema: T.StructType) -> DataFrame:
-        """Small driver-side relation as a JVM LocalRelation (Arrow path).
-
-        See plans/local.py for the measured rationale (the python-RDD
-        leaf constant: ~0.35 s per scanning job)."""
-        from cozo_spark.plans.local import local_frame
-
-        return local_frame(self.spark, rows, schema)
+        return local_frame(self.spark, rows, schema).distinct()
 
     @staticmethod
     def _coerce_row(row, schema: T.StructType):
@@ -3028,7 +2741,6 @@ class CozoDb:
         from cozo_spark.datalog.fixpoint import (
             LOCAL_FIXPOINT_MAX_ROWS as cap, LocalClause, LocalOverflow,
             local_semi_naive)
-        from cozo_spark.plans.local import local_frame
 
         def plain(a) -> bool:
             if isinstance(a, NamedRelApply):

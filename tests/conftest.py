@@ -19,3 +19,36 @@ def spark():
 
     s = get_spark("cozo_spark_tests", **{"spark.sql.shuffle.partitions": "8"})
     yield s
+
+
+def spy_skeleton_builds(monkeypatch) -> list:
+    """Record the result of every ``CozoDb._build_skeleton`` attempt.
+
+    The skeleton cache is class-level and an ``("ineligible", key)`` marker
+    does not depend on any relation, so the cache starts empty: a marker an
+    earlier test left for the same script would hide the attempt."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    CozoDb._skel_cache.clear()
+    builds: list = []
+    orig = CozoDb._build_skeleton
+
+    def spy(self, script, params):
+        r = orig(self, script, params)
+        builds.append(r)
+        return r
+
+    monkeypatch.setattr(CozoDb, "_build_skeleton", spy)
+    return builds
+
+
+def assert_ineligible_once(db, builds: list, script: str, params: dict):
+    """The prepared-read contract for a $param script the skeleton refuses:
+    one build attempt over every call so far, no skeleton entry, and an
+    ``("ineligible", key)`` marker that spares later calls the attempt."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    assert builds == [None], builds
+    key = db._skel_key(script, params)
+    assert key not in CozoDb._skel_cache
+    assert CozoDb._skel_cache[("ineligible", key)]["ineligible"]

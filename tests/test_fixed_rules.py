@@ -4,6 +4,8 @@ SURVEY §5 implication (c))."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -171,6 +173,77 @@ def test_closeness(spark):
     c = {r["node"]: r["centrality"] for r in closeness_centrality(path).collect()}
     assert c[1] == pytest.approx(2 / 3)  # dists 1,2 → 2/(1+2)
     assert c[2] == pytest.approx(1.0)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _chain_edges(n):
+    return [(i, i + 1) for i in range(n)]
+
+
+def test_betweenness_truncation_warns(spark, caplog):
+    from cozo_spark.fixed_rules.graphs import betweenness_centrality_sampled
+
+    edges = spark.createDataFrame(_chain_edges(6), "src long, dst long")
+    with caplog.at_level(logging.WARNING, logger="cozo_spark.graphs"):
+        betweenness_centrality_sampled(edges, max_depth=3).collect()
+    assert any("max_depth" in r.message for r in caplog.records)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="cozo_spark.graphs"):
+        betweenness_centrality_sampled(edges, max_depth=10).collect()
+    assert not any("max_depth" in r.message for r in caplog.records)
+    # traversal completing EXACTLY at the cap is not truncation (the
+    # 7-node chain's deepest BFS level is 6): no false alarm
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="cozo_spark.graphs"):
+        exact_at_cap = betweenness_centrality_sampled(
+            edges, max_depth=6).collect()
+    assert not any("max_depth" in r.message for r in caplog.records)
+    assert sorted(map(tuple, exact_at_cap)) == sorted(
+        map(tuple, betweenness_centrality_sampled(
+            edges, max_depth=10).collect()))
+
+
+def test_centrality_auto_pivot_default(spark, monkeypatch, caplog):
+    """Above AUTO_EXACT_MAX_NODES a default call samples c*ln(n) pivots
+    and says so; the result equals an explicit sources=k call."""
+    import cozo_spark.fixed_rules.graphs as G
+
+    edges = spark.createDataFrame(
+        _chain_edges(11) + [(3, 7), (8, 2)], "src long, dst long")
+    monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 4)
+    monkeypatch.setattr(G, "_AUTO_PIVOT_C", 2.0)
+    k = G._auto_pivots(12)
+    assert 1 <= k < 12
+    with caplog.at_level(logging.WARNING, logger="cozo_spark.graphs"):
+        auto_b = _rows(G.betweenness_centrality_sampled(edges))
+        auto_c = _rows(G.closeness_centrality_dist(edges))
+    msgs = [r.message for r in caplog.records]
+    assert any("auto-sampling" in m and "Betweenness" in m for m in msgs)
+    assert any("auto-sampling" in m and "Closeness" in m for m in msgs)
+    assert auto_b == _rows(
+        G.betweenness_centrality_sampled(edges, sources=k))
+    assert auto_c == _rows(G.closeness_centrality_dist(edges, sources=k))
+
+
+def test_centrality_exact_below_threshold_unchanged(spark):
+    """Small graphs keep exact all-sources semantics under the default —
+    golden values for the 4-cycle with a tail: directed C4 (0..3) + 3->4."""
+    import cozo_spark.fixed_rules.graphs as G
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 0), (3, 4)], "src long, dst long")
+    got = {r["node"]: r["centrality"]
+           for r in G.betweenness_centrality_sampled(edges).collect()}
+    # directed cycle: each cycle node lies on the unique shortest path of
+    # every (s, t) pair routing through it; tail node 4 intermediates none
+    assert got[4] == 0.0
+    want = {r["node"]: r["centrality"]
+            for r in G.betweenness_centrality_sampled(
+                edges, sources=10).collect()}
+    assert got == want
 
 
 def test_louvain(spark):

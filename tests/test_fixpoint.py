@@ -195,6 +195,30 @@ def test_empty_and_nonempty_results_are_local_relations(spark):
         assert df.count() == n
 
 
+def test_local_frames_stay_local_without_arrow_conf(spark):
+    """``local_frame`` converts through a pyarrow.Table, which Spark turns
+    into a LocalRelation whatever the session's Arrow conf says; a NaN row
+    and a NULL row stay apart."""
+    import math
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        df = CozoDb(spark).run_script_df(
+            "?[a, b] <- [[1, to_float('NAN')], [2, null], [3, 1.5]]")
+        plan = df._jdf.queryExecution().analyzed().toString()
+        rows = sorted(tuple(r) for r in df.collect())
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert [a for a, _ in rows] == [1, 2, 3]
+    assert math.isnan(rows[0][1]) and rows[1][1] is None and rows[2][1] == 1.5
+
+
 def test_input_over_cap_runs_spark(spark, monkeypatch):
     db = _db(spark, CHAIN)
     local, ran = _run(db, REACH)

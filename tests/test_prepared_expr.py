@@ -20,7 +20,8 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import (SF_SMALL, assert_ineligible_once,
+                            spy_skeleton_builds)
 
 
 def _db(spark, tables=("customer", "orders")):
@@ -170,16 +171,13 @@ def test_support_filter_param_in_disjunction_site(spark):
             _literal(db, s, {"lo": lo, "hi": hi})
 
 
-def test_support_filter_param_under_negation_refuses(spark):
+def test_support_filter_param_under_negation_refuses(spark, monkeypatch):
     """`not f[x]` where f carries a param filter: extending f's arity
-    would leave the new column unbound under the negation — the FLAT
-    skeleton's cond-migration hoist must refuse. r11: the shape now
-    prepares via the PREFIX template instead (f's param-free scan caches;
-    the per-call filter and the negation evaluate normally), so the pin
-    is template-with-prefix-repl, not absence."""
-    from cozo_spark.datalog.engine import CozoDb
-
+    would leave the new column unbound under the negation — the
+    skeleton's cond-migration hoist must refuse, and the ordinary path
+    answers every call."""
     db = _db(spark, ("customer",))
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     f[x] := *customer{c_custkey: x, c_acctbal: w}, w > $lo
     ?[x] := *customer{c_custkey: x}, x < 20, not f[x]
@@ -187,10 +185,7 @@ def test_support_filter_param_under_negation_refuses(spark):
     for lo in (100.0, 9000.0):
         assert _rows(db.run_script_df(s, {"lo": lo})) == \
             _literal(db, s, {"lo": lo})
-    ent = CozoDb._skel_cache.get(db._skel_key(s, {"lo": 100.0}))
-    assert ent is not None and ent.get("template")
-    assert any(p.get("prefix_len") and p["name"] == "f"
-               for p in ent["repls"])
+    assert_ineligible_once(db, builds, s, {"lo": 100.0})
 
 
 def test_agg_head_with_computed_unify(spark, monkeypatch):
@@ -231,19 +226,17 @@ def test_agg_head_with_exploding_unify(spark, monkeypatch):
     assert len(builds) == 1
 
 
-def test_agg_consumer_of_cond_widened_rule_refuses(spark):
+def test_agg_consumer_of_cond_widened_rule_refuses(spark, monkeypatch):
     """ADVICE r9 high: a support rule whose filter cond migrates out gains
     alias exports — its store becomes distinct on (head + alias), so an
     AGGREGATION-head consumer would fold one row per (head, alias) pair
-    (`?[count(s)] := sup[s]` returned 50 prepared vs 5 literal). The FLAT
-    hoist must still refuse. r11: the shape prepares via the PREFIX
-    template instead — which is SOUND for agg consumers because the
-    cached store is an internal slot: sup still projects and distincts
-    to its own head per call, so the consumer sees exactly the literal
-    multiplicities (pinned by the value asserts across cutoffs)."""
+    (`?[count(s)] := sup[s]` returned 50 prepared vs 5 literal). The
+    hoist must still refuse; the ordinary path then sees exactly the
+    literal multiplicities (pinned by the value asserts across cutoffs)."""
     from cozo_spark.datalog.engine import CozoDb
 
     db = _db(spark, ("customer",))
+    builds = spy_skeleton_builds(monkeypatch)
     # entry-level aggregation consumer
     s1 = """
     sup[n] := *customer{c_nationkey: n, c_acctbal: b}, b < $c
@@ -256,13 +249,11 @@ def test_agg_consumer_of_cond_widened_rule_refuses(spark):
     ?[c] := cnt[c]
     """
     for s in (s1, s2):
+        builds.clear()
         for c in (100.0, 5000.0, 9999.0):
             assert _rows(db.run_script_df(s, {"c": c})) == \
                 _literal(db, s, {"c": c})
-        ent = CozoDb._skel_cache.get(db._skel_key(s, {"c": 100.0}))
-        assert ent is not None and ent.get("template")
-        assert any(p.get("prefix_len") and p["name"] == "sup"
-                   for p in ent["repls"])
+        assert_ineligible_once(db, builds, s, {"c": 100.0})
     # a PLAIN-head consumer of the same shape must still prepare
     s3 = """
     sup[n] := *customer{c_nationkey: n, c_acctbal: b}, b < $c
@@ -289,31 +280,26 @@ def test_still_refused_shapes_stay_correct(spark, script, params):
 
 
 @pytest.mark.parametrize("script,mkp", [
-    # recursion with the param in the BASE clause: r11 prefix template
-    # caches the base scan, the per-call filter + magic restriction land
-    # on top (previously a structural refusal)
+    # recursion with the param in the BASE clause
     ("""
      r[x] := *customer{c_custkey: x}, x < $n
      r[x] := r[y], x = y + 1, x < 5
      ?[x] := r[x]
      """, lambda i: {"n": i + 2}),
-    # param unify under negation: prefix = the scan
+    # param unify under negation
     ("?[x] := *customer{c_custkey: x}, not x = $k",
      lambda i: {"k": i + 1}),
 ])
-def test_previously_refused_shapes_now_prefix_prepare(spark, script, mkp):
-    """r11: two shapes the r10 template refused now prepare through the
-    prefix split — value-checked against literal inlining per call."""
-    from cozo_spark.datalog.engine import CozoDb
-
+def test_refused_shapes_match_literal(spark, script, mkp, monkeypatch):
+    """Two shapes the skeleton refuses, value-checked against literal
+    inlining per call."""
     db = _db(spark, ("customer",))
+    builds = spy_skeleton_builds(monkeypatch)
     for i in range(3):
         p = mkp(i)
         assert _rows(db.run_script_df(script, p)) == \
             _literal(db, script, p), p
-    ent = CozoDb._skel_cache.get(db._skel_key(script, mkp(0)))
-    assert ent is not None and ent.get("template")
-    assert any(p.get("prefix_len") for p in ent["repls"])
+    assert_ineligible_once(db, builds, script, mkp(0))
 
 
 def test_bind_is_cheaper_than_retranslation(spark):

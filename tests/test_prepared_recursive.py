@@ -1,20 +1,18 @@
-"""Prepared statements for recursion-seeding params (r10, VERDICT r9 #2).
+"""$param scripts that reach recursion, and other shapes the hoisted
+skeleton refuses.
 
-A param that seeds a recursion (`?[b] := reach[$start, b]`) previously
-refused the skeleton and re-translated per call. The recursive TEMPLATE
-(engine._build_recursive_template) caches every param-free clause
-translation — support rules and the recursive rule's BASE clauses — and
-binds by swapping them into the per-call parse, so the ordinary
-magic-set rewrite (magic.rs:55-642 parity) restricts the fixpoint to the
-bound seed on top of the cached lazy base plans.
+A param that seeds a recursion (`?[b] := reach[$start, b]`) cannot be
+hoisted: the skeleton would compute the unrestricted closure and filter
+it. Such a script makes one skeleton build attempt, caches an
+`("ineligible", key)` marker, and from then on runs the ordinary path:
+the per-call parse carries the value, so the magic-set rewrite
+(magic.rs:55-642 parity) restricts the fixpoint to the bound seed.
 
 Pinned here:
-- bit-identical results vs literal inlining across seed values;
-- cache-hit discipline: ONE template build, binds thereafter;
+- identical results vs literal inlining across seed values;
+- one build attempt, an ineligible marker, no rebuild on later calls;
 - the magic restriction actually fires on the bound program (fixpoint
   deltas stay seed-sized — no unrestricted closure);
-- support-rule drops + base-clause replacements recorded in the entry;
-- bind beats full re-translation on plan-construction time;
 - aggregation-head and meet-aggregation consumers of the recursion.
 """
 
@@ -24,11 +22,13 @@ import random
 
 import pytest
 
+from tests.conftest import assert_ineligible_once, spy_skeleton_builds
+
 
 def _edges(spark, n=400, fan=7):
     import pyspark.sql.functions as F
 
-    return spark.range(2 * n).select(
+    return spark.range(n).select(
         (F.col("id") % n).alias("fr"),
         ((F.col("id") * fan + 1) % n).alias("to"))
 
@@ -59,34 +59,18 @@ reach[a, c] := reach[a, b], *edge{fr: b, to: c}
 """
 
 
-def _spy_builds(monkeypatch):
-    from cozo_spark.datalog.engine import CozoDb
-
-    builds = []
-    orig = CozoDb._build_skeleton
-
-    def spy(self, script, params):
-        r = orig(self, script, params)
-        builds.append(r)
-        return r
-
-    monkeypatch.setattr(CozoDb, "_build_skeleton", spy)
-    return builds
-
-
 def test_recursive_seed_param_matches_literal(spark, monkeypatch):
     db = _db(spark)
-    builds = _spy_builds(monkeypatch)
+    builds = spy_skeleton_builds(monkeypatch)
     for seed in (1, 17, 123, 399):
         got = _rows(db.run_script_df(REACH, {"start": seed}))
         assert got == _literal(db, REACH, {"start": seed})
         assert got, "seeded closure should be non-empty on this graph"
-    assert len(builds) == 1, "one template build; later calls bind"
-    assert builds[0].get("template") is True
+    assert_ineligible_once(db, builds, REACH, {"start": 1})
 
 
 def test_magic_restriction_fires_on_bound_program(spark):
-    """The point of the template over a flat skeleton: the seed must
+    """The point of refusing the flat skeleton: the seed must
     restrict the fixpoint (deltas stay O(reachable-from-seed)), not
     compute the full closure and filter. Chain graph: unrestricted
     closure is ~n²/2 rows; the seeded tail is < n."""
@@ -119,45 +103,24 @@ def test_magic_restriction_fires_on_bound_program(spark):
         f"unrestricted closure leaked into the prepared path: {counts}"
 
 
-def test_template_records_drops_and_replacements(spark):
-    from cozo_spark.datalog.engine import CozoDb
-
-    db = _db(spark)
-    s = """
-    odd[x] := *edge{fr: x}, x % 2 == 1
-    r[a, b] := *edge{fr: a, to: b}, odd[a]
-    r[a, c] := r[a, b], *edge{fr: b, to: c}
-    ?[c] := r[$s, c]
-    """
-    for sd in (11, 33):
-        assert _rows(db.run_script_df(s, {"s": sd})) == \
-            _literal(db, s, {"s": sd})
-    ent = CozoDb._skel_cache.get(db._skel_key(s, {"s": 11}))
-    assert ent is not None and ent.get("template")
-    assert [d["name"] for d in ent["drops"]] == ["odd"], \
-        "param-free support rule should be dropped into a cached store"
-    assert [(p["name"], p["idx"]) for p in ent["repls"]] == [("r", 0)], \
-        "the recursive rule's base clause should be replaced"
-
-
 def test_agg_head_entry_over_recursion(spark, monkeypatch):
     db = _db(spark)
-    builds = _spy_builds(monkeypatch)
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     reach[a, b] := *edge{fr: a, to: b}
     reach[a, c] := reach[a, b], *edge{fr: b, to: c}
     ?[count(b)] := reach[$start, b]
     """
-    for seed in (3, 77):
+    for seed in (3, 77, 250):
         assert _rows(db.run_script_df(s, {"start": seed})) == \
             _literal(db, s, {"start": seed})
-    assert len(builds) == 1 and builds[0].get("template")
+    assert_ineligible_once(db, builds, s, {"start": 3})
 
 
 def test_meet_aggregation_recursion_with_seed_param(spark):
     """shortest-hops shape: min() meet inside the recursion, param seed.
-    The meet rule's clauses have HeadAggr heads (never replaced); support
-    translation caching must not disturb the per-epoch meet merge."""
+    The meet rule's clauses have HeadAggr heads; the per-epoch meet merge
+    must see the seeded base."""
     db = _db(spark)
     s = """
     sp[a, b, min(d)] := *edge{fr: a, to: b}, d = 1
@@ -196,16 +159,9 @@ def test_param_in_recursive_clause_still_correct(spark):
             _literal(db, s, {"start": sd, "cap": cap})
 
 
-def test_prepared_limit_with_recursion(spark, monkeypatch):
+def test_prepared_limit_with_recursion(spark):
     """`:limit $n` + recursion: the per-call parse carries the bound
     limit, so the fixpoint early-exit sees the real value."""
-    import cozo_spark.datalog.fixpoint as FP
-
-    # pinned to the Spark loop, which the early exit always takes: _edges
-    # holds every edge twice under a declared key, and the Spark loop keeps
-    # such duplicates where the driver-side loop (the literal run without
-    # :limit) returns a set
-    monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", 0)
     db = _db(spark)
     s = REACH + "\n:limit $n"
     for sd, n in ((1, 3), (1, 7), (42, 2)):
@@ -214,56 +170,11 @@ def test_prepared_limit_with_recursion(spark, monkeypatch):
             n, len(_literal(db, REACH, {"start": sd})))
 
 
-def test_bind_beats_retranslation(spark, monkeypatch):
-    """Plan-construction savings, measured DETERMINISTICALLY: a template
-    bind must run strictly fewer ClauseTranslator.translate calls than
-    the literal re-translation (the dropped support rules and replaced
-    base clauses are served from cached stores; the wrapper clause's
-    trivial re-projection doesn't count extra — it replaces the original
-    clause's translation 1:1, and dropped rules vanish entirely).
-    Wall-clock comparison is deliberately avoided: both paths run the
-    same seeded fixpoint jobs, and host noise (±2 s on this box) dwarfs
-    the ~0.1-0.3 s plan-construction delta."""
-    from cozo_spark.datalog.translate import ClauseTranslator
-
+def test_multi_clause_entry_with_recursion_is_ineligible(spark, monkeypatch):
+    """A disjunctive (multi-clause) entry over a recursion refuses the
+    skeleton and evaluates in full per call."""
     db = _db(spark)
-    s = """
-    e1[a, b] := *edge{fr: a, to: b}, b % 2 == 0
-    e2[a, b] := *edge{fr: a, to: b}, b % 2 == 1
-    good[a, b] := e1[a, b]
-    good[a, b] := e2[a, b], a % 3 == 0
-    reach[a, b] := good[a, b]
-    reach[a, c] := reach[a, b], good[b, c]
-    ?[b] := reach[$start, b]
-    """
-    db.run_script_df(s, {"start": 1})  # build once (template cached)
-
-    counts = []
-    orig = ClauseTranslator.translate
-
-    def counting(self, *a, **k):
-        counts.append(1)
-        return orig(self, *a, **k)
-
-    monkeypatch.setattr(ClauseTranslator, "translate", counting)
-    db.run_script_df(s, {"start": 2})
-    bind_n = len(counts)
-    counts.clear()
-    db.run_script_df(s.replace("$start", "2"))
-    full_n = len(counts)
-    assert 0 < bind_n < full_n, \
-        f"bind ran {bind_n} translations vs {full_n} for re-translation"
-    # the 4 support-rule clauses (e1, e2, good x2) vanish entirely; the
-    # replaced base clause trades its translation for the wrapper's
-    # trivial one — so at least 4 fewer translations per call
-    assert full_n - bind_n >= 4, (bind_n, full_n)
-
-
-def test_multi_clause_entry_with_recursion_prepares(spark, monkeypatch):
-    """A disjunctive (multi-clause) entry refuses the FLAT skeleton but
-    the recursive template handles it: bind is a full evaluation."""
-    db = _db(spark)
-    builds = _spy_builds(monkeypatch)
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     reach[a, b] := *edge{fr: a, to: b}
     reach[a, c] := reach[a, b], *edge{fr: b, to: c}
@@ -273,15 +184,14 @@ def test_multi_clause_entry_with_recursion_prepares(spark, monkeypatch):
     for sd, hi in ((1, 100), (17, 0), (1, 399)):
         assert _rows(db.run_script_df(s, {"start": sd, "hi": hi})) == \
             _literal(db, s, {"start": sd, "hi": hi})
-    assert len(builds) == 1 and builds[0].get("template")
+    assert_ineligible_once(db, builds, s, {"start": 1, "hi": 100})
 
 
-def test_mutual_recursion_caches_every_member_base(spark):
-    """r10 review: a multi-rule SCC must cache base clauses of EVERY
-    member (next(iter(scc)) only did one, nondeterministically)."""
-    from cozo_spark.datalog.engine import CozoDb
-
+def test_mutual_recursion_seed_param_matches_literal(spark, monkeypatch):
+    """A seed param into a multi-rule SCC: the magic rewrite restricts
+    every member."""
     db = _db(spark)
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     even[a, b] := *edge{fr: a, to: b}
     even[a, c] := odd[a, b], *edge{fr: b, to: c}
@@ -289,22 +199,19 @@ def test_mutual_recursion_caches_every_member_base(spark):
     odd[a, c] := even[a, b], *edge{fr: b, to: c}, c % 2 == 1
     ?[b] := even[$start, b]
     """
-    for sd in (4, 40):
+    for sd in (4, 40, 141):
         assert _rows(db.run_script_df(s, {"start": sd})) == \
             _literal(db, s, {"start": sd})
-    ent = CozoDb._skel_cache.get(db._skel_key(s, {"start": 4}))
-    assert ent is not None and ent.get("template")
-    cached = {(p["name"], p["idx"]) for p in ent["repls"]}
-    assert ("even", 0) in cached and ("odd", 0) in cached, cached
+    assert_ineligible_once(db, builds, s, {"start": 4})
 
 
-def test_last_resort_template_negation_param(spark, monkeypatch):
-    """r10: shapes the flat skeleton refuses (a param-carrying rule
-    applied under negation) fall back to the TEMPLATE — param-free
-    support rules still cache, the bind is a full (lazy) evaluation, and
-    non-recursive binds land in the per-value plan cache too."""
+def test_negated_param_rule_is_ineligible(spark, monkeypatch):
+    """Shapes the flat skeleton refuses (a param-carrying rule applied
+    under negation) run the ordinary path after one build attempt; a
+    non-recursive one evaluates lazily, so its plan lands in the per-value
+    plan cache."""
     db = _db(spark)
-    builds = _spy_builds(monkeypatch)
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     sup[x] := *edge{fr: x, to: y}, y > 0
     bad[x] := *edge{fr: x, to: $t}
@@ -313,15 +220,14 @@ def test_last_resort_template_negation_param(spark, monkeypatch):
     for t, hi in ((1, 40), (7, 25), (1, 10)):
         assert _rows(db.run_script_df(s, {"t": t, "hi": hi})) == \
             _literal(db, s, {"t": t, "hi": hi})
-    assert len(builds) == 1 and builds[0].get("template")
-    assert [d["name"] for d in builds[0]["drops"]] == ["sup"]
+    assert_ineligible_once(db, builds, s, {"t": 1, "hi": 40})
 
 
-def test_last_resort_template_agg_argument_param(spark, monkeypatch):
-    """A param as an AGGREGATION argument (collect(x, $n)) refused every
-    flat path — the template evaluates it per bind."""
+def test_agg_argument_param_is_ineligible(spark, monkeypatch):
+    """A param as an AGGREGATION argument (collect(x, $n)) is not
+    hoisted; each call evaluates in full."""
     db = _db(spark)
-    builds = _spy_builds(monkeypatch)
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     sup[x] := *edge{fr: x}
     ?[collect(x, $n)] := sup[x], x < 10
@@ -329,12 +235,12 @@ def test_last_resort_template_agg_argument_param(spark, monkeypatch):
     for n in (3, 5, 1):
         got = db.run_script_df(s, {"n": n}).collect()
         assert len(got) == 1 and len(got[0][0]) == n
-    assert len(builds) == 1 and builds[0].get("template")
+    assert_ineligible_once(db, builds, s, {"n": 3})
 
 
-def test_last_resort_template_multiclause_nonrecursive(spark, monkeypatch):
+def test_multiclause_nonrecursive_entry_is_ineligible(spark, monkeypatch):
     db = _db(spark)
-    builds = _spy_builds(monkeypatch)
+    builds = spy_skeleton_builds(monkeypatch)
     s = """
     sup[x, y] := *edge{fr: x, to: y}
     ?[x] := sup[x, y], y = $a
@@ -343,15 +249,13 @@ def test_last_resort_template_multiclause_nonrecursive(spark, monkeypatch):
     for a, b in ((3, 9), (1, 1), (250, 7)):
         assert _rows(db.run_script_df(s, {"a": a, "b": b})) == \
             _literal(db, s, {"a": a, "b": b})
-    assert len(builds) == 1 and builds[0].get("template")
+    assert_ineligible_once(db, builds, s, {"a": 3, "b": 9})
 
 
-def test_template_invalidated_on_mutation(spark):
-    """The template's cached clause stores embed the relations' frames at
-    build time — any mutation must invalidate the entry (snapshot check)
-    so binds never serve pre-mutation data."""
-    from cozo_spark.datalog.engine import CozoDb
-
+def test_recursive_param_sees_mutation(spark):
+    """A write to the relation a recursion reads must reach the next
+    call with the same or another value: the ineligible marker holds no
+    plan, and the per-value plan cache is stamped by the relation."""
     db = _db(spark)
     db.run_script("?[fr, to] <- [[9000, 9001]] :create medge {fr => to}")
     s = """
@@ -362,7 +266,7 @@ def test_template_invalidated_on_mutation(spark):
     assert _rows(db.run_script_df(s, {"s": 9000})) == [(9001,)]
     db.run_script("?[fr, to] <- [[9001, 9002]] :put medge {fr => to}")
     assert _rows(db.run_script_df(s, {"s": 9000})) == [(9001,), (9002,)], \
-        "template bind served stale pre-mutation stores"
+        "a prepared call served a stale pre-mutation plan"
 
 
 @pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
@@ -410,8 +314,57 @@ def test_fuzz_recursive_prepared(spark, seed, cap, monkeypatch):
     got = _rows(db.run_script_df(script, dict(params)))
     want = _literal(db, script, params)
     assert got == want, f"seed={seed}\n{script}\n{params}"
-    # second value set exercises the cached template
+    # second value set runs behind the cached ineligible marker
     params2 = {k: v + 1 for k, v in params.items()}
     got2 = _rows(db.run_script_df(script, dict(params2)))
     assert got2 == _literal(db, script, params2), \
         f"seed={seed} (2nd values)\n{script}\n{params2}"
+
+
+def _edge_db(spark, edges):
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = CozoDb(spark)
+    db.register_dataframe(
+        "edge", spark.createDataFrame(edges, "src long, dst long"))
+    return db
+
+
+RECURSIVE_PARAM_ARG = """
+reach[x, y] := *edge[x, y]
+reach[x, y] := reach[x, z], *edge[z, y]
+?[y] := reach[$s, y]
+"""
+
+RECURSIVE_PARAM_COND = """
+reach[x, y] := *edge[x, y]
+reach[x, y] := reach[x, z], *edge[z, y]
+?[y] := reach[x, y], x = $s
+"""
+
+
+@pytest.mark.parametrize("script", [RECURSIVE_PARAM_ARG,
+                                    RECURSIVE_PARAM_COND])
+def test_recursive_param_not_prepared(spark, script, monkeypatch):
+    """Params touching a recursive rule must NOT build a flat plan
+    skeleton (it would compute the unrestricted full closure per call):
+    one build attempt leaves the ineligible marker, and results still
+    match the literal-inlined run."""
+    db = _edge_db(spark, [(1, 2), (2, 3), (3, 4), (10, 11)])
+    builds = spy_skeleton_builds(monkeypatch)
+    got = _rows(db.run_script_df(script, params={"s": 1}))
+    want = _rows(db.run_script_df(script.replace("$s", "1")))
+    assert got == want == [(2,), (3,), (4,)]
+    assert_ineligible_once(db, builds, script, {"s": 1})
+
+
+def test_recursive_param_neg_cached_structurally(spark):
+    """The ineligible marker is structural: later calls skip a fresh
+    skeleton-build attempt."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = _edge_db(spark, [(1, 2), (2, 3)])
+    _rows(db.run_script_df(RECURSIVE_PARAM_ARG, params={"s": 1}))
+    skey = db._skel_key(RECURSIVE_PARAM_ARG, {"s": 1})
+    assert CozoDb._skel_cache.get(skey) is None
+    assert CozoDb._skel_cache.get(("ineligible", skey), {}).get("ineligible")

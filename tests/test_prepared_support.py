@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import assert_ineligible_once, spy_skeleton_builds
+
 
 def _db(spark, tables=("customer", "orders")):
     from cozo_spark.datalog.engine import CozoDb
@@ -119,16 +121,12 @@ def test_support_param_feeding_agg_entry(spark, monkeypatch):
     assert len(builds) == 1
 
 
-def test_negated_application_refused_but_correct(spark):
+def test_negated_application_refused_but_correct(spark, monkeypatch):
     """A param rule applied under `not` cannot be hoisted (the appended
-    column would be unbound) — the FLAT skeleton still refuses. r11: the
-    PREFIX template prepares the shape instead — `mine` (param in its
-    only atom) stays uncached and re-translates per call, while the
-    entry's param-free prefix (*customer scan + filter) caches; the
-    negation then anti-joins the per-call `mine` on top."""
-    from cozo_spark.datalog.engine import CozoDb
-
+    column would be unbound) — the skeleton refuses, and the ordinary
+    path answers every call."""
     db = _db(spark)
+    builds = spy_skeleton_builds(monkeypatch)
     script = """
     mine[k] := *orders{o_custkey: k, o_orderkey: $o}
     ?[k] := *customer{c_custkey: k}, k < 10, not mine[k]
@@ -136,11 +134,7 @@ def test_negated_application_refused_but_correct(spark):
     for v in (1, 5):
         assert _rows(db.run_script_df(script, {"o": v})) == \
             _literal(db, script, {"o": v})
-    ent = CozoDb._skel_cache.get(db._skel_key(script, {"o": 1}))
-    assert ent is not None and ent.get("template")
-    pr = [p for p in ent["repls"] if p.get("prefix_len")]
-    assert pr and pr[0]["name"] == "?" and pr[0]["prefix_len"] == 2
-    assert not any(p["name"] == "mine" for p in ent["repls"])
+    assert_ineligible_once(db, builds, script, {"o": 1})
 
 
 def test_recursive_support_param_still_refused(spark):

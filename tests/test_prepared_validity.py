@@ -1,4 +1,4 @@
-"""Per-relation validity of cached plans, skeletons and templates.
+"""Per-relation validity of cached plans and skeletons.
 
 An entry is stamped with the state of exactly the relations its
 translation read (CozoDb._read_stamps). A write to any OTHER relation must
@@ -162,6 +162,56 @@ def test_txn_shadow_never_sweeps_base_entries(db, calls):
     assert _rows(db, READ, {"k": 1}) == [(99,)]
     assert calls["build"] == 2
 
+
+
+def test_txn_shadow_sweep_spares_base_aggregation_skeleton(db, spark):
+    """The write-path cache sweep is scoped to the RECORDING db's
+    identity. A MultiTransaction's shadow db mirrors the base's relation
+    names exactly — its mutations must not wipe the base db's skeleton
+    entries (they are still valid for the base until commit), and base
+    mutations must still sweep the base's own."""
+    import pyspark.sql.functions as F
+
+    from cozo_spark.datalog.engine import CozoDb
+
+    n = 200
+    db.register_dataframe("edge", spark.range(n).select(
+        (F.col("id") % n).alias("fr"),
+        ((F.col("id") * 7 + 1) % n).alias("to")), keys=["fr", "to"])
+    s = "?[a, sum(s)] := *edge{fr: a, to: b}, s = b * $w"
+    db.run_script_df(s, {"w": 2})
+    key = db._skel_key(s, {"w": 2})
+    assert key in CozoDb._skel_cache
+    db.run_script("?[k, v] <- [[1, 1]] :create txn_t {k => v}")
+    db.run_script_df(s, {"w": 3})
+    assert key in CozoDb._skel_cache
+    with db.multi_transaction() as tx:
+        tx.run_script("?[k, v] <- [[2, 2]] :put txn_t {k => v}")
+        # the SHADOW's mutation swept only shadow-scoped entries
+        assert key in CozoDb._skel_cache, \
+            "txn shadow mutation wiped the base db's skeleton cache"
+        # and the base entry still binds correctly mid-txn
+        assert _rows(db, s, {"w": 5}) == _literal(db, s, {"w": 5})
+    # post-commit the registry frames changed -> base sweep on next write
+    db.run_script("?[k, v] <- [[3, 3]] :put txn_t {k => v}")
+    assert _rows(db, s, {"w": 7}) == _literal(db, s, {"w": 7})
+
+
+def test_unhoisted_param_script_sees_mutation(db):
+    """A support-rule unification with a param is not hoisted; the
+    ordinary path's per-value plans must still follow writes to the
+    relation they read, for the cached value and for a new one."""
+    db.run_script(
+        "?[fr, to] <- [[1, 2], [2, 4], [3, 6]] :create sed {fr => to}")
+    s = ("ss[a, s] := *sed{fr: a, to: b}, s = b + $d\n"
+         "?[a, s] := ss[a, s]")
+    assert _rows(db, s, {"d": 10}) == \
+        [(1, 12), (2, 14), (3, 16)]
+    db.run_script("?[fr, to] <- [[5, 8]] :put sed {fr => to}")
+    assert _rows(db, s, {"d": 10}) == \
+        [(1, 12), (2, 14), (3, 16), (5, 18)]
+    assert _rows(db, s, {"d": 100}) == \
+        [(1, 102), (2, 104), (3, 106), (5, 108)]
 
 def test_caches_evict_least_recently_used(db, monkeypatch):
     from cozo_spark.datalog.engine import CozoDb

@@ -109,7 +109,7 @@ def test_skeleton_eval_failure_not_permanently_cached(spark):
     # aggregation heads became ELIGIBLE in r7 (raw-stream skeleton,
     # tests/test_prepared_agg.py) — the skeleton caches positively now;
     # structural ineligibility caching is pinned by
-    # tests/test_advice_r7.py::test_recursive_param_neg_cached_structurally
+    # tests/test_prepared_recursive.py::test_recursive_param_neg_cached_structurally
     agg = "?[count(n)] := *latecomer{k: n}, n < $hi"
     assert [tuple(r) for r in db.run_script_df(agg, {"hi": 10}).collect()] \
         == [(2,)]
