@@ -219,6 +219,24 @@ def test_local_frames_stay_local_without_arrow_conf(spark):
     assert math.isnan(rows[0][1]) and rows[1][1] is None and rows[2][1] == 1.5
 
 
+def test_local_frame_keeps_nested_nan_apart_from_null(spark):
+    """NaN and NULL stay apart inside an array column too, and an empty
+    array stays distinct from a NULL array."""
+    import math
+
+    from cozo_spark.plans.local import local_frame
+
+    df = local_frame(spark, [(1, [1.0, float("nan"), None]), (2, None),
+                             (3, [])], "k long, v array<double>")
+    plan = df._jdf.queryExecution().analyzed().toString()
+    rows = sorted(tuple(r) for r in df.collect())
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert [k for k, _ in rows] == [1, 2, 3]
+    v = rows[0][1]
+    assert v[0] == 1.0 and math.isnan(v[1]) and v[2] is None
+    assert rows[1][1] is None and rows[2][1] == []
+
+
 def test_input_over_cap_runs_spark(spark, monkeypatch):
     db = _db(spark, CHAIN)
     local, ran = _run(db, REACH)

@@ -135,6 +135,34 @@ def test_ineligible_shapes_still_correct(spark, script, mkp, monkeypatch):
     assert_ineligible_once(db, builds, script, mkp(0))
 
 
+def test_ineligible_script_repeats_value_from_plan_cache(spark, monkeypatch):
+    """A $param script the skeleton refuses still gets the per-value plan
+    cache: repeating a value translates no clause, a new value translates
+    again, and neither makes another skeleton attempt."""
+    from cozo_spark.datalog.translate import ClauseTranslator
+
+    db = _with_edges(spark, _db(spark, ()))
+    builds = spy_skeleton_builds(monkeypatch)
+    script = "?[b] := *edge{fr: $s, to: b}\n?[b] := *edge{fr: b, to: $s}"
+    translations = []
+    orig = ClauseTranslator.translate
+
+    def counting(self, *a, **k):
+        translations.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(ClauseTranslator, "translate", counting)
+    first = _rows(db.run_script_df(script, {"s": 1}))
+    assert translations
+    translations.clear()
+    assert _rows(db.run_script_df(script, {"s": 1})) == first
+    assert translations == []
+    assert _rows(db.run_script_df(script, {"s": 4})) == \
+        _literal(db, script, {"s": 4})
+    assert translations
+    assert_ineligible_once(db, builds, script, {"s": 1})
+
+
 def test_fresh_var_collision_with_user_name(spark):
     """A body already using a variable literally named __prep0_ must not
     unify with the hoisted param binding."""

@@ -205,6 +205,26 @@ def test_mutual_recursion_seed_param_matches_literal(spark, monkeypatch):
     assert_ineligible_once(db, builds, s, {"start": 4})
 
 
+def test_param_free_support_rule_feeding_recursion(spark, monkeypatch):
+    """A param-free support rule restricts the recursion's base clause and
+    the seed param binds the recursion: odd seeds reach nodes, even seeds
+    reach none, and every seed matches the literal run."""
+    db = _db(spark)
+    builds = spy_skeleton_builds(monkeypatch)
+    s = """
+    odd[x] := *edge{fr: x}, x % 2 == 1
+    r[a, b] := *edge{fr: a, to: b}, odd[a]
+    r[a, c] := r[a, b], *edge{fr: b, to: c}
+    ?[c] := r[$s, c]
+    """
+    got = {}
+    for sd in (11, 33, 12):
+        got[sd] = _rows(db.run_script_df(s, {"s": sd}))
+        assert got[sd] == _literal(db, s, {"s": sd}), sd
+    assert got[11] and got[33] and got[12] == []
+    assert_ineligible_once(db, builds, s, {"s": 11})
+
+
 def test_negated_param_rule_is_ineligible(spark, monkeypatch):
     """Shapes the flat skeleton refuses (a param-carrying rule applied
     under negation) run the ordinary path after one build attempt; a
