@@ -20,7 +20,6 @@ real deployment, plain DataFrame swaps here (same semantics, SURVEY §7).
 
 from __future__ import annotations
 
-import datetime as _datetime
 import logging as _logging
 import threading as _threading
 from dataclasses import dataclass, field
@@ -43,7 +42,8 @@ from cozo_spark.datalog.translate import (
     ClauseTranslator, QueryError, expand_disjunctions, head_aggregates,
     unique_names,
 )
-from cozo_spark.datalog.fixpoint import _checkpoint, epochs_exceeded
+from cozo_spark.datalog.fixpoint import (_checkpoint, _local_const, _local_type,
+    collect_capped, epochs_exceeded)
 from cozo_spark.fixed_rules import get_fixed_rule
 from cozo_spark.plans.local import local_frame
 from cozo_spark.functions.aggregates import AGGREGATIONS
@@ -706,31 +706,6 @@ def _pure_projection_rows(df: DataFrame, static_ck: dict,
         return None
     except Exception:
         return None
-
-
-def _local_py_type(t: T.DataType) -> Optional[type]:
-    """The Python type of a collected value of a column the driver-side
-    fixpoint compares exactly as Spark does (and that a constant compared
-    with it must have); None for the rest. Floats stay on Spark, which
-    normalises NaN and -0.0 in joins and distinct."""
-    if isinstance(t, T.BooleanType):
-        return bool
-    if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int
-    if isinstance(t, T.DateType):
-        return _datetime.date
-    if t == T.StringType():   # binary collation only
-        return str
-    return None
-
-
-def _local_type(t: T.DataType) -> bool:
-    return _local_py_type(t) is not None
-
-
-def _local_const(v, t: T.DataType) -> bool:
-    py = _local_py_type(t)
-    return py is not None and type(v) is py
 
 
 def _col_type(s: Optional[str]) -> T.DataType:
@@ -2867,23 +2842,18 @@ class CozoDb:
                     return False
                 clauses[r].append(got[0])
 
-        def collect(df) -> Optional[set]:
-            # one partition, so the capped take is one job (a take over n
-            # partitions runs a job on the first, then more on the rest)
-            got = df.coalesce(1).limit(cap + 1).collect()
-            return None if len(got) > cap else {tuple(x) for x in got}
-
         inputs: dict = {}
         for i, (key, df) in enumerate(frames.items()):
-            got = collect(df)
+            got = collect_capped(df, cap)
             if got is None:
                 return False
-            inputs[key] = (got if key[1] else {()} if got else set(), i)
+            inputs[key] = (set(got) if key[1] else {()} if got else set(), i)
         base: dict = {r: None for r in scc}
         for r, df in spark_bases.items():
-            base[r] = collect(df)
-            if base[r] is None:
+            got = collect_capped(df, cap)
+            if got is None:
                 return False
+            base[r] = set(got)
         for r, key, vs, head in local_bases:
             pos = [vs.index(h) for h in head]
             rows = {tuple(t[p] for p in pos) for t in inputs[key][0]}

@@ -16,41 +16,56 @@ Spark realization:
 
 Meet-aggregations (min/max/... inside recursion, eval.rs:342-380) are the
 ``shortest_hops``-style loop in fixed_rules.graphs: per epoch
-groupBy(keys).agg(meet) then keep only improved rows as the delta.
+groupBy(keys).agg(meet) then keep only improved rows as the delta. The
+Datalog engine's meet heads always run that loop on Spark;
+``graphs.shortest_hops`` itself runs it on the driver when its edges are
+small (``local_shortest_hops`` below).
 
-Driver-local realization (``local_semi_naive``): a Spark epoch costs about
-four jobs whatever its size, so a recursion over a few hundred edges spends
-all its time at the job floor. ``CozoDb._eval_recursive`` runs the same
-semi-naive loop in Python, as the reference does in-process, when the SCC
-passes a gate decided from the AST, the frames' schemas and the collected
-rows alone:
-- every head is plain variables (no meet aggregation), and every
-  recursive-clause body atom is a positive rule/relation application with
-  no validity spec whose arguments are variables, ``_`` or constants;
-- every join or head column is integral, string, boolean or date, a
-  variable binds columns of one type, and a constant compared on the driver
-  has its column's Python type (float, binary and nested columns stay on
-  Spark, which normalises NaN and -0.0 in joins and distinct);
-- no collected input, running total or epoch candidate set holds more
-  than ``LOCAL_FIXPOINT_MAX_ROWS`` rows (an overflow mid-loop discards the
-  local state and the Spark loop starts over);
-- the query has no armed ``:limit`` early exit.
-Each input is collected once (base clauses evaluated by Spark, and the
-non-recursive atoms of recursive clauses projected to the variables they
-share), joins are hash joins on the shared variables in which null never
-matches, and sets deduplicate null like the Spark path's null-safe anti
-join. The totals go back to Spark as ``LocalRelation`` leaves.
+Driver-local realization: a Spark epoch costs about four jobs whatever its
+size, so a recursion over a few hundred edges spends all its time at the job
+floor. Two loops run in Python instead, as the reference runs them
+in-process, each collecting its inputs once (``collect_capped``) and
+handing its result back to Spark as a ``LocalRelation`` leaf:
+
+- ``local_semi_naive``: set recursion. ``CozoDb._eval_recursive`` takes it
+  when the SCC passes a gate decided from the AST, the frames' schemas and
+  the collected rows alone:
+  - every head is plain variables (no meet aggregation), and every
+    recursive-clause body atom is a positive rule/relation application with
+    no validity spec whose arguments are variables, ``_`` or constants;
+  - every join or head column is integral, string, boolean or date
+    (``_local_py_type``), a variable binds columns of one type, and a
+    constant compared on the driver has its column's Python type (float,
+    binary and nested columns stay on Spark, which normalises NaN and -0.0
+    in joins and distinct);
+  - the query has no armed ``:limit`` early exit.
+  Joins are hash joins on the shared variables in which null never matches,
+  and sets deduplicate null like the Spark path's null-safe anti join. Each
+  input is collected once: base clauses evaluated by Spark, and the
+  non-recursive atoms of recursive clauses projected to the variables they
+  share.
+- ``local_shortest_hops``: the ``min`` hop-count recursion of
+  ``graphs.shortest_hops``, when both endpoint columns have the same
+  ``_local_py_type``. Its epochs, delta (the pairs whose best count
+  improved) and ``max_hops`` truncation are the Spark loop's; null never
+  joins, and null-keyed pairs are kept as the Spark ``groupBy`` keeps them.
+
+In both, no collected input, running total or epoch candidate set may hold
+more than ``LOCAL_FIXPOINT_MAX_ROWS`` rows: an overflow mid-loop discards
+the local state and the Spark loop starts over.
 """
 
 from __future__ import annotations
 
+import datetime
 import itertools
 import os
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Frontier row-count below which we hint broadcast for the delta join.
 _BROADCAST_FRONTIER = 2_000_000
@@ -326,6 +341,39 @@ class LocalOverflow(Exception):
     caller discards the local state and runs the Spark loop from scratch."""
 
 
+def _local_py_type(t: T.DataType) -> Optional[type]:
+    """The Python type of a collected value of a column the driver-side
+    fixpoints compare exactly as Spark does (and that a constant compared
+    with it must have); None for the rest. Floats stay on Spark, which
+    normalises NaN and -0.0 in joins and distinct."""
+    if isinstance(t, T.BooleanType):
+        return bool
+    if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return int
+    if isinstance(t, T.DateType):
+        return datetime.date
+    if t == T.StringType():   # binary collation only
+        return str
+    return None
+
+
+def _local_type(t: T.DataType) -> bool:
+    return _local_py_type(t) is not None
+
+
+def _local_const(v, t: T.DataType) -> bool:
+    py = _local_py_type(t)
+    return py is not None and type(v) is py
+
+
+def collect_capped(df: DataFrame, cap: int) -> Optional[list]:
+    """The rows of ``df`` as tuples, or None when it has more than ``cap``.
+    One partition first, so the capped take is one job (a take over n
+    partitions runs a job on the first, then more on the rest)."""
+    got = df.coalesce(1).limit(cap + 1).collect()
+    return None if len(got) > cap else [tuple(x) for x in got]
+
+
 def epochs_exceeded(max_epochs: int) -> Exception:
     """The error both fixpoint loops raise when ``max_epochs`` run out while
     a delta is still non-empty (returning the partial totals would silently
@@ -468,3 +516,44 @@ def _hash_join(lvars, lrows, right, keep, cap, index_cache):
                 raise LocalOverflow(lvars)
     return (tuple(lvars[i] for i in lout) + tuple(rvars[i] for i in rout),
             out)
+
+
+def local_shortest_hops(rows: list, max_hops: int, cap: int):
+    """The meet (``min``) loop of ``graphs.shortest_hops`` on the collected
+    ``(src, dst)`` edge rows. Epochs run as in the Spark loop: the delta is
+    the pairs whose best hop count improved, the loop stops after the first
+    epoch without an improvement or after ``max_hops`` epochs, and with no
+    epoch at all the answer is the raw edge rows, duplicates included. Null
+    never joins, but a pair with a null end is kept. Returns ``(rows of
+    (src, dst, hops), epochs)``; raises LocalOverflow when the edges, the
+    best pairs or one epoch's candidate rows pass ``cap``."""
+    if len(rows) > cap:
+        raise LocalOverflow("edges")
+    if max_hops <= 0:
+        return [(s, d, 1) for s, d in rows], 0
+    adj: dict = {}
+    for s, d in rows:
+        if s is not None:
+            adj.setdefault(s, set()).add(d)
+    best = {(s, d): 1 for s, d in rows}
+    delta = best
+    for epoch in range(max_hops):
+        cand: dict = {}
+        n = 0
+        for (s, d), h in delta.items():
+            nxt = adj.get(d)   # no null key: null never joins
+            if not nxt:
+                continue
+            n += len(nxt)
+            if n > cap:
+                raise LocalOverflow("candidates")
+            for t in nxt:
+                if cand.get((s, t), h + 2) > h + 1:
+                    cand[(s, t)] = h + 1
+        delta = {k: h for k, h in cand.items() if best.get(k, h + 1) > h}
+        best.update(delta)
+        if len(best) > cap:
+            raise LocalOverflow("best")
+        if not delta:
+            break
+    return [(s, d, h) for (s, d), h in best.items()], epoch + 1

@@ -23,9 +23,12 @@ import math
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from cozo_spark.datalog import fixpoint as _fp
 from cozo_spark.datalog.fixpoint import (_OBS_SEQ, _checkpoint,
     _checkpoint_count, _checkpoint_count_bytes, _checkpoint_sum, semi_naive)
+from cozo_spark.plans.local import local_frame
 
 _log = logging.getLogger("cozo_spark.graphs")
 
@@ -156,8 +159,19 @@ def shortest_hops(edges: DataFrame, max_hops: int = 64) -> DataFrame:
     (MeetAggrStore, temp_store.rs:99-215): per epoch the delta is only the
     pairs whose best-known distance improved, so the loop converges in
     diameter(G) epochs and each epoch's join input is the improved set only.
+
+    Small graphs run the loop on the driver (``_shortest_hops_local``): one
+    capped collect of the edges instead of about one Spark job per epoch.
+    Float ids, and edges, best pairs or epoch candidates over
+    ``fixpoint.LOCAL_FIXPOINT_MAX_ROWS``, take the Spark loop below. Both
+    give the same rows and schema, and record ``loop`` ("local" or "spark")
+    and ``epochs`` in the run info.
     """
-    e = _checkpoint(_norm_edges(edges).select(
+    e = _norm_edges(edges)
+    local = _shortest_hops_local(e, max_hops)
+    if local is not None:
+        return local
+    e = _checkpoint(e.select(
         F.col("src").alias("esrc"), F.col("dst").alias("edst")))
     # a plain projection over the checkpointed edge blocks — a second
     # eager checkpoint here was a whole extra driver action buying nothing
@@ -165,7 +179,8 @@ def shortest_hops(edges: DataFrame, max_hops: int = 64) -> DataFrame:
     best = e.select(F.col("esrc").alias("src"), F.col("edst").alias("dst"),
                     F.lit(1).cast("long").alias("hops"))
     delta = best
-    for _ in range(max_hops):
+    epochs = 0
+    for epochs in range(1, max_hops + 1):
         cand = (
             delta.join(e, delta.dst == e.esrc)
             .select("src", F.col("edst").alias("dst"), (F.col("hops") + 1).alias("hops"))
@@ -198,7 +213,32 @@ def shortest_hops(edges: DataFrame, max_hops: int = 64) -> DataFrame:
         best = merged.drop("_imp")
         if n_imp == 0:
             break
+    _record_run_info(rule="ShortestPathHops", loop="spark", epochs=epochs)
     return best
+
+
+def _shortest_hops_local(e: DataFrame, max_hops: int) -> DataFrame | None:
+    """``shortest_hops`` on the driver (``fixpoint.local_shortest_hops``)
+    as a LocalRelation, or None when both endpoint columns do not have the
+    same driver-side Python type or a set overflows the cap (the local
+    state is then discarded)."""
+    src, dst = e.schema.fields
+    py = _fp._local_py_type(src.dataType)
+    if py is None or py is not _fp._local_py_type(dst.dataType):
+        return None
+    cap = _fp.LOCAL_FIXPOINT_MAX_ROWS
+    rows = _fp.collect_capped(e, cap)
+    if rows is None:
+        return None
+    try:
+        best, epochs = _fp.local_shortest_hops(rows, max_hops, cap)
+    except _fp.LocalOverflow:
+        return None
+    _record_run_info(rule="ShortestPathHops", loop="local", epochs=epochs)
+    # the Spark loop's schema: its min() makes hops nullable once an epoch ran
+    schema = T.StructType([src, dst,
+                           T.StructField("hops", T.LongType(), max_hops > 0)])
+    return local_frame(e.sparkSession, best, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,26 @@ def spark():
     yield s
 
 
+def spy_hops_loop(monkeypatch, cap) -> list:
+    """Set ``LOCAL_FIXPOINT_MAX_ROWS`` to ``cap`` (None keeps the default)
+    and record every ``graphs._checkpoint_sum`` call: ``shortest_hops``
+    makes one per Spark-loop epoch and none on the driver-side loop."""
+    import cozo_spark.datalog.fixpoint as FP
+    from cozo_spark.fixed_rules import graphs
+
+    if cap is not None:
+        monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", cap)
+    calls: list = []
+    orig = graphs._checkpoint_sum
+
+    def spy(*a):
+        calls.append(a[1])
+        return orig(*a)
+
+    monkeypatch.setattr(graphs, "_checkpoint_sum", spy)
+    return calls
+
+
 def spy_skeleton_builds(monkeypatch) -> list:
     """Record the result of every ``CozoDb._build_skeleton`` attempt.
 

@@ -34,11 +34,15 @@ def test_degree_centrality(g):
     assert d == {1: (2, 2, 0), 2: (2, 1, 1), 3: (2, 1, 1), 4: (3, 1, 2), 5: (1, 0, 1)}
 
 
-def test_shortest_hops(g):
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
+def test_shortest_hops(g, monkeypatch, cap):
     from cozo_spark.fixed_rules.graphs import shortest_hops
+    from tests.conftest import spy_hops_loop
 
+    epochs = spy_hops_loop(monkeypatch, cap)
     hops = {(r["src"], r["dst"]): r["hops"] for r in shortest_hops(g).collect()}
     assert hops[(1, 4)] == 2 and hops[(1, 5)] == 3 and hops[(1, 2)] == 1
+    assert (not epochs) == (cap is None)
 
 
 def test_shortest_path_costs(g, spark):

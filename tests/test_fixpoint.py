@@ -315,3 +315,123 @@ def test_unordered_limit_runs_spark(spark):
     """)
     assert ran == "spark"
     assert len(got) == 3 and {b for (b,) in got} <= set(range(1, 11))
+
+
+# shortest_hops: the driver-side meet loop against the Spark loop
+HOP_CASES = {
+    "nulls_dups_cycles": (NULL_EDGES + [(0, 1), (3, 4), (4, 4)],
+                          "src long, dst long"),
+    "int_src_long_dst": (CHAIN, "src int, dst long"),
+    "string_ids": ([(f"n{a}", f"n{b}") for a, b in CHAIN]
+                   + [("n3", "n0"), (None, "n1")], "src string, dst string"),
+    "empty": ([], "src long, dst long"),
+}
+
+
+def _hops(df, **kw):
+    from cozo_spark.fixed_rules import graphs as G
+
+    res = G.shortest_hops(df, **kw)
+    info = G.take_run_info()
+    rows = sorted((tuple(r) for r in res.collect()), key=repr)
+    return rows, res.schema, info["loop"], info["epochs"]
+
+
+@pytest.mark.parametrize("max_hops", [0, 1, 2, 64])
+@pytest.mark.parametrize("case", sorted(HOP_CASES))
+def test_shortest_hops_local_matches_spark_loop(spark, monkeypatch, case,
+                                                max_hops):
+    """Rows (duplicates included), schema (names, types, nullability) and
+    epochs agree; ``max_hops=0`` returns the raw edge rows."""
+    from cozo_spark.fixed_rules import graphs as G
+
+    edges, schema = HOP_CASES[case]
+    df = spark.createDataFrame(edges, schema)
+    local = _hops(df, max_hops=max_hops)
+    monkeypatch.setattr(G, "_shortest_hops_local", lambda e, m: None)
+    on_spark = _hops(df, max_hops=max_hops)
+    assert local[2] == "local" and on_spark[2] == "spark"
+    assert local[0] == on_spark[0]
+    assert local[1] == on_spark[1]
+    assert local[3] == on_spark[3]
+    if max_hops == 0:
+        assert local[0] == sorted(((a, b, 1) for a, b in edges), key=repr)
+    if case == "nulls_dups_cycles" and max_hops:
+        # null never joins, but null-keyed pairs are kept
+        assert {(None, 3, 1), (None, 4, 2), (2, None, 1), (None, None, 1),
+                (3, 3, 1), (0, 2, 2)} <= set(local[0])
+        # the cycle 0 -> 1 -> 2 -> 0 closes on the third hop
+        assert ((0, 0, 3) in local[0]) == (max_hops > 1)
+        assert not any(a is None and b is None and n > 1
+                       for a, b, n in local[0])
+
+
+def test_shortest_hops_mid_loop_overflow_runs_spark(spark, monkeypatch):
+    """The 10 chain edges fit a cap of 30, the 55 best pairs do not: the
+    local loop starts, overflows and the Spark loop starts over."""
+    df = spark.createDataFrame(CHAIN, "src long, dst long")
+    local = _hops(df)
+    assert local[2:] == ("local", 10)
+    overflowed = []
+    orig = FP.local_shortest_hops
+
+    def spy(*a):
+        try:
+            return orig(*a)
+        except FP.LocalOverflow:
+            overflowed.append(True)
+            raise
+
+    monkeypatch.setattr(FP, "local_shortest_hops", spy)
+    monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", 30)
+    assert _hops(df) == (local[0], local[1], "spark", 10)
+    assert overflowed
+    assert len(local[0]) == 55
+
+
+def test_shortest_hops_double_ids_run_spark(spark):
+    df = spark.createDataFrame([(float(a), float(b)) for a, b in CHAIN],
+                               "src double, dst double")
+    rows, _, loop, _ = _hops(df)
+    assert loop == "spark"
+    assert rows == sorted(((float(a), float(b), b - a)
+                           for a in range(11) for b in range(a + 1, 11)),
+                          key=repr)
+
+
+
+def test_graph_shortest_hops_runs_local(spark):
+    """The analytics `graph_shortest_hops` query on the oracle tables: the
+    driver-side loop, DuckDB's recursive CTE rows, at most 2 Spark jobs (the
+    capped edge collect, across the edge plan's distinct)."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from cozo_spark.fixed_rules import graphs as G
+    from cozo_spark.queries import graph_shortest_hops
+    from tests.conftest import SF_ORACLE as sf
+
+    graph_shortest_hops(spark, sf).collect()   # warm the edge plan
+    n, rows = _jobs(spark, lambda: graph_shortest_hops(spark, sf).collect(),
+                    "graph_shortest_hops")
+    assert G.take_run_info()["loop"] == "local"
+    assert n <= 2, n
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{sf}/orders.parquet'")
+    want = sorted(con.execute(entry.oracle_sql()["graph_shortest_hops"])
+                  .fetchall())
+    assert sorted(tuple(r) for r in rows) == want and len(want) > 100
+
+@pytest.mark.parametrize("cap,loop", [(None, "local"), (0, "spark")])
+def test_shortest_path_hops_rule_reports_loop(spark, monkeypatch, cap, loop):
+    """A ``ShortestPathHops`` call reports its loop and epochs through
+    ``CozoDb.last_fixed_rule_info()`` and the result metadata."""
+    if cap is not None:
+        monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", cap)
+    db = _db(spark, CHAIN)
+    res = db.run_script("?[a, b, n] <~ ShortestPathHops(*edge[])")
+    info = db.last_fixed_rule_info()["ShortestPathHops"]
+    assert info == {"rule": "ShortestPathHops", "loop": loop, "epochs": 10}
+    assert res.metadata["fixed_rules"]["ShortestPathHops"] == info
+    assert sorted(tuple(r) for r in res.rows) == sorted(
+        (a, b, b - a) for a in range(11) for b in range(a + 1, 11))

@@ -73,15 +73,21 @@ def test_fuzz_transitive_closure(spark, seed):
     assert sorted(tuple(x) for x in r.rows) == sorted(_py_closure(edges))
 
 
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
 @pytest.mark.parametrize("seed", [3, 99])
-def test_fuzz_shortest_hops(spark, seed):
+def test_fuzz_shortest_hops(spark, seed, cap, monkeypatch):
+    """Each seed runs at the default driver-side fixpoint cap (the local
+    loop) and at cap 0 (the Spark loop)."""
     from cozo_spark.fixed_rules.graphs import shortest_hops
+    from tests.conftest import spy_hops_loop
 
     edges = _random_graph(seed)
+    epochs = spy_hops_loop(monkeypatch, cap)
     got = {(r["src"], r["dst"]): r["hops"]
            for r in shortest_hops(
                spark.createDataFrame(edges, "src long, dst long")).collect()}
     assert got == _py_hops(edges)
+    assert (not epochs) == (cap is None)
 
 
 @pytest.mark.parametrize("seed", [5, 77])

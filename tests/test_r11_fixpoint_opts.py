@@ -51,10 +51,14 @@ def test_bfs_reach_deep_chain(spark, chain_edges):
     assert got == want
 
 
-def test_shortest_hops_converges_exactly(spark, chain_edges):
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
+def test_shortest_hops_converges_exactly(spark, chain_edges, monkeypatch, cap):
     from cozo_spark.fixed_rules.graphs import shortest_hops
+    from tests.conftest import spy_hops_loop
 
+    epochs = spy_hops_loop(monkeypatch, cap)
     got = _rows(shortest_hops(chain_edges, max_hops=50), "src", "dst", "hops")
+    assert (not epochs) == (cap is None)
 
     # reference BFS driver-side
     from collections import deque
