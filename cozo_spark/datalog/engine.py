@@ -2717,6 +2717,9 @@ class CozoDb:
             LOCAL_FIXPOINT_MAX_ROWS as cap, LocalClause, LocalOverflow,
             local_semi_naive)
 
+        if cap <= 0:
+            return False
+
         def plain(a) -> bool:
             if isinstance(a, NamedRelApply):
                 args = [x for x in a.pairs.values() if x is not None]

@@ -52,7 +52,8 @@ handing its result back to Spark as a ``LocalRelation`` leaf:
 
 In both, no collected input, running total or epoch candidate set may hold
 more than ``LOCAL_FIXPOINT_MAX_ROWS`` rows: an overflow mid-loop discards
-the local state and the Spark loop starts over.
+the local state and the Spark loop starts over. A cap of 0 or less sends
+every recursion to the Spark loop before any collect, empty inputs too.
 """
 
 from __future__ import annotations

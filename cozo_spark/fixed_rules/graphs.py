@@ -220,13 +220,14 @@ def shortest_hops(edges: DataFrame, max_hops: int = 64) -> DataFrame:
 def _shortest_hops_local(e: DataFrame, max_hops: int) -> DataFrame | None:
     """``shortest_hops`` on the driver (``fixpoint.local_shortest_hops``)
     as a LocalRelation, or None when both endpoint columns do not have the
-    same driver-side Python type or a set overflows the cap (the local
-    state is then discarded)."""
+    same driver-side Python type, the cap is 0 or less, or a set overflows
+    the cap (the local state is then discarded)."""
+    cap = _fp.LOCAL_FIXPOINT_MAX_ROWS
     src, dst = e.schema.fields
     py = _fp._local_py_type(src.dataType)
-    if py is None or py is not _fp._local_py_type(dst.dataType):
+    if (cap <= 0 or py is None
+            or py is not _fp._local_py_type(dst.dataType)):
         return None
-    cap = _fp.LOCAL_FIXPOINT_MAX_ROWS
     rows = _fp.collect_capped(e, cap)
     if rows is None:
         return None

@@ -499,7 +499,13 @@ def minhash_lsh_dedup_pairs(
     # zip_with/aggregate HOF were tried and rejected: the kernel's
     # pandas-UDF stage carries a multi-second variable fixed cost on loaded
     # hosts, and HOFs are CodegenFallback (interpreted, code-cache
-    # sensitive). This stays in whole-stage codegen with the joins.
+    # sensitive). The optimizer places the sum twice (join condition and
+    # projection), so the verify stage's whole-stage method is about 39 KB,
+    # over HotSpot's 8000-byte JIT limit. get_spark() sets
+    # spark.sql.codegen.hugeMethodLimit=8000, so this stage runs as
+    # per-operator code whose split methods are compiled: about half the
+    # time at sf0.1. A session without that conf gets the same rows from
+    # the interpreted whole-stage method.
     # (CASE WHEN sig_a[i]=sig_b[i] THEN 1 ELSE 0 END) sum as ONE parsed
     # expression — identical tree to the former per-Column build (SQL [i]
     # is 0-based where element_at is 1-based), ~0.5 s less py4j per call

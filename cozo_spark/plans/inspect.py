@@ -55,3 +55,25 @@ def plan_properties(df: DataFrame) -> dict:
         "batched_scan": "Batched: true" in plan,
         "plan": plan,
     }
+
+
+def whole_stage_method_bytes(df: DataFrame) -> list[int]:
+    """``maxMethodCodeSize`` of each whole-stage codegen subtree of the
+    plan ``df`` executed, in bytes of bytecode. Call it after an action on
+    ``df`` itself, such as ``collect()``: under AQE the plan before one has
+    no final query stages, and ``count()`` runs a different plan."""
+    jvm = df._sc._jvm  # noqa: SLF001
+    text = jvm.org.apache.spark.sql.execution.debug.package.codegenString(
+        df._jdf.queryExecution().executedPlan())
+    return [int(n) for n in re.findall(r"maxMethodCodeSize:(\d+)", text)]
+
+
+def max_method_bytes(df: DataFrame) -> int:
+    """The largest generated method that runs as whole-stage code, after an
+    action. A subtree over ``spark.sql.codegen.hugeMethodLimit`` is left
+    out: at execution it falls back to per-operator code, which splits
+    its expressions into smaller methods. HotSpot never JIT-compiles a method over 8000
+    bytes, so a figure above 8000 is a stage that runs interpreted."""
+    limit = int(df.sparkSession.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    return max((n for n in whole_stage_method_bytes(df) if n <= limit),
+               default=0)

@@ -27,6 +27,8 @@ _DEFAULTS = {
     # Keep broadcast threshold generous: dims (region/nation/supplier/part)
     # stay broadcast even at sf100.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # HotSpot never JITs a method over 8000 bytes: run such stages per-operator
+    "spark.sql.codegen.hugeMethodLimit": "8000",
     "spark.ui.enabled": "false",
 }
 

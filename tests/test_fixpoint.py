@@ -159,7 +159,7 @@ def test_local_matches_spark_loop(spark, monkeypatch, name):
     assert ran == "local"
     monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", 0)
     on_spark, ran = _run(db, PARITY[name])
-    assert ran == "spark" or name == "never_fires"
+    assert ran == "spark"
     assert local == on_spark
 
 
@@ -235,6 +235,15 @@ def test_local_frame_keeps_nested_nan_apart_from_null(spark):
     v = rows[0][1]
     assert v[0] == 1.0 and math.isnan(v[1]) and v[2] is None
     assert rows[1][1] is None and rows[2][1] == []
+
+
+@pytest.mark.parametrize("cap,path", [(None, "local"), (0, "spark")])
+def test_empty_inputs_cap_zero_runs_spark(spark, monkeypatch, cap, path):
+    """An SCC whose inputs have no rows fits any cap, but a cap of 0 still
+    sends it to the Spark loop."""
+    if cap is not None:
+        monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", cap)
+    assert _run(_db(spark, []), REACH) == ([], path)
 
 
 def test_input_over_cap_runs_spark(spark, monkeypatch):
@@ -364,6 +373,17 @@ def test_shortest_hops_local_matches_spark_loop(spark, monkeypatch, case,
         assert ((0, 0, 3) in local[0]) == (max_hops > 1)
         assert not any(a is None and b is None and n > 1
                        for a, b, n in local[0])
+
+
+@pytest.mark.parametrize("cap,loop", [(None, "local"), (0, "spark")])
+def test_shortest_hops_empty_edges_cap_zero_runs_spark(spark, monkeypatch,
+                                                       cap, loop):
+    """An empty edge frame fits any cap, but a cap of 0 still sends it to
+    the Spark loop."""
+    if cap is not None:
+        monkeypatch.setattr(FP, "LOCAL_FIXPOINT_MAX_ROWS", cap)
+    rows, _, ran, _ = _hops(spark.createDataFrame([], "src long, dst long"))
+    assert (rows, ran) == ([], loop)
 
 
 def test_shortest_hops_mid_loop_overflow_runs_spark(spark, monkeypatch):

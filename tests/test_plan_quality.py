@@ -163,6 +163,36 @@ def test_minhash_xxhash64_variant_plan(spark):
     assert df.count() > 0
 
 
+def test_generated_methods_fit_the_jit_limit(spark):
+    """HotSpot never JIT-compiles a method over 8000 bytes, so a whole-stage
+    method above that runs interpreted. The session caps whole-stage methods
+    at 8000 bytes; after collect() no analytics query runs a bigger one.
+    Only minhash's 64-term verify stage is over the cap, and it runs as
+    per-operator code; under Spark's default cap it would count."""
+    from cozo_spark import queries as Q
+    from cozo_spark.plans.inspect import (max_method_bytes,
+                                          whole_stage_method_bytes)
+    from perfbench.workloads import ANALYTICS_QUERIES
+
+    key = "spark.sql.codegen.hugeMethodLimit"
+    assert spark.conf.get(key) == "8000"
+    over = {}
+    for q in ANALYTICS_QUERIES:
+        df = Q.QUERIES[q](spark, SF_ORACLE)
+        df.collect()
+        assert max_method_bytes(df) <= 8000, q
+        big = [n for n in whole_stage_method_bytes(df) if n > 8000]
+        if big:
+            over[q] = (df, max(big))
+    assert set(over) == {"minhash_lsh_pairs"}, over
+    df, big = over["minhash_lsh_pairs"]
+    spark.conf.unset(key)
+    try:
+        assert max_method_bytes(df) == big
+    finally:
+        spark.conf.set(key, "8000")
+
+
 def test_minhash_aggregate_is_partial(props):
     """The 64-min signature aggregate must partial-aggregate map-side so the
     shuffle carries one 512B row per doc, not the token stream."""
