@@ -46,6 +46,7 @@ from cozo_spark.datalog.fixpoint import (_checkpoint, _local_const, _local_type,
     collect_capped, epochs_exceeded)
 from cozo_spark.fixed_rules import get_fixed_rule
 from cozo_spark.plans.local import local_frame
+from cozo_spark.plans.memo import plan_memo
 from cozo_spark.functions.aggregates import AGGREGATIONS
 
 import itertools as _itertools
@@ -3172,13 +3173,6 @@ class CozoDb:
         rel.lsm_minor_thread = t
         return t
 
-    @staticmethod
-    def _lsm_sync_compact() -> bool:
-        """COZO_SPARK_SYNC_COMPACT=1 restores the r9 synchronous compaction
-        (deterministic timing for debugging; also the A/B lever)."""
-        import os
-        return os.environ.get("COZO_SPARK_SYNC_COMPACT", "") not in ("", "0")
-
     def _lsm_freeze(self, rel: StoredRelation) -> "_threading.Thread":
         """Freeze the current flat view as the new lsm_base (the LSM
         memtable-freeze: lazy, zero jobs on the caller) and reset the
@@ -3298,33 +3292,26 @@ class CozoDb:
             rel.lsm_view_dirty = True
             rel.version += 1
             rel.pending_merges = rel.lsm_base_layers + len(rel.lsm_pending)
-            if self._lsm_sync_compact():
-                if rel.pending_merges >= self._COMPACT_EVERY:
-                    rel.df = _checkpoint(rel.df)
-                    rel.pending_merges = 0
-                    rel.lsm_base, rel.lsm_pending, rel.lsm_rows = None, [], 0
-                    rel.lsm_base_layers = 0
-            else:
-                if self._lsm_wants_major(rel):
-                    if not rel.lsm_compacting:
-                        spawn_worker = self._lsm_freeze(rel)
-                    elif rel.lsm_minors >= (self._LSM_MAX_LAG
-                                            * self._LSM_MAJOR_EVERY):
-                        wait_thread = rel.lsm_thread
-                if (spawn_worker is None
-                        and rel.pending_merges >= self._COMPACT_EVERY):
-                    # collapse off-thread; while one is in flight pending
-                    # may overshoot to 4x the threshold, then backpressure.
-                    # 4x because the width cost is nearly flat with Arrow
-                    # delta leaves (re-measured r11: 1.0-1.3 s reads at
-                    # widths 16-32 on tiny data — the old super-linear
-                    # blowup was the python-RDD leaf constant, gone in
-                    # r10); a tighter cap made burst writers block on the
-                    # first cold collapse for no read-side benefit.
-                    if not rel.lsm_minor_inflight:
-                        self._lsm_minor_begin(rel)  # starts its own worker
-                    elif rel.pending_merges >= 4 * self._COMPACT_EVERY:
-                        wait_minor = rel.lsm_minor_thread
+            if self._lsm_wants_major(rel):
+                if not rel.lsm_compacting:
+                    spawn_worker = self._lsm_freeze(rel)
+                elif rel.lsm_minors >= (self._LSM_MAX_LAG
+                                        * self._LSM_MAJOR_EVERY):
+                    wait_thread = rel.lsm_thread
+            if (spawn_worker is None
+                    and rel.pending_merges >= self._COMPACT_EVERY):
+                # collapse off-thread; while one is in flight pending
+                # may overshoot to 4x the threshold, then backpressure.
+                # 4x because the width cost is nearly flat with Arrow
+                # delta leaves (re-measured r11: 1.0-1.3 s reads at
+                # widths 16-32 on tiny data — the old super-linear
+                # blowup was the python-RDD leaf constant, gone in
+                # r10); a tighter cap made burst writers block on the
+                # first cold collapse for no read-side benefit.
+                if not rel.lsm_minor_inflight:
+                    self._lsm_minor_begin(rel)  # starts its own worker
+                elif rel.pending_merges >= 4 * self._COMPACT_EVERY:
+                    wait_minor = rel.lsm_minor_thread
         # freeze/minor-begin start their workers under the lock (r11) —
         # nothing to start here; the locals only gate the joins below
         if spawn_worker is not None:
@@ -4214,20 +4201,25 @@ class CozoDb:
         from cozo_spark.fixed_rules import graphs as G
 
         inp = rule.inputs[0] if rule.inputs else None
-        df = None
+        df, cols = None, []
         if inp is not None and inp.kind in ("relation", "named_relation"):
             try:
                 df = self._resolve_relation(inp.name)
-                if df is not None and inp.kind == "named_relation" \
-                        and inp.bindings:
-                    # mirror _eval_fixed_rule: the rule sees the BOUND
-                    # columns in binding order, not the relation layout
-                    df = df.select(*[F.col(c) for c, _v in inp.bindings])
-                # positional bindings only RENAME the first k columns —
-                # the first two stay the edge endpoints
             except Exception:
                 df = None
-        if df is None or len(df.columns) < 2:
+            if df is not None:
+                cols = df.columns
+                if inp.kind == "named_relation" and inp.bindings:
+                    # mirror _eval_fixed_rule: the rule sees the BOUND
+                    # columns in binding order, not the relation layout.
+                    # The counts read them off the relation's own frame,
+                    # so their memo hits across calls.
+                    cols = [c for c, _v in inp.bindings]
+                    if not set(cols) <= set(df.columns):
+                        df = None
+                # positional bindings only RENAME the first k columns —
+                # the first two stay the edge endpoints
+        if df is None or len(cols) < 2:
             return ("mode=data-dependent (derived input; decided at run "
                     "time — CozoDb.last_fixed_rule_info() after the run)")
         opts = {}
@@ -4236,26 +4228,17 @@ class CozoDb:
                 opts[k] = const_eval(v)
             except Exception:
                 pass
-        a, b = df.columns[:2]
+        a, b = cols[:2]
         if rn == "CommunityDetectionLouvainDist":
             from cozo_spark.fixed_rules.local_graphs import _MAX_DRIVER_EDGES
 
-            und = self._explain_count(
-                df, ("und", a, b),
-                lambda: df.filter(F.col(a) != F.col(b))
-                .select(F.least(F.col(a), F.col(b)).alias("x"),
-                        F.greatest(F.col(a), F.col(b)).alias("y"))
-                .distinct().count())
+            und = _explain_undirected_edges(df, a, b)
             lt = opts.get("local_threshold")
             thr = G.LOUVAIN_LOCAL_MAX_EDGES if lt is None else int(lt)
             local = 0 < und <= min(thr, _MAX_DRIVER_EDGES)
             return (f"mode={'driver_sequential' if local else 'distributed'}"
                     f" edges={und} gate={thr}")
-        n = self._explain_count(
-            df, ("nodes", a, b),
-            lambda: df.select(F.col(a).alias("n"))
-            .unionByName(df.select(F.col(b).alias("n")))
-            .distinct().count())
+        n = _explain_nodes(df, a, b)
         sources = opts.get("sources")
         if sources is None and n > G.AUTO_EXACT_MAX_NODES:
             k = G._auto_pivots(n)
@@ -4278,23 +4261,23 @@ class CozoDb:
                 mode += f" accuracy_cap=max_iterations:{cap}"
         return mode
 
-    # ::explain count memo: inspecting a plan should not re-scan a large
-    # relation on every invocation (r10 review) — keyed on the exact frame
-    # identity (strong ref keeps the id stable); any mutation swaps rel.df
-    # and naturally misses
-    _explain_counts: dict = {}
 
-    def _explain_count(self, df: DataFrame, key_tail: tuple, compute):
-        key = (id(df.sparkSession), id(df._jdf)) + key_tail
-        hit = CozoDb._explain_counts.get(key)
-        if hit is not None and hit[0] is df._jdf:
-            return hit[1]
-        val = compute()
-        cache = CozoDb._explain_counts
-        cache[key] = (df._jdf, val)
-        while len(cache) > 64:
-            cache.pop(next(iter(cache)))
-        return val
+# ::explain counts are memoized so that inspecting a plan does not re-scan a
+# large relation on every invocation. They key on the relation's frame
+# identity: any mutation swaps rel.df, and the next call misses.
+@plan_memo
+def _explain_undirected_edges(df: DataFrame, a: str, b: str) -> int:
+    return (df.filter(F.col(a) != F.col(b))
+            .select(F.least(F.col(a), F.col(b)).alias("x"),
+                    F.greatest(F.col(a), F.col(b)).alias("y"))
+            .distinct().count())
+
+
+@plan_memo
+def _explain_nodes(df: DataFrame, a: str, b: str) -> int:
+    return (df.select(F.col(a).alias("n"))
+            .unionByName(df.select(F.col(b).alias("n")))
+            .distinct().count())
 
 
 def _rel_meta_fingerprint(r: StoredRelation) -> tuple:

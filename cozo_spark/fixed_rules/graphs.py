@@ -1052,8 +1052,6 @@ def louvain_communities(
         return out
     _record_run_info(rule="CommunityDetectionLouvainDist",
                      mode="distributed", edges=n_und_edges, gate=thr)
-    import os as _os
-    _dbg = _os.environ.get("COZO_LOUVAIN_DEBUG")
     nodes0 = g.select(F.col("a").alias("node")).distinct()
     # node count rides the checkpoint action (guide §1 "one action")
     mapping, n_nodes = _checkpoint_count(
@@ -1073,8 +1071,7 @@ def louvain_communities(
             if n_cur >= n_nodes:
                 break  # contraction stalled: last level merged nothing
             n_nodes = n_cur
-        if _dbg:
-            print(f"[louvain] level {_level} n_nodes={n_nodes}", flush=True)
+        _log.debug("Louvain: level %d n_nodes=%d", _level, n_nodes)
         floor = max(delta, 0.0) + 1e-12
 
         def _round(comm_in, rnd: int):
@@ -1149,8 +1146,7 @@ def louvain_communities(
             upd, obs = _round(comm, rnd)
             comm = _checkpoint(upd)
             moved = _moved(obs)
-            if _dbg:
-                print(f"[louvain]   rnd {rnd} moved={moved}", flush=True)
+            _log.debug("Louvain:   round %d moved=%d", rnd, moved)
             if moved == 0 and prev_moved == 0:
                 break  # two consecutive quiet half-rounds: local optimum
             prev_moved = moved

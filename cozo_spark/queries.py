@@ -21,46 +21,17 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from cozo_spark.plans.memo import plan_memo
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-import weakref as _weakref
-
-# per-SESSION memo store (ADVICE r11): entries are reachable only through a
-# weak reference to their SparkSession, so a stopped-and-dropped session's
-# cached lazy plans are garbage-collected with it instead of accumulating
-# for the life of the process. The facade keeps the historical
-# ``_T_CACHE[(spark, ...)]`` call-site shape.
-_T_CACHE_BY_SESSION: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-class _TCache:
-    def get(self, key):
-        d = _T_CACHE_BY_SESSION.get(key[0])
-        return None if d is None else d.get(key[1:])
-
-    def __setitem__(self, key, value):
-        _T_CACHE_BY_SESSION.setdefault(key[0], {})[key[1:]] = value
-
-
-_T_CACHE = _TCache()
-
-
+@plan_memo
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Memoized per (session, dir, table): a DataFrame is an immutable lazy
     plan, and returning the SAME object lets the engine's compiled-plan
     cache key on frame identity across calls (footer re-reads also skipped)."""
-    ck = (spark, sf_dir, name)
-    hit = _T_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    df = _t_read(spark, sf_dir, name)
-    _T_CACHE[ck] = df
-    return df
-
-
-def _t_read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
@@ -74,6 +45,15 @@ def _t_read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _session_tz(spark: SparkSession, *_args) -> str:
+    """The session timezone: the memo key of builders whose plan bakes it
+    in (NTZ->LTZ casts, build-time instants), so a mid-session tz change
+    misses instead of serving stale semantics. No default value: conf.get
+    VALIDATES defaults in Spark 4 and "" is not a timezone; the key itself
+    is always set."""
+    return spark.conf.get("spark.sql.session.timeZone")
+
+
 def _session_tz_instant(spark, y: int, mo: int, d: int) -> float:
     """Epoch seconds of local midnight (y, mo, d) in the SESSION timezone.
     Spark accepts both region IDs ('UTC', 'America/New_York') and zone
@@ -82,7 +62,7 @@ def _session_tz_instant(spark, y: int, mo: int, d: int) -> float:
     import datetime as dt
     import re as _re
 
-    name = spark.conf.get("spark.sql.session.timeZone")
+    name = _session_tz(spark)
     try:
         from zoneinfo import ZoneInfo
 
@@ -105,43 +85,6 @@ def query(name: str, oracle: str | None = None):
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
-    return deco
-
-
-def _lazy_memo(tz_sensitive: bool = False):
-    """Memoize a PURE-LAZY query builder per (session, sf_dir) — the
-    ``_t``/``_edges`` idiom lifted to the whole query frame. Only for
-    builders that run NO Spark action at build time: the memo caches a
-    lazy plan, never data, so every action on the returned frame still
-    computes from the parquet inputs (pinned by
-    test_lazy_query_memo_reruns). Removes the residual per-call py4j
-    plan construction (15-65 ms/call measured on the cache-hit engine
-    dispatch + post-projection Column ops, guide §7.3 "driver-side
-    work") — the prepared-statement steady state the engine path already
-    gets from its compiled-plan cache.
-
-    ``tz_sensitive``: builders whose plan bakes in the session timezone
-    (NTZ→LTZ casts, build-time instants) key on the current
-    ``spark.sql.session.timeZone`` so a mid-session tz change misses the
-    memo instead of serving stale semantics."""
-    import functools
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # no default value: conf.get VALIDATES defaults in Spark 4 and
-            # "" is not a timezone; the key itself is always set
-            tz = (spark.conf.get("spark.sql.session.timeZone")
-                  if tz_sensitive else None)
-            key = (spark, sf_dir, "__q_" + fn.__name__, tz)
-            hit = _T_CACHE.get(key)
-            if hit is not None:
-                return hit
-            df = fn(spark, sf_dir)
-            _T_CACHE[key] = df
-            return df
-        wrapper.__wrapped__ = fn
-        return wrapper
     return deco
 
 
@@ -228,7 +171,7 @@ def join_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY r.r_name, n.n_name
     """,
 )
-@_lazy_memo()
+@plan_memo
 def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-deep multiway equi-join (InnerJoin ra.rs:2028-2400) + group agg.
 
@@ -412,7 +355,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-@_lazy_memo()
+@plan_memo
 def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count/sum/mean/min/max/count_unique (aggr.rs:420-680) — TPC-H Q1 shape.
 
@@ -678,6 +621,21 @@ def reorder_sort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §1.3 time travel — validity as-of read (query/ra.rs:1125-1243)
 # ---------------------------------------------------------------------------
 
+@plan_memo
+def _validity_hist(ev: DataFrame) -> DataFrame:
+    """events as a validity relation's rows: (user_id, vld{ts µs,
+    is_assert}, event_type, value). Memoized so the engine's compiled-plan
+    cache keys on a stable frame across calls."""
+    return ev.select(
+        "user_id",
+        # ts may surface as TIMESTAMP or TIMESTAMP_NTZ depending on how the
+        # session read the nanos parquet; cast unifies both (the same
+        # session-tz interpretation the oracle's naive literal gets)
+        F.struct(F.unix_micros(F.col("ts").cast("timestamp")).alias("ts"),
+                 F.lit(True).alias("is_assert")).alias("vld"),
+        "event_type", "value")
+
+
 @query(
     "validity_asof",
     oracle="""
@@ -699,23 +657,11 @@ def validity_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     the latest assertion at-or-before the timestamp. The translator's
     as-of window partitions on the key prefix (one key shuffle), with the
     ts filter applied before it — same plan shape as the raw SCD-2 read."""
-    ck = (spark, sf_dir, "__validity_hist")
-    evv = _T_CACHE.get(ck)
-    if evv is None:
-        ev = _t(spark, sf_dir, "events")
-        evv = ev.select(
-            "user_id",
-            # ts may surface as TIMESTAMP or TIMESTAMP_NTZ depending on how
-            # the session read the nanos parquet; cast unifies both (the same
-            # session-tz interpretation the oracle's naive literal gets)
-            F.struct(F.unix_micros(F.col("ts").cast("timestamp")).alias("ts"),
-                     F.lit(True).alias("is_assert")).alias("vld"),
-            "event_type", "value")
-        _T_CACHE[ck] = evv
     from cozo_spark.datalog.engine import CozoDb
 
     db = CozoDb(spark)
-    db.register_dataframe("ev_hist", evv, keys=["user_id", "vld"])
+    db.register_dataframe("ev_hist", _validity_hist(_t(spark, sf_dir, "events")),
+                          keys=["user_id", "vld"])
     # the same instant the oracle's naive TIMESTAMP literal denotes, in µs,
     # interpreted in the session timezone (zero Spark jobs — resolving it
     # through spark.sql would cost an extra action per call)
@@ -855,26 +801,21 @@ _EDGES_SQL = """
 """
 
 
+@plan_memo
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized like _t: the lazy edge plan costs ~60 py4j ops to build
     # (~0.1 s warm), and four headline graph queries rebuild it per call;
     # a stable frame identity also lets the engine's compiled-plan cache
-    # key on it across calls (r11). No data is cached — every action still
+    # key on it across calls. No data is cached — every action still
     # computes from the parquet scan.
-    ek = (spark, sf_dir, "__graph_edges")
-    hit = _T_CACHE.get(ek)
-    if hit is not None:
-        return hit
     o = _t(spark, sf_dir, "orders")
-    df = (
+    return (
         o.filter((F.col("o_orderkey") % 20 == 0)
                  & (F.col("o_custkey") % 50 != F.col("o_orderkey") % 50))
         .select((F.col("o_custkey") % 50).cast("long").alias("src"),
                 (F.col("o_orderkey") % 50).cast("long").alias("dst"))
         .distinct()
     )
-    _T_CACHE[ek] = df
-    return df
 
 
 @query(
@@ -891,7 +832,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nodes n LEFT JOIN outs o ON n.node = o.node LEFT JOIN ins i ON n.node = i.node
     """,
 )
-@_lazy_memo()
+@plan_memo
 def graph_degree_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DegreeCentrality fixed rule (algos/degree_centrality.rs:76) invoked
     THROUGH the engine's `<~` UDTF surface — the driver gate exercises the
@@ -1339,14 +1280,14 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k. The IVF/LSH variant in operators.similarity is the 100 TB path."""
     from cozo_spark.operators.similarity import cosine_topk
     emb = _t(spark, sf_dir, "embeddings")
-    # memoized like _t: a stable query-frame identity lets the operator's
-    # plan memo (and the dim probe) hit across calls (r11)
-    qk = (spark, sf_dir, "__ann_queries")
-    queries = _T_CACHE.get(qk)
-    if queries is None:
-        queries = emb.filter("vec_id < 5")
-        _T_CACHE[qk] = queries
-    return cosine_topk(queries, emb, k=10, round_digits=6)
+    return cosine_topk(_ann_queries(emb), emb, k=10, round_digits=6)
+
+
+@plan_memo
+def _ann_queries(emb: DataFrame) -> DataFrame:
+    """The query vectors. Memoized like _t: a stable query-frame identity
+    lets cosine_topk's plan memo (and the dim probe) hit across calls."""
+    return emb.filter("vec_id < 5")
 
 
 @query(
@@ -1466,7 +1407,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_custkey < 100
     """,
 )
-@_lazy_memo()
+@plan_memo
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running aggregate over an ordered window frame — beyond the reference
     (it has no window functions, SURVEY §2.4); native Spark Window."""
@@ -1499,7 +1440,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY 1, 2
     """,
 )
-@_lazy_memo(tz_sensitive=True)
+@plan_memo(extra_key=_session_tz)
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min inactivity gap): lag → new-session flag →
     cumulative sum — the batch analogue of a session window in Structured

@@ -11,8 +11,8 @@ The reference's closest capabilities (SURVEY §2.8) are mutation callbacks
   Structured Streaming source supporting watermarks, windowed aggregations,
   and ``foreachBatch`` sinks — trigger logic across micro-batches becomes
   idempotent foreachBatch (exactly-once when the sink is transactional);
-- in-process callbacks fire synchronously per mutation for parity with the
-  reference's channel-based API.
+- in-process callbacks fire once per mutation, in commit order, on one
+  dispatch worker, like the reference's channel-based API.
 
 At scale the spool directory is an object-store prefix and the stream runs
 continuously; locally, ``Trigger.AvailableNow`` drains it in tests.
@@ -38,7 +38,7 @@ CHANGE_SCHEMA = T.StructType([
 
 
 class ChangeFeed:
-    def __init__(self, spool_dir: str, sync: Optional[bool] = None):
+    def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
         os.makedirs(spool_dir, exist_ok=True)
         self._lock = threading.Lock()
@@ -51,12 +51,7 @@ class ChangeFeed:
         # callback list and enqueues the LAZY row plans; one ordered worker
         # collects, spools and dispatches. This removes the ~450-550 ms
         # per-mutation spool+collect from the write path (the r9 ~1 put/s
-        # ceiling). COZO_SPARK_SYNC_CHANGEFEED=1 (or sync=True) restores
-        # in-line delivery; flush() drains the queue for asserting tests.
-        if sync is None:
-            sync = os.environ.get("COZO_SPARK_SYNC_CHANGEFEED",
-                                  "") not in ("", "0")
-        self.sync = sync
+        # ceiling). flush() drains the queue for asserting tests.
         import queue as _queue
 
         self._q: "_queue.Queue" = _queue.Queue(maxsize=4096)
@@ -77,10 +72,8 @@ class ChangeFeed:
         # handler unregisters a stalled subscriber from inside its own
         # callback, and list.remove() during `for cb in cbs` skipped the
         # NEXT healthy subscriber's delivery. Snapshotting at RECORD time
-        # also pins which subscribers observe this mutation, matching the
-        # synchronous semantics.
-        if not self.sync:
-            self._ensure_worker()
+        # also pins which subscribers observe this mutation.
+        self._ensure_worker()
         with self._emit_lock:
             with self._lock:
                 self._seq += 1
@@ -88,31 +81,20 @@ class ChangeFeed:
                                     f"changes-{self._seq:08d}.json")
                 cbs = list(self.callbacks.get(relation, ()))
             now = time.time()
-            if not self.sync:
-                if threading.current_thread() is self._worker:
-                    # re-entrant record (a subscriber callback mutated a
-                    # relation): queueing from the worker can self-deadlock
-                    # on a full queue — deliver inline instead (the nested
-                    # event lands within its parent's delivery, the
-                    # recursive-trigger ordering)
-                    self._deliver(relation, op, rows, old_rows,
-                                  now, path, cbs, isolate=True)
-                else:
-                    # enqueue UNDER the emit lock: concurrent mutators must
-                    # reach the worker in seq (commit) order. A full queue
-                    # blocks here (bounded backpressure) — and can always
-                    # drain, because the worker takes only self._lock,
-                    # never _emit_lock.
-                    self._q.put((relation, op, rows, old_rows,
-                                 now, path, cbs))
-                return
-            # sync mode: SPOOL under the emit lock (r11, VERDICT r10 nit 2
-            # — two concurrent sync mutators could momentarily expose
-            # changes-N+1 before changes-N existed when the write happened
-            # after release); callbacks still run outside the lock so a
-            # subscriber that mutates (re-entrant record) cannot deadlock.
-            payload = self._spool(relation, op, rows, now, path)
-        self._notify(relation, op, payload, old_rows, cbs, isolate=False)
+            if threading.current_thread() is self._worker:
+                # re-entrant record (a subscriber callback mutated a
+                # relation): queueing from the worker can self-deadlock on
+                # a full queue — deliver inline instead (the nested event
+                # lands within its parent's delivery, the recursive-trigger
+                # ordering)
+                self._deliver(relation, op, rows, old_rows, now, path, cbs)
+            else:
+                # enqueue UNDER the emit lock: concurrent mutators must
+                # reach the worker in seq (commit) order. A full queue
+                # blocks here (bounded backpressure) — and can always
+                # drain, because the worker takes only self._lock, never
+                # _emit_lock.
+                self._q.put((relation, op, rows, old_rows, now, path, cbs))
 
     def _spool(self, relation: str, op: str, rows: DataFrame, now: float,
                path: str) -> list:
@@ -126,13 +108,12 @@ class ChangeFeed:
 
     def _deliver(self, relation: str, op: str, rows: DataFrame,
                  old_rows: Optional[DataFrame], now: float, path: str,
-                 cbs: list, isolate: bool = False) -> None:
+                 cbs: list) -> None:
         payload = self._spool(relation, op, rows, now, path)
-        self._notify(relation, op, payload, old_rows, cbs, isolate)
+        self._notify(relation, op, payload, old_rows, cbs)
 
     def _notify(self, relation: str, op: str, payload: list,
-                old_rows: Optional[DataFrame], cbs: list,
-                isolate: bool) -> None:
+                old_rows: Optional[DataFrame], cbs: list) -> None:
         # old rows (replaced on put / removed on rm) materialize only when a
         # three-argument callback wants them — reference callbacks deliver
         # (op, new_rows, old_rows), runtime/callback.rs:19-57. The old-rows
@@ -150,12 +131,9 @@ class ChangeFeed:
                 else:
                     cb(op, payload)
             except Exception as e:
-                # async: a raising subscriber must not rob the REMAINING
+                # a raising subscriber must not rob the REMAINING
                 # subscribers of this change (the reference's channel
-                # receivers are independent); sync mode keeps the r9
-                # propagate-to-mutator contract
-                if not isolate:
-                    raise
+                # receivers are independent)
                 import sys
 
                 print(f"changefeed subscriber error ({relation}/{op}): "
@@ -180,7 +158,7 @@ class ChangeFeed:
         while True:
             item = self._q.get()
             try:
-                self._deliver(*item, isolate=True)
+                self._deliver(*item)
             except Exception as e:  # collect/spool failure for this change
                 print(f"changefeed dispatch error: {e!r}", file=sys.stderr)
             finally:
@@ -188,8 +166,7 @@ class ChangeFeed:
 
     def flush(self) -> None:
         """Block until every recorded mutation is spooled and delivered."""
-        if not self.sync:
-            self._q.join()
+        self._q.join()
 
     def register_callback(self, relation: str, fn: Callable) -> None:
         """Reference Db::register_callback (db.rs:789-830). A two-argument

@@ -21,7 +21,8 @@
 4 (low, dedup.py): minhash/simhash cached signature tables with .cache()
    and never unpersisted — storage accumulates across calls in a
    long-lived session. Fix: localCheckpoint (blocks released on GC, and
-   nothing is left registered in the CacheManager).
+   nothing is left registered in the CacheManager). Its test,
+   test_dedup_cache_is_bounded_per_operator, is in test_memo.py.
 """
 
 from __future__ import annotations
@@ -258,40 +259,3 @@ def test_centrality_mode_metadata(spark):
     # a program with no mode-recording rule reports nothing
     plain = db.run_script("?[x] <- [[1]]")
     assert plain.metadata == {} and db.last_fixed_rule_info() == {}
-
-
-# --- 4: no CacheManager accumulation --------------------------------------
-
-
-def test_dedup_cache_is_bounded_per_operator(spark):
-    """Repeated invocations must not accumulate cached signature tables:
-    each call unpersists the previous call's table for its slot (rotating
-    cache), so a long-lived session holds at most one per operator."""
-    import cozo_spark.operators.dedup as dd
-    from cozo_spark.operators.dedup import (minhash_lsh_dedup_pairs,
-                                            simhash_near_pairs)
-
-    spark.catalog.clearCache()
-    sc = spark.sparkContext._jsc.sc()
-    base = len(sc.getRDDStorageInfo())  # other suites' checkpoint blocks
-    for rnd in range(3):  # DISTINCT inputs: each call caches a new plan
-        docs = [(i, f"round {rnd} quick brown fox jumps over dog {i % 4} "
-                    f"with padding tokens {i % 4} again and again")
-                for i in range(24)]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        minhash_lsh_dedup_pairs(df, "text", "doc_id", threshold=0.5).count()
-        simhash_near_pairs(df, "text", "doc_id").count()
-    assert set(dd._CACHE_SLOTS) <= {"minhash_sigs", "simhash_sigs"}
-    assert len(dd._CACHE_SLOTS) <= 2, "one cached table per operator, max"
-    # rotated-out tables must be gone from executor storage: at most the
-    # two live slots (+ ContextCleaner-pending checkpoint blocks from the
-    # operators' internal localCheckpoints) may ADD materialized blocks;
-    # without rotation the 6 cached signature tables alone exceed this
-    import gc
-    import time as _t
-
-    gc.collect()
-    _t.sleep(1.0)  # let the ContextCleaner drain GC'd checkpoint blocks
-    grown = len(sc.getRDDStorageInfo()) - base
-    assert grown <= 4, \
-        f"+{grown} persisted RDDs after 3 rounds — caches accumulate"

@@ -201,17 +201,6 @@ def test_async_compaction_preserves_state_and_installs(spark):
     assert rel.pending_merges < db._COMPACT_EVERY
 
 
-def test_sync_compaction_env_gate(spark, monkeypatch):
-    monkeypatch.setenv("COZO_SPARK_SYNC_COMPACT", "1")
-    db = _db(spark)
-    rel = db.relations["lsm_t"]
-    for i in range(10):
-        db.run_script(f"?[k, v] <- [[{i}, {i}]] :put lsm_t {{k => v}}")
-    assert rel.lsm_thread is None and not rel.lsm_compacting
-    assert rel.pending_merges < db._COMPACT_EVERY
-    assert {k: _rows(db)[k] for k in range(10)} == {i: i for i in range(10)}
-
-
 def test_stale_compaction_discarded_after_import(spark, monkeypatch):
     """A background compaction that finishes AFTER ::import swapped the
     relation must NOT install its stale base (identity guard)."""

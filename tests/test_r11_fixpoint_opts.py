@@ -186,53 +186,6 @@ def test_random_hyperplane_expr_planes(spark):
     assert (0, 1) in pairs
 
 
-def test_plan_memo_conf_invalidation(spark):
-    # changing the documented tuning conf must invalidate the memoized plan
-    from cozo_spark.operators.similarity import cosine_neardup_pairs
-
-    df = spark.createDataFrame(
-        [(i, [float(j == i % 4) for j in range(4)]) for i in range(12)],
-        "vec_id long, embedding array<double>")
-    conf = spark.conf
-    old = conf.get("spark.cozo.neardup.blocks", None)
-    try:
-        conf.unset("spark.cozo.neardup.blocks")
-        p1 = cosine_neardup_pairs(df, threshold=0.9)
-        p1b = cosine_neardup_pairs(df, threshold=0.9)
-        assert p1 is p1b  # memo hit with unchanged conf
-        conf.set("spark.cozo.neardup.blocks", "3")
-        p2 = cosine_neardup_pairs(df, threshold=0.9)
-        assert p2 is not p1  # conf change rebuilds
-        assert _rows(p1, "id_a", "id_b") == _rows(p2, "id_a", "id_b")
-    finally:
-        conf.unset("spark.cozo.neardup.blocks")
-        if old is not None:
-            conf.set("spark.cozo.neardup.blocks", old)
-
-
-def test_plan_memo_rotating_cache_generation(spark):
-    # interleaving a different input rotates the signature cache; the memo
-    # must NOT serve the old plan (its cached subtree was unpersisted)
-    import cozo_spark.operators.dedup as D
-
-    a = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i}") for i in range(6)],
-        "doc_id long, text string")
-    b = spark.createDataFrame(
-        [(i, f"zeta eta theta iota {i}") for i in range(6)],
-        "doc_id long, text string")
-    p1 = D.minhash_lsh_dedup_pairs(a, threshold=0.2)
-    gen0 = D._CACHE_GEN.get("minhash_sigs", 0)
-    D.minhash_lsh_dedup_pairs(b, threshold=0.2)
-    assert D._CACHE_GEN.get("minhash_sigs", 0) > gen0  # rotation bumped
-    p3 = D.minhash_lsh_dedup_pairs(a, threshold=0.2)
-    assert p3 is not p1  # rebuilt (and re-cached) instead of stale memo
-    # and the rebuilt plan now memo-hits under the post-rotation generation
-    p4 = D.minhash_lsh_dedup_pairs(a, threshold=0.2)
-    assert p4 is p3
-    assert _rows(p1, "id_a", "id_b") == _rows(p3, "id_a", "id_b")
-
-
 def test_recursive_static_ck_prunes_wide_columns(spark, monkeypatch):
     # a recursive clause reading a 2-ary prefix of a wide relation must
     # not change results when the unused wide column is pruned from the
@@ -539,33 +492,3 @@ def test_epoch0_reuse_rejects_filtered_base(spark):
             break
         reach |= new
     assert got == sorted(reach)
-
-
-def test_lazy_query_memo_reruns(spark):
-    # r11 session 8: pure-lazy headline builders are memoized per
-    # (session, sf_dir) — same object across calls, distinct across dirs,
-    # and a memo hit still computes from parquet (the memo holds a plan,
-    # never data: a count on the memoized frame launches fresh jobs).
-    from cozo_spark import queries as Q
-
-    sf, sf2 = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    for name in ["agg_basic", "join_multiway", "window_running_sum",
-                 "graph_degree_centrality", "sessionize"]:
-        d1 = Q.QUERIES[name](spark, sf)
-        d2 = Q.QUERIES[name](spark, sf)
-        assert d1 is d2, name
-        assert Q.QUERIES[name](spark, sf2) is not d1, name
-        # two actions on the memoized frame agree and really run
-        assert d1.count() == d2.count()
-
-    # tz-sensitive builders key on the session timezone: flipping it must
-    # MISS the memo (the plan bakes in NTZ->LTZ cast semantics)
-    s1 = Q.QUERIES["sessionize"](spark, sf)
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        s2 = Q.QUERIES["sessionize"](spark, sf)
-        assert s2 is not s1
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
-    assert Q.QUERIES["sessionize"](spark, sf) is s1
