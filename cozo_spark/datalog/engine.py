@@ -4191,9 +4191,10 @@ class CozoDb:
         that plan view — a user inspecting ::explain should see that a
         centrality call will pivot-sample (and with how many pivots), or
         that Louvain will run driver-sequential under the size gate,
-        BEFORE paying for the run. Mirrors the rules' own decisions
-        (graphs.py) at the cost of one count job on the edge input;
-        derived-rule inputs are reported data-dependent, not evaluated."""
+        BEFORE paying for the run. Calls the rules' own decisions
+        (``graphs.centrality_plan``, ``graphs.louvain_plan``) at the cost
+        of one count job on the edge input; derived-rule inputs are
+        reported data-dependent, not evaluated."""
         rn = rule.rule_name
         if rn not in ("BetweennessCentralityDist", "ClosenessCentralityDist",
                       "CommunityDetectionLouvainDist"):
@@ -4230,25 +4231,15 @@ class CozoDb:
                 pass
         a, b = cols[:2]
         if rn == "CommunityDetectionLouvainDist":
-            from cozo_spark.fixed_rules.local_graphs import _MAX_DRIVER_EDGES
-
-            und = _explain_undirected_edges(df, a, b)
-            lt = opts.get("local_threshold")
-            thr = G.LOUVAIN_LOCAL_MAX_EDGES if lt is None else int(lt)
-            local = 0 < und <= min(thr, _MAX_DRIVER_EDGES)
-            return (f"mode={'driver_sequential' if local else 'distributed'}"
-                    f" edges={und} gate={thr}")
-        n = _explain_nodes(df, a, b)
-        sources = opts.get("sources")
-        if sources is None and n > G.AUTO_EXACT_MAX_NODES:
-            k = G._auto_pivots(n)
-        elif sources is None or sources >= n:
-            k = n
-        else:
-            k = max(1, int(sources))
-        mode = f"mode={'exact' if k >= n else 'sampled'}" \
-               f" pivots={min(k, n)} nodes={n}"
-        if k < n:
+            plan = G.louvain_plan(_explain_undirected_edges(df, a, b),
+                                  opts.get("local_threshold"))
+            return (f"mode={plan['mode']} edges={plan['edges']}"
+                    f" gate={plan['gate']}")
+        plan = G.centrality_plan(_explain_nodes(df, a, b),
+                                 opts.get("sources"))
+        mode = (f"mode={plan['mode']} pivots={plan['pivots']}"
+                f" nodes={plan['nodes']}")
+        if plan["mode"] == "sampled":
             # sampled mode's accuracy boundary is part of the PLAN: the
             # BFS/Bellman-Ford cap truncates (exact mode auto-extends
             # instead). last_fixed_rule_info() reports whether it actually

@@ -80,6 +80,34 @@ def _auto_pivots(n: int) -> int:
     return max(1, min(n, int(math.ceil(_AUTO_PIVOT_C * math.log(max(n, 2))))))
 
 
+def centrality_plan(n: int, sources: int | None) -> dict:
+    """Pivot plan of the Dist centrality rules on ``n`` nodes, shared by
+    the rules and ``::explain``: ``sources=None`` is exact up to
+    AUTO_EXACT_MAX_NODES nodes and samples ``_auto_pivots(n)`` above it;
+    ``sources >= n`` is exact, a smaller ``sources`` samples that many."""
+    if sources is None and n > AUTO_EXACT_MAX_NODES:
+        k = _auto_pivots(n)
+    elif sources is None or sources >= n:
+        k = n
+    else:
+        k = max(1, int(sources))
+    return {"mode": "exact" if k >= n else "sampled", "pivots": k,
+            "nodes": n, "auto_sampled": sources is None and k < n}
+
+
+def _centrality_pivots(rule: str, n: int, sources: int | None) -> int:
+    """Record ``rule``'s centrality plan as its run info and return the
+    pivot count, warning when a default call auto-samples."""
+    plan = centrality_plan(n, sources)
+    if plan["auto_sampled"]:
+        _log.warning(
+            "%s: %d nodes > %d — auto-sampling %d pivots (pass sources>=n "
+            "to force exact all-sources)", rule, n, AUTO_EXACT_MAX_NODES,
+            plan["pivots"])
+    _record_run_info(rule=rule, **plan)
+    return plan["pivots"]
+
+
 def _norm_edges(edges: DataFrame, weighted: bool = False) -> DataFrame:
     cols = edges.columns
     if len(cols) < 2:
@@ -96,6 +124,43 @@ def _nodes(e: DataFrame) -> DataFrame:
     # union that embeds — and executes — the edge plan twice (guide §2.4)
     return (e.select(F.explode(F.array("src", "dst")).alias("node"))
             .distinct())
+
+
+def _node_set(e: DataFrame, nodes: DataFrame | None) -> DataFrame:
+    """The edges' endpoints plus the first column of ``nodes`` (the
+    reference's optional vertex relation, which adds isolated nodes)."""
+    base = _nodes(e)
+    if nodes is None:
+        return base
+    extra = nodes.select(F.col(nodes.columns[0]).alias("node"))
+    return base.unionByName(extra).distinct()
+
+
+def _min_merge(cand: DataFrame, best: DataFrame, keys: list[str],
+               val: str) -> tuple[DataFrame, DataFrame, int]:
+    """One meet-min epoch (MeetAggrStore::merge_in, temp_store.rs:182-215):
+    ``(best, delta, n_changed)`` where best keeps the least ``val`` per key
+    and delta holds the keys that changed.
+
+    Candidates and the previous best merge in ONE hash aggregation over
+    their union: best holds one row per key, so the old-tagged min IS the
+    previous value. A key changed when it had no old row or its value
+    differs null-safely (the engine's ``_meet_merge`` rule), so a NULL
+    value that stays NULL is not an improvement. The changed count rides
+    the checkpoint as an observed metric: one action per epoch."""
+    cols = [*keys, val]
+    merged, n = _checkpoint_sum(
+        cand.select(*cols, F.lit(False).alias("_old"))
+        .unionByName(best.select(*cols, F.lit(True).alias("_old")))
+        .groupBy(*keys)
+        .agg(F.min(val).alias(val),
+             F.min(F.when(F.col("_old"), F.col(val))).alias("_prev"),
+             F.max(F.when(F.col("_old"), F.lit(1))).alias("_had"))
+        .select(*cols, (F.col("_had").isNull()
+                        | ~F.col(val).eqNullSafe(F.col("_prev")))
+                .alias("_chg")),
+        "_chg")
+    return merged.drop("_chg"), merged.filter("_chg").drop("_chg"), n
 
 
 # ---------------------------------------------------------------------------
@@ -185,32 +250,7 @@ def shortest_hops(edges: DataFrame, max_hops: int = 64) -> DataFrame:
             delta.join(e, delta.dst == e.esrc)
             .select("src", F.col("edst").alias("dst"), (F.col("hops") + 1).alias("hops"))
         )
-        # The meet-update and the improvement delta in ONE hash aggregation
-        # (MeetAggrStore::merge_in, temp_store.rs:182-215): min over the
-        # candidate∪previous union is min(min(cand), prev), and since the
-        # previous best holds exactly one row per key, min over the
-        # old-tagged rows IS the previous value — so the improved flag
-        # (prev missing, or new min strictly below prev) is computable per
-        # key inside the same aggregate. This replaces the former
-        # cand-groupBy + full-outer SortMergeJoin (one extra exchange plus
-        # two sorts per epoch, guide §2/§3); the union also shuffles RAW
-        # candidate rows exactly once, with map-side partial aggregation.
-        # ONE action still materializes the epoch AND the convergence test
-        # (the improved-row count rides the checkpoint as an observed
-        # metric — _checkpoint_sum).
-        merged, n_imp = _checkpoint_sum(
-            cand.select("src", "dst", "hops", F.lit(False).alias("_old"))
-            .unionByName(best.select("src", "dst", "hops", F.lit(True).alias("_old")))
-            .groupBy("src", "dst")
-            .agg(F.min("hops").alias("hops"),
-                 F.min(F.when(F.col("_old"), F.col("hops"))).alias("_prev"))
-            .select(
-                "src", "dst", "hops",
-                (F.col("_prev").isNull()
-                 | (F.col("hops") < F.col("_prev"))).alias("_imp"),
-            ), "_imp")
-        delta = merged.filter("_imp").drop("_imp")
-        best = merged.drop("_imp")
+        best, delta, n_imp = _min_merge(cand, best, ["src", "dst"], "hops")
         if n_imp == 0:
             break
     _record_run_info(rule="ShortestPathHops", loop="spark", epochs=epochs)
@@ -275,25 +315,7 @@ def shortest_path_costs(edges: DataFrame, starts: DataFrame,
             delta.join(e, delta.node == e.esrc)
             .select("start", F.col("edst").alias("node"), (F.col("cost") + F.col("weight")).alias("cost"))
         )
-        # merged meet-update + improvement delta in ONE hash aggregation
-        # over the candidate∪previous union (same derivation as
-        # shortest_hops: one previous row per key makes the old-tagged min
-        # the previous value); replaces the cand-groupBy + full-outer
-        # SortMergeJoin. The convergence count rides the checkpoint as an
-        # observed metric — one action per epoch, no separate isEmpty job
-        merged, n_imp = _checkpoint_sum(
-            cand.select("start", "node", "cost", F.lit(False).alias("_old"))
-            .unionByName(best.select("start", "node", "cost", F.lit(True).alias("_old")))
-            .groupBy("start", "node")
-            .agg(F.min("cost").alias("cost"),
-                 F.min(F.when(F.col("_old"), F.col("cost"))).alias("_prev"))
-            .select(
-                "start", "node", "cost",
-                (F.col("_prev").isNull()
-                 | (F.col("cost") < F.col("_prev"))).alias("_imp"),
-            ), "_imp")
-        delta = merged.filter("_imp").drop("_imp")
-        best = merged.drop("_imp")
+        best, delta, n_imp = _min_merge(cand, best, ["start", "node"], "cost")
         it += 1
         if n_imp == 0:
             converged = True
@@ -390,45 +412,17 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
                          max_iterations: int = 64) -> DataFrame:
     """(node, component): min-node-id label propagation to fixpoint.
 
-    Large-star/small-star style: per round each node adopts the min label in
-    its closed neighborhood; converges in O(log n) rounds on most graphs.
-    ``nodes`` (the reference's optional second input relation) adds isolated
-    vertices, each its own component.
+    Per round each node adopts the min label in its closed neighborhood:
+    ``_min_reach_label`` over the symmetric edge set, where "min id that
+    can reach v" is v's component label; rounds are bounded by the
+    diameter. ``nodes`` (the reference's optional second input relation)
+    adds isolated vertices, each its own component.
     """
     e = _norm_edges(edges)
     und = _checkpoint(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct())
-    base = _nodes(und)
-    if nodes is not None:
-        extra = nodes.select(F.col(nodes.columns[0]).alias("node"))
-        base = base.unionByName(extra).distinct()
-    labels = _checkpoint(base.select("node", F.col("node").alias("component")))
-    for _ in range(max_iterations):
-        neighbor = (
-            und.join(labels, und.src == labels.node)
-            .select(F.col("dst").alias("node"), F.col("component"))
-        )
-        # a label changes exactly when a strictly smaller neighbor label
-        # arrives. Neighbor votes and current labels merge in ONE hash
-        # aggregation over their union (labels hold one row per node, so
-        # the old-tagged min IS the current label — same derivation as
-        # shortest_hops); this replaces the former neighbor groupBy + left
-        # join (one exchange + one join per round, guide §2/§3). The
-        # changed count rides the checkpoint as an observed metric, so
-        # there is still exactly one action per round (guide §1/§2.4)
-        new_labels, n_chg = _checkpoint_sum(
-            neighbor.select("node", "component", F.lit(False).alias("_old"))
-            .unionByName(labels.select("node", "component", F.lit(True).alias("_old")))
-            .groupBy("node")
-            .agg(F.min("component").alias("component"),
-                 F.min(F.when(F.col("_old"), F.col("component"))).alias("_prev"))
-            .select("node", "component",
-                    (F.col("component") < F.col("_prev")).alias("_chg")),
-            "_chg")
-        labels = new_labels.drop("_chg")
-        if n_chg == 0:
-            break
-    return labels
+    return (_min_reach_label(und, _node_set(und, nodes), max_iterations)
+            .select("node", F.col("label").alias("component")))
 
 
 def strongly_connected_components(edges: DataFrame, nodes: DataFrame | None = None,
@@ -447,21 +441,17 @@ def strongly_connected_components(edges: DataFrame, nodes: DataFrame | None = No
     """
     e = _checkpoint(_norm_edges(edges).distinct())
     remaining_e = e
-    base_n = _nodes(e)
-    if nodes is not None:
-        extra = nodes.select(F.col(nodes.columns[0]).alias("node"))
-        base_n = base_n.unionByName(extra).distinct()
-    remaining_n, n_rem = _checkpoint_count(base_n)
+    remaining_n, n_rem = _checkpoint_count(_node_set(e, nodes))
     parts = []
     for _ in range(max_iterations):
         # the remaining-node count rides each peel's checkpoint action —
         # the former per-round isEmpty() was a whole extra job (guide §1)
         if n_rem == 0:
             break
-        f = _min_reach_label(remaining_e, max_iterations, nodes=remaining_n)
+        f = _min_reach_label(remaining_e, remaining_n, max_iterations)
         b = _min_reach_label(
             remaining_e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            max_iterations, nodes=remaining_n)
+            remaining_n, max_iterations)
         scc = _checkpoint(
             f.alias("f").join(b.alias("b"), "node")
             .filter(F.col("f.label") == F.col("b.label"))
@@ -483,30 +473,18 @@ def strongly_connected_components(edges: DataFrame, nodes: DataFrame | None = No
     return out
 
 
-def _min_reach_label(e: DataFrame, max_iterations: int, nodes: DataFrame | None = None) -> DataFrame:
-    """label(v) = min(v, min over in-neighbors' labels), iterated to fixpoint
-    — i.e. min node id that can reach v. ``nodes`` overrides the vertex set
-    (needed when isolated nodes have no remaining edges)."""
-    base = nodes if nodes is not None else _nodes(e)
-    labels = _checkpoint(base.select("node", F.col("node").alias("label")))
+def _min_reach_label(e: DataFrame, nodes: DataFrame,
+                     max_iterations: int) -> DataFrame:
+    """(node, label): label(v) = min(v, min over in-neighbors' labels),
+    iterated to fixpoint — i.e. min node id that can reach v. ``nodes`` is
+    the vertex set, so isolated nodes keep their own label."""
+    labels = _checkpoint(nodes.select("node", F.col("node").alias("label")))
     for _ in range(max_iterations):
         prop = (
             e.join(labels, e.src == labels.node)
             .select(F.col("dst").alias("node"), "label")
         )
-        # union + one hash aggregation instead of prop groupBy + left join
-        # (see connected_components); changed count observed on the
-        # checkpoint action — one action per round
-        new_labels, n_chg = _checkpoint_sum(
-            prop.select("node", "label", F.lit(False).alias("_old"))
-            .unionByName(labels.select("node", "label", F.lit(True).alias("_old")))
-            .groupBy("node")
-            .agg(F.min("label").alias("label"),
-                 F.min(F.when(F.col("_old"), F.col("label"))).alias("_prev"))
-            .select("node", "label",
-                    (F.col("label") < F.col("_prev")).alias("_chg")),
-            "_chg")
-        labels = new_labels.drop("_chg")
+        labels, _, n_chg = _min_merge(prop, labels, ["node"], "label")
         if n_chg == 0:
             break
     return labels
@@ -612,18 +590,6 @@ def _undirected_canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count_total(edges: DataFrame) -> DataFrame:
-    """Single-row (n_triangles) — ordered wedge join, each triangle counted
-    once. Two shuffle joins; the canonical distributed triangle count."""
-    und = _checkpoint(_undirected_canonical(edges))
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(e2, (F.col("e1.b") == F.col("e2.a")) & (F.col("e1.a") < F.col("e2.a")))
-        .join(e3, (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")))
-    )
-    return tri.agg(F.count("*").alias("n_triangles"))
-
-
 def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """(node, cc, n_triangles, degree) per node — triangles via wedge join,
     cc = 2T / (d(d-1))."""
@@ -710,20 +676,7 @@ def betweenness_centrality_sampled(
     ntype = dict(nodes.dtypes)["node"]
     if n == 0:
         return spark.createDataFrame([], f"node {ntype}, centrality double")
-    if sources is None and n > AUTO_EXACT_MAX_NODES:
-        k = _auto_pivots(n)
-        _log.warning(
-            "BetweennessCentralityDist: %d nodes > %d — auto-sampling %d "
-            "pivots (pass sources>=n to force exact all-sources Brandes)",
-            n, AUTO_EXACT_MAX_NODES, k)
-    elif sources is None or sources >= n:
-        k = n
-    else:
-        k = max(1, int(sources))
-    _record_run_info(rule="BetweennessCentralityDist",
-                     mode="exact" if k >= n else "sampled",
-                     pivots=int(min(k, n)), nodes=int(n),
-                     auto_sampled=bool(sources is None and k < n))
+    k = _centrality_pivots("BetweennessCentralityDist", n, sources)
     if k >= n:
         srcs = nodes
     else:
@@ -792,9 +745,7 @@ def betweenness_centrality_sampled(
                        (F.col("s") == F.col("vs"))
                        & (F.col("w") == F.col("vv")), "left_anti")
                  .limit(1))
-        import threading
-
-        from pyspark import inheritable_thread_target
+        from pyspark import InheritableThread
 
         def _probe_run():
             try:
@@ -802,8 +753,8 @@ def betweenness_centrality_sampled(
             except BaseException as exc:  # re-raised on join
                 probe_res["exc"] = exc
 
-        probe_th = threading.Thread(
-            target=inheritable_thread_target(_probe_run), daemon=True)
+        # the session carries its addTag tags over to the probe's job
+        probe_th = InheritableThread(_probe_run, session=spark, daemon=True)
         probe_th.start()
 
     def _finish_probe() -> bool:
@@ -915,20 +866,7 @@ def closeness_centrality_dist(
     ntype = dict(nodes.dtypes)["node"]
     if n == 0:
         return spark.createDataFrame([], f"node {ntype}, centrality double")
-    if sources is None and n > AUTO_EXACT_MAX_NODES:
-        k = _auto_pivots(n)
-        _log.warning(
-            "ClosenessCentralityDist: %d nodes > %d — auto-sampling %d "
-            "pivots (pass sources>=n to force exact all-sources)",
-            n, AUTO_EXACT_MAX_NODES, k)
-    elif sources is None or sources >= n:
-        k = n
-    else:
-        k = max(1, int(sources))
-    _record_run_info(rule="ClosenessCentralityDist",
-                     mode="exact" if k >= n else "sampled",
-                     pivots=int(min(k, n)), nodes=int(n),
-                     auto_sampled=bool(sources is None and k < n))
+    k = _centrality_pivots("ClosenessCentralityDist", n, sources)
     if k >= n:
         # exact: distances FROM every node; closeness keys on the source.
         # extend_to=n: exact callers never silently truncate (ADVICE r7)
@@ -971,6 +909,20 @@ def closeness_centrality_dist(
 # reference's own single-node semantics. Pass local_threshold=0 to force
 # the distributed path (tests / known-huge inputs).
 LOUVAIN_LOCAL_MAX_EDGES = 1_000_000
+
+
+def louvain_plan(und_edges: int, local_threshold: int | None) -> dict:
+    """Louvain side for ``und_edges`` undirected non-loop edges, shared by
+    the Dist rule and ``::explain``: the driver-side rule runs when the
+    count is positive and within both the gate (``local_threshold``,
+    default LOUVAIN_LOCAL_MAX_EDGES) and the driver rule's edge guard."""
+    from cozo_spark.fixed_rules.local_graphs import _MAX_DRIVER_EDGES
+
+    thr = LOUVAIN_LOCAL_MAX_EDGES if local_threshold is None \
+        else int(local_threshold)
+    local = 0 < und_edges <= min(thr, _MAX_DRIVER_EDGES)
+    return {"mode": "driver_sequential" if local else "distributed",
+            "edges": und_edges, "gate": thr}
 
 
 def louvain_communities(
@@ -1030,28 +982,23 @@ def louvain_communities(
     ntype = dict(g.dtypes)["a"]
     if m2 <= 0:
         return spark.createDataFrame([], f"community {ntype}, node {ntype}")
-    thr = LOUVAIN_LOCAL_MAX_EDGES if local_threshold is None \
-        else int(local_threshold)
-    from cozo_spark.fixed_rules.local_graphs import (
-        _MAX_DRIVER_EDGES, community_detection_louvain)
-    if 0 < n_und_edges <= min(thr, _MAX_DRIVER_EDGES):
+    plan = louvain_plan(n_und_edges, local_threshold)
+    _record_run_info(rule="CommunityDetectionLouvainDist", **plan)
+    if plan["mode"] == "driver_sequential":
+        from cozo_spark.fixed_rules.local_graphs import \
+            community_detection_louvain
+
         _log.info(
             "LouvainDist: %d edges <= gate %d — dispatching the sequential "
             "driver-side rule (the distributed rounds' per-action constant "
             "dominates at this size; pass local_threshold=0 to force the "
-            "distributed path)", n_und_edges, thr)
+            "distributed path)", n_und_edges, plan["gate"])
         # one deduped row per undirected edge (g holds both directions with
         # identical summed weight), so the local rule sees the same graph
         half = g.filter(F.col("a") < F.col("b")).select("a", "b", "w")
-        out = community_detection_louvain(
+        return community_detection_louvain(
             half, max_passes=max_iter, delta=delta, keep_depth=keep_depth,
             max_levels=max_levels, undirected=undirected)
-        _record_run_info(rule="CommunityDetectionLouvainDist",
-                         mode="driver_sequential", edges=n_und_edges,
-                         gate=thr)
-        return out
-    _record_run_info(rule="CommunityDetectionLouvainDist",
-                     mode="distributed", edges=n_und_edges, gate=thr)
     nodes0 = g.select(F.col("a").alias("node")).distinct()
     # node count rides the checkpoint action (guide §1 "one action")
     mapping, n_nodes = _checkpoint_count(

@@ -194,23 +194,6 @@ def find_optimal_lsh_params(
     return opt
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(content_hash, keeper_id, n_copies) per distinct content.
-
-    md5 of the raw content as group key; keeper = min id (deterministic).
-    """
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(F.min(id_col).alias("keeper_id"), F.count("*").alias("n_copies"))
-    )
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct content (min id wins)."""
-    w = W.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-
-
 def _spread_small_input(df: DataFrame, id_col: str) -> DataFrame:
     """Repartition doc-level rows by id when the source has fewer partitions
     than the cluster's parallelism. A single-row-group parquet file scans as

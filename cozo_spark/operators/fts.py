@@ -716,9 +716,3 @@ class FtsIndex:
                      * p.boost).alias(f"ns_{tag}"),
                     F.col("positions").alias(f"np_{tag}"))
         )
-
-
-def _idf(n_docs: int, df_count: int) -> float:
-    import math
-
-    return math.log(1.0 + n_docs / df_count)

@@ -37,10 +37,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine_similarity_col(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def l2_dist_col(a, b):
     return F.sqrt(F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                               F.lit(0.0), lambda acc, v: acc + v))

@@ -77,14 +77,6 @@ def available() -> bool:
     return _load() is not None
 
 
-def decoder_version() -> str:
-    lib = _load()
-    if lib is None:
-        raise NotImplementedError(_load_err)
-    v = lib.WebPGetDecoderVersion()
-    return f"{(v >> 16) & 0xFF}.{(v >> 8) & 0xFF}.{v & 0xFF}"
-
-
 def decode_rgb(content: bytes, alpha: bool = False) -> np.ndarray:
     """Full RIFF/WEBP container (lossy VP8 or lossless VP8L) ->
     (H, W, 3|4) uint8 via the system libwebp."""

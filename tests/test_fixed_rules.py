@@ -436,3 +436,298 @@ def test_pipeline_fixed_rules_pii_repetition_sample_keywords(spark):
     """)
     top = dict(tuple(row) for row in r4.rows)
     assert top[4] == "spam"
+
+
+def test_shortest_path_costs_null_weight_converges(spark):
+    """A cost that stays NULL is not an improvement: the loop stops once
+    no key changes instead of running out its iteration cap."""
+    from cozo_spark.fixed_rules import graphs as G
+
+    e = spark.createDataFrame([(1, 2, None), (2, 3, 1.0), (1, 4, 2.0)],
+                              "src long, dst long, weight double")
+    starts = spark.createDataFrame([(1,)], "n long")
+    G._record_run_info(rule="ShortestPathCosts")
+    rows = _rows(G.shortest_path_costs(e, starts, max_iterations=10))
+    info = G.take_run_info()
+    assert rows == [(1, 1, 0.0), (1, 2, None), (1, 3, None), (1, 4, 2.0)]
+    assert info["truncated"] is False, info
+    assert info["iterations"] <= 3, info
+
+
+def test_connected_components_null_node(spark):
+    from cozo_spark.fixed_rules.graphs import connected_components
+
+    e = spark.createDataFrame([(1, 2), (2, None), (3, 4)],
+                              "src long, dst long")
+    got = {tuple(r) for r in connected_components(e).collect()}
+    assert got == {(1, 1), (2, 1), (3, 3), (4, 3), (None, 1)}
+
+
+@pytest.mark.parametrize("seed", [11, 23, 57])
+def test_scc_matches_components_on_symmetric_graphs(spark, seed):
+    """On a symmetric graph every component is strongly connected, so SCC
+    and ConnectedComponents partition the nodes, isolated ones included,
+    the same way."""
+    import random
+
+    from cozo_spark.fixed_rules.graphs import (connected_components,
+                                               strongly_connected_components)
+
+    rnd = random.Random(seed)
+    n = 14
+    edges = set()
+    for a in range(n):
+        for b in range(a + 1, n):
+            if rnd.random() < 0.12:
+                edges |= {(a, b), (b, a)}
+    nodes = list(range(n)) + [100 + i for i in range(rnd.randint(1, 3))]
+    e = spark.createDataFrame(sorted(edges), "src long, dst long")
+    nd = spark.createDataFrame([(v,) for v in nodes], "node long")
+
+    def parts(df):
+        by_label: dict = {}
+        for node, label in df.collect():
+            by_label.setdefault(label, set()).add(node)
+        return sorted(sorted(p) for p in by_label.values())
+
+    scc = parts(strongly_connected_components(e, nd))
+    cc = parts(connected_components(e, nd))
+    assert scc == cc
+    assert sorted(v for p in cc for v in p) == sorted(nodes)
+
+
+def test_betweenness_probe_thread_keeps_session_tags(spark):
+    """The truncation probe's thread is started with the caller's session,
+    so pyspark copies its tags and does not warn that they are lost."""
+    import warnings
+
+    from cozo_spark.fixed_rules import graphs as G
+
+    edges = spark.createDataFrame(_chain_edges(40), "src long, dst long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        G.betweenness_centrality_sampled(edges, sources=4,
+                                         max_depth=3).collect()
+    info = G.take_run_info()
+    assert info["mode"] == "sampled" and info["truncated"] is True, info
+    msgs = [str(w.message) for w in caught]
+    assert not any("Tags will not be inherited" in m for m in msgs), msgs
+
+
+# ---------------------------------------------------------------------------
+# ::explain planned modes and the run info of the mode-switching rules
+# (the reference's explain table is the plan-visibility surface,
+# db.rs:968-1191)
+# ---------------------------------------------------------------------------
+
+def _db(spark):
+    from cozo_spark.datalog.engine import CozoDb
+
+    return CozoDb(spark)
+
+
+def _explain_rows(db, script):
+    res = db.run_script(f"::explain {{ {script} }}")
+    return [dict(zip(res.headers, r)) for r in res.rows]
+
+
+def _chain_frame(spark, n):
+    # a path graph: diameter n-1, so a small max_depth genuinely truncates
+    return spark.range(n - 1).select(
+        F.col("id").alias("fr"), (F.col("id") + 1).alias("to"))
+
+
+@pytest.mark.parametrize("rule,opts,sample,want", [
+    ("BetweennessCentralityDist", "", False, "exact"),
+    ("BetweennessCentralityDist", "", True, "sampled"),
+    ("ClosenessCentralityDist", "", False, "exact"),
+    ("ClosenessCentralityDist", "", True, "sampled"),
+    ("CommunityDetectionLouvainDist", "", False, "driver_sequential"),
+    ("CommunityDetectionLouvainDist", ", local_threshold: 0", False,
+     "distributed"),
+], ids=["betweenness_exact", "betweenness_sampled", "closeness_exact",
+        "closeness_sampled", "louvain_driver", "louvain_distributed"])
+def test_explain_planned_mode_matches_run(spark, monkeypatch, rule, opts,
+                                          sample, want):
+    """The planned_mode row and the run's last_fixed_rule_info() agree on
+    the mode and on the counts it was decided from."""
+    from cozo_spark.fixed_rules import graphs as G
+
+    if sample:
+        monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 40)
+        monkeypatch.setattr(G, "_AUTO_PIVOT_C", 2.0)  # 9 pivots of 60
+    db = _db(spark)
+    edges = spark.range(180).select(
+        (F.col("id") % 60).alias("fr"),
+        ((F.col("id") * 7 + 1) % 60).alias("to"))
+    db.register_dataframe("eplan", edges, keys=["fr", "to"])
+    script = f"?[a, b] <~ {rule}(*eplan[]{opts})"
+    d = [r for r in _explain_rows(db, script)
+         if r["op"] == "planned_mode"][0]["detail"]
+    planned = dict(kv.split("=", 1) for kv in d.split())
+    db.run_script(script)
+    info = db.last_fixed_rule_info()[rule]
+    keys = ["mode", "edges"] if "Louvain" in rule \
+        else ["mode", "pivots", "nodes"]
+    assert {k: planned[k] for k in keys} == \
+        {k: str(info[k]) for k in keys}, (d, info)
+    assert planned["mode"] == want, d
+
+
+def test_explain_names_centrality_mode_small_graph_exact(spark):
+    db = _db(spark)
+    edges = spark.range(200).select(
+        (F.col("id") % 50).alias("fr"), ((F.col("id") * 3 + 1) % 50).alias("to"))
+    db.register_dataframe("eexp", edges, keys=["fr", "to"])
+    rows = _explain_rows(
+        db, "?[n, c] <~ BetweennessCentralityDist(*eexp[])")
+    modes = [r for r in rows if r["op"] == "planned_mode"]
+    assert len(modes) == 1
+    d = modes[0]["detail"]
+    assert "mode=exact" in d and "pivots=" in d and "nodes=" in d, d
+    # exact on a 50-node graph: pivots == nodes
+    n = int(d.split("nodes=")[1].split()[0])
+    p = int(d.split("pivots=")[1].split()[0])
+    assert p == n
+
+
+def test_explain_names_sampled_mode_above_auto_gate(spark, monkeypatch):
+    from cozo_spark.fixed_rules import graphs as G
+
+    monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 40)  # force the sample
+    db = _db(spark)
+    # need n where c*ln(n) < n (auto-pivots below the node count): 300
+    edges = spark.range(900).select(
+        (F.col("id") % 300).alias("fr"),
+        ((F.col("id") * 7 + 1) % 300).alias("to"))
+    db.register_dataframe("eexp2", edges, keys=["fr", "to"])
+    rows = _explain_rows(
+        db, "?[n, c] <~ ClosenessCentralityDist(*eexp2[])")
+    d = [r for r in rows if r["op"] == "planned_mode"][0]["detail"]
+    assert "mode=sampled" in d, d
+    pivots = int(d.split("pivots=")[1].split()[0])
+    nodes = int(d.split("nodes=")[1].split()[0])
+    assert 0 < pivots < nodes
+    # the explain-planned decision matches what the run actually records
+    db.run_script("?[n, c] <~ ClosenessCentralityDist(*eexp2[])")
+    info = db.last_fixed_rule_info()["ClosenessCentralityDist"]
+    assert info["mode"] == "sampled" and info["pivots"] == pivots
+
+
+def test_explain_names_louvain_gate_side(spark):
+    db = _db(spark)
+    edges = spark.range(60).select(
+        (F.col("id") % 20).alias("fr"), ((F.col("id") + 1) % 20).alias("to"))
+    db.register_dataframe("eexp3", edges, keys=["fr", "to"])
+    rows = _explain_rows(
+        db, "?[c, n] <~ CommunityDetectionLouvainDist(*eexp3[])")
+    d = [r for r in rows if r["op"] == "planned_mode"][0]["detail"]
+    assert "mode=driver_sequential" in d and "gate=" in d, d
+    # forcing the distributed path flips the planned side
+    rows2 = _explain_rows(
+        db, "?[c, n] <~ CommunityDetectionLouvainDist(*eexp3[], "
+            "local_threshold: 0)")
+    d2 = [r for r in rows2 if r["op"] == "planned_mode"][0]["detail"]
+    assert "mode=distributed" in d2, d2
+
+
+def test_explain_derived_input_reports_data_dependent(spark):
+    db = _db(spark)
+    edges = spark.range(20).select(
+        (F.col("id") % 10).alias("fr"), ((F.col("id") + 1) % 10).alias("to"))
+    db.register_dataframe("eexp4", edges, keys=["fr", "to"])
+    rows = _explain_rows(db, """
+    e[a, b] := *eexp4{fr: a, to: b}, a < 5
+    ?[n, c] <~ BetweennessCentralityDist(e[])
+    """)
+    d = [r for r in rows if r["op"] == "planned_mode"][0]["detail"]
+    assert "data-dependent" in d, d
+
+
+def test_explain_sampled_mode_names_accuracy_cap(spark, monkeypatch):
+    from cozo_spark.fixed_rules import graphs as G
+
+    monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 40)
+    db = _db(spark)
+    db.register_dataframe("cap_e", _chain_frame(spark, 300),
+                          keys=["fr", "to"])
+    d = [r for r in _explain_rows(
+        db, "?[n, c] <~ BetweennessCentralityDist(*cap_e[], max_depth: 7)")
+        if r["op"] == "planned_mode"][0]["detail"]
+    assert "mode=sampled" in d and "accuracy_cap=max_depth:7" in d, d
+    d2 = [r for r in _explain_rows(
+        db, "?[n, c] <~ ClosenessCentralityDist(*cap_e[])")
+        if r["op"] == "planned_mode"][0]["detail"]
+    assert "accuracy_cap=max_iterations:64" in d2, d2
+
+
+def test_explain_exact_mode_has_no_accuracy_cap(spark):
+    db = _db(spark)
+    db.register_dataframe("cap_e2", _chain_frame(spark, 30),
+                          keys=["fr", "to"])
+    d = [r for r in _explain_rows(
+        db, "?[n, c] <~ BetweennessCentralityDist(*cap_e2[])")
+        if r["op"] == "planned_mode"][0]["detail"]
+    assert "mode=exact" in d and "accuracy_cap" not in d, d
+
+
+def test_betweenness_truncation_hit_lands_in_run_info(spark, monkeypatch):
+    from cozo_spark.fixed_rules import graphs as G
+
+    monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 40)
+    db = _db(spark)
+    db.register_dataframe("cap_e3", _chain_frame(spark, 300),
+                          keys=["fr", "to"])
+    db.run_script(
+        "?[n, c] <~ BetweennessCentralityDist(*cap_e3[], max_depth: 5)")
+    info = db.last_fixed_rule_info()["BetweennessCentralityDist"]
+    assert info["mode"] == "sampled"
+    assert info["truncated"] is True, info
+    assert info["depth_reached"] == 5 and info["max_depth"] == 5
+    assert info["auto_extended"] is False
+
+
+def test_betweenness_no_truncation_reports_false(spark, monkeypatch):
+    from cozo_spark.fixed_rules import graphs as G
+
+    monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 40)
+    db = _db(spark)
+    # star graph: diameter 2, far under the cap
+    e = spark.range(300).select(F.lit(0).alias("fr"),
+                               (F.col("id") + 1).alias("to"))
+    db.register_dataframe("cap_e4", e, keys=["fr", "to"])
+    db.run_script(
+        "?[n, c] <~ BetweennessCentralityDist(*cap_e4[], undirected: true)")
+    info = db.last_fixed_rule_info()["BetweennessCentralityDist"]
+    assert info["mode"] == "sampled"
+    assert info["truncated"] is False, info
+    assert info["depth_reached"] <= 2
+
+
+def test_closeness_sampled_cap_lands_in_run_info(spark, monkeypatch):
+    from cozo_spark.fixed_rules import graphs as G
+
+    monkeypatch.setattr(G, "AUTO_EXACT_MAX_NODES", 40)
+    db = _db(spark)
+    db.register_dataframe("cap_e5", _chain_frame(spark, 300),
+                          keys=["fr", "to"])
+    db.run_script(
+        "?[n, c] <~ ClosenessCentralityDist(*cap_e5[], max_iterations: 4)")
+    info = db.last_fixed_rule_info()["ClosenessCentralityDist"]
+    assert info["mode"] == "sampled"
+    assert info["truncated"] is True, info
+    assert info["iterations"] == 4 and info["iteration_cap"] == 4
+
+
+def test_closeness_exact_auto_extend_reported(spark):
+    db = _db(spark)
+    # exact mode on a chain longer than the iteration cap: the cap
+    # auto-extends (never silently truncates) and says so in run info
+    db.register_dataframe("cap_e6", _chain_frame(spark, 12),
+                          keys=["fr", "to"])
+    db.run_script(
+        "?[n, c] <~ ClosenessCentralityDist(*cap_e6[], max_iterations: 4)")
+    info = db.last_fixed_rule_info()["ClosenessCentralityDist"]
+    assert info["mode"] == "exact"
+    assert info["truncated"] is False, info
+    assert info["auto_extended"] is True and info["iterations"] > 4

@@ -854,3 +854,27 @@ def test_streaming_state_conf_window(spark, tmp_path):
     except Exception:
         now = None
     assert now == saved_provider  # restored (or unset again)
+
+
+def test_streaming_state_conf_changelog_sets_and_restores(spark):
+    """changelog=True selects the RocksDB provider + changelog
+    checkpointing inside the window and restores the session confs after."""
+    from cozo_spark.streaming.stateful import streaming_state_conf
+
+    prov_key = "spark.sql.streaming.stateStore.providerClass"
+    cl_key = ("spark.sql.streaming.stateStore.rocksdb."
+              "changelogCheckpointing.enabled")
+
+    def _get(k):
+        try:
+            return spark.conf.get(k)
+        except Exception:
+            return None
+
+    before = (_get(prov_key), _get(cl_key), _get("spark.sql.shuffle.partitions"))
+    with streaming_state_conf(spark, state_partitions=8, changelog=True):
+        assert "RocksDBStateStoreProvider" in spark.conf.get(prov_key)
+        assert spark.conf.get(cl_key) == "true"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert (_get(prov_key), _get(cl_key),
+            _get("spark.sql.shuffle.partitions")) == before
