@@ -2298,14 +2298,15 @@ class CozoDb:
             name = name[len("__winfuse_"):].rsplit("_", 1)[0]
         return getattr(self, "_rule_unique", {}).get(name)
 
-    def _search(self, rel_name: str, idx_name: str, opts: dict):
+    def _search(self, rel_name: str, idx_name: str, opts: dict,
+                columns: list):
         from cozo_spark.operators import indices as IX
 
         self._note_read(rel_name)
         rel = self.relations.get(rel_name)
         if rel is None:
             raise QueryError(f"relation {rel_name!r} not found")
-        return IX.search(self, rel, idx_name, opts)
+        return IX.search(self, rel, idx_name, opts, columns)
 
     def _resolve_relation(self, name: str) -> Optional[DataFrame]:
         if name.startswith("_"):
@@ -4310,7 +4311,10 @@ class MultiTransaction:
             n: StoredRelation(r.name, list(r.keys), list(r.non_keys), r.df,
                               r.access_level, list(r.put_triggers),
                               list(r.rm_triggers), list(r.replace_triggers),
-                              dict(r.indices),
+                              # own IndexDefs: a mutation here patches the
+                              # index artifact, which an abort must not
+                              # leave behind in the base relation
+                              {n: copy.copy(d) for n, d in r.indices.items()},
                               # preserve key trust — defaulting to True here
                               # would let the FD distinct-elision fire on an
                               # untrusted registered frame inside the txn

@@ -422,8 +422,9 @@ class ClauseTranslator:
         # (may be a narrower contract than key_resolver — e.g. frames
         # registered without explicit keys make no uniqueness promise)
         self.trusted_key_resolver = trusted_key_resolver or (lambda name: None)
-        # search_resolver(rel, idx, opts) -> DataFrame: executes ~rel:idx
-        # search atoms (HNSW/FTS/LSH, engine-provided)
+        # search_resolver(rel, idx, opts, columns) -> (DataFrame, key_unique):
+        # executes ~rel:idx search atoms (HNSW/FTS/LSH, engine-provided;
+        # see operators.indices.search)
         self.search_resolver = search_resolver
         # rule_unique_resolver(name) -> frozenset of column POSITIONS forming
         # a unique key of a rule store (engine-provided), or None
@@ -618,22 +619,22 @@ class ClauseTranslator:
         out = base
         for f in filters:
             out = out.filter(f)
-        self._frame_keys = self._named_keys(atom)
+        self._frame_keys = ([] if atom.validity is not None
+                            else self._named_keys(atom.name, atom.pairs))
         return out.select(*sel) if sel else out.select(F.lit(1).alias("__exists__")).limit(1)
 
-    def _named_keys(self, atom: NamedRelApply) -> list:
-        """Unique-key var sets of a named atom's projected frame: every PK
-        column must be either const-filtered or bound to a variable."""
-        if atom.validity is not None:
-            return []
-        keynames = self.trusted_key_resolver(atom.name)
+    def _named_keys(self, name: str, pairs: dict) -> list:
+        """Unique-key var sets of a frame whose rows are unique on relation
+        ``name``'s trusted PK, projected through the atom's ``pairs``: every
+        PK column must be either const-filtered or bound to a variable."""
+        keynames = self.trusted_key_resolver(name)
         if keynames is None:
             return []
         keyvars = set()
         for k in keynames:
-            if k not in atom.pairs:
+            if k not in pairs:
                 return []
-            e = atom.pairs[k]
+            e = pairs[k]
             if e is None:
                 keyvars.add(k)
             elif isinstance(e, Var):
@@ -666,7 +667,12 @@ class ClauseTranslator:
                 opts[key] = e
             else:
                 raise QueryError(f"search option {key!r} must be constant")
-        base = self.search_resolver(atom.rel, atom.idx, opts)
+        # relation columns the atom reads: the search joins back to the
+        # relation only when one of them is not its key
+        columns = [c for c, e in atom.pairs.items()
+                   if not (isinstance(e, Var) and e.name == "_")]
+        base, key_unique = self.search_resolver(atom.rel, atom.idx, opts,
+                                                columns)
         sel = []
         filters = []
         for col, e in atom.pairs.items():
@@ -692,7 +698,10 @@ class ClauseTranslator:
         out = base
         for f in filters:
             out = out.filter(f)
-        self._frame_keys = []
+        # one row per document (FTS, LSH): the relation's key identifies a
+        # row, so the entry rule's distinct goes as for a *rel{...} atom
+        self._frame_keys = (self._named_keys(atom.rel, atom.pairs)
+                            if key_unique else [])
         return out.select(*sel) if sel else out
 
     def _as_of(self, base: DataFrame, validity_expr, rel_name: str = "") -> DataFrame:

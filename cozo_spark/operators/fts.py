@@ -404,6 +404,17 @@ def build_fts_index(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+def with_doc_freq(index: DataFrame) -> DataFrame:
+    """The index's (term, doc_id, tf, positions) rows plus ``doc_freq``, the
+    number of documents holding the term. Rows are unique on (term, doc_id),
+    so count(*) per term is that number; stored on every posting row, a
+    search scores from the rows its term filter reads, with no join."""
+    from pyspark.sql import Window as W
+
+    return (index.select("term", "doc_id", "tf", "positions")
+            .withColumn("doc_freq", F.count("*").over(W.partitionBy("term"))))
+
+
 # --- query AST (fts/ast.rs; grammar cozoscript.pest fts_* rules) ----------------
 
 
@@ -524,36 +535,30 @@ class FtsIndex:
     """A built FTS index + the stats needed for scoring."""
 
     def __init__(self, index_df: DataFrame, n_docs: int,
-                 tokenizer: str = "Simple", filters: tuple = ("Lowercase",),
-                 term_df: DataFrame | None = None):
+                 tokenizer: str = "Simple", filters: tuple = ("Lowercase",)):
+        # index_df: (term, doc_id, tf, positions, doc_freq) — see with_doc_freq
         self.df = index_df
         self.n_docs = n_docs
         self.tokenizer = tokenizer
         self.filters = filters
-        # (term, doc_freq): document frequency is a static property of the
-        # index — precomputed at build so scoring joins against it instead of
-        # issuing one driver collect() per query term (index rows are unique
-        # on (term, doc_id), so count(*) per term IS the doc frequency)
-        self.term_df = (term_df if term_df is not None
-                        else index_df.groupBy("term")
-                        .agg(F.count("*").alias("doc_freq")))
 
     @classmethod
     def build(cls, df: DataFrame, text_col: str, id_col: str,
               tokenizer: str = "Simple", filters: tuple = ("Lowercase",)) -> "FtsIndex":
         from cozo_spark.datalog.fixpoint import _checkpoint
 
-        idx = _checkpoint(build_fts_index(df, text_col, id_col, tokenizer, filters))
-        term_df = _checkpoint(idx.groupBy("term").agg(F.count("*").alias("doc_freq")))
-        return cls(idx, df.count(), tokenizer, filters, term_df=term_df)
+        idx = _checkpoint(with_doc_freq(
+            build_fts_index(df, text_col, id_col, tokenizer, filters)))
+        return cls(idx, df.count(), tokenizer, filters)
 
     def search(self, query: str, k: int = 10, score_kind: str = "tf_idf",
                candidates: DataFrame | None = None) -> DataFrame:
         """(doc_id, score) top-k by TF-IDF or plain TF (fts/indexing.rs
-        scoring; score_kind param of FtsSearch, data/program.rs:1283-1301).
+        scoring; score_kind param of FtsSearch, data/program.rs:1283-1301),
+        at most one row per doc_id.
         ``candidates`` (doc_id frame) restricts the result BEFORE top-k —
         the filter: option's semantics."""
-        self._score_kind = str(score_kind).lower().replace("-", "_")
+        tf_only = str(score_kind).lower().replace("-", "_") == "tf"
         ast = parse_fts_query(query)
         ast = self._filter_terms(ast)
         if ast is None:
@@ -562,9 +567,9 @@ class FtsIndex:
             # (fts/indexing.rs:257-260)
             return (self.df.select("doc_id")
                     .withColumn("score", F.lit(0.0)).limit(0))
-        scored = self._eval(ast)
+        scored = self._eval(ast, tf_only)
         if candidates is not None:
-            scored = scored.join(candidates, "doc_id")
+            scored = scored.join(candidates, "doc_id", "left_semi")
         return (
             scored.orderBy(F.col("score").desc(), F.col("doc_id"))
             .limit(k)
@@ -623,15 +628,15 @@ class FtsIndex:
             return FtsBool(node.op, kids)
         return node
 
-    def _idf_col(self, dfc) -> F.Column:
-        """idf = ln(1 + N/df) as a Column — no driver round-trips; df is a
-        static index property joined from the precomputed term_df frame."""
-        if getattr(self, "_score_kind", "tf_idf") == "tf":
+    def _idf_col(self, dfc, tf_only: bool) -> F.Column:
+        """idf = ln(1 + N/df) as a Column (1.0 for plain TF scoring); df is
+        the posting rows' doc_freq, so scoring needs no join or action."""
+        if tf_only:
             return F.lit(1.0)
         return F.log(F.lit(1.0) + F.lit(float(self.n_docs)) / F.greatest(dfc, F.lit(1)))
 
     # posting set for one phrase, scored
-    def _phrase_postings(self, p: FtsPhrase) -> DataFrame:
+    def _phrase_postings(self, p: FtsPhrase, tf_only: bool) -> DataFrame:
         idx = self.df
         if not p.terms:
             raise ValueError("empty phrase")
@@ -643,13 +648,12 @@ class FtsIndex:
             dfc = grouped.agg(F.count("*").alias("__dfc"))
             return (grouped.crossJoin(dfc)
                     .select("doc_id",
-                            (F.col("__tfs") * self._idf_col(F.col("__dfc"))
+                            (F.col("__tfs") * self._idf_col(F.col("__dfc"), tf_only)
                              * p.boost).alias("score")))
         parts = []
         for i, t in enumerate(p.terms):
             parts.append(
                 idx.filter(F.col("term") == t)
-                .join(self.term_df, "term")  # term==t infers into term_df scan
                 .select("doc_id", F.col("tf").alias(f"tf_{i}"),
                         F.col("positions").alias(f"pos_{i}"),
                         F.col("doc_freq").alias(f"df_{i}")))
@@ -663,18 +667,18 @@ class FtsIndex:
             cur = cur.filter(adj)
         score = None
         for i, t in enumerate(p.terms):
-            s = F.col(f"tf_{i}") * self._idf_col(F.col(f"df_{i}"))
+            s = F.col(f"tf_{i}") * self._idf_col(F.col(f"df_{i}"), tf_only)
             score = s if score is None else score + s
         return cur.select("doc_id", (score * p.boost).alias("score"))
 
-    def _eval(self, node) -> DataFrame:
+    def _eval(self, node, tf_only: bool) -> DataFrame:
         if isinstance(node, FtsPhrase):
-            return self._phrase_postings(node)
+            return self._phrase_postings(node, tf_only)
         if isinstance(node, FtsNear):
-            return self._eval_near(node)
+            return self._eval_near(node, tf_only)
         if isinstance(node, FtsBool):
-            l = self._eval(node.children[0])
-            r = self._eval(node.children[1])
+            l = self._eval(node.children[0], tf_only)
+            r = self._eval(node.children[1], tf_only)
             if node.op == "and":
                 return (l.withColumnRenamed("score", "s1")
                         .join(r.withColumnRenamed("score", "s2"), "doc_id")
@@ -686,12 +690,10 @@ class FtsIndex:
                 return l.join(r.select("doc_id"), "doc_id", "left_anti")
         raise ValueError(f"bad FTS node {node!r}")
 
-    def _eval_near(self, node: FtsNear) -> DataFrame:
+    def _eval_near(self, node: FtsNear, tf_only: bool) -> DataFrame:
         # all phrases present, min pairwise distance <= node.distance
-        parts = []
-        for i, p in enumerate(node.phrases):
-            posts = self._phrase_postings_with_positions(p, i)
-            parts.append(posts)
+        parts = [self._phrase_postings_with_positions(p, i, tf_only)
+                 for i, p in enumerate(node.phrases)]
         cur = parts[0]
         for i, nxt in enumerate(parts[1:], start=1):
             cur = cur.join(nxt, "doc_id")
@@ -706,13 +708,13 @@ class FtsIndex:
             score = s if score is None else score + s
         return cur.select("doc_id", score.alias("score"))
 
-    def _phrase_postings_with_positions(self, p: FtsPhrase, tag: int) -> DataFrame:
+    def _phrase_postings_with_positions(self, p: FtsPhrase, tag: int,
+                                        tf_only: bool) -> DataFrame:
         t = p.terms[0]
         return (
             self.df.filter(F.col("term") == t)
-            .join(self.term_df, "term")
             .select("doc_id",
-                    (F.col("tf") * self._idf_col(F.col("doc_freq"))
+                    (F.col("tf") * self._idf_col(F.col("doc_freq"), tf_only)
                      * p.boost).alias(f"ns_{tag}"),
                     F.col("positions").alias(f"np_{tag}"))
         )

@@ -72,7 +72,8 @@ class _IncrementalUnsupported(Exception):
 
 def _fts_apply(rel, idx: IndexDef, kind: str, rows: DataFrame):
     from cozo_spark.datalog.fixpoint import _checkpoint
-    from cozo_spark.operators.fts import FtsIndex, build_fts_index
+    from cozo_spark.operators.fts import (FtsIndex, build_fts_index,
+                                          with_doc_freq)
 
     art = idx.artifact
     key = rel.key_names[0]
@@ -87,11 +88,9 @@ def _fts_apply(rel, idx: IndexDef, kind: str, rows: DataFrame):
         # columns; NULL means keep-old after the coalesce merge)
         fresh = rel.df.join(ids.withColumnRenamed("doc_id", key), key, "left_semi")
         add = build_fts_index(fresh, extractor, key, art.tokenizer, art.filters)
-        base = base.unionByName(add)
-    new_df = _checkpoint(base)
-    term_df = _checkpoint(new_df.groupBy("term").agg(F.count("*").alias("doc_freq")))
-    return FtsIndex(new_df, rel.df.count(), art.tokenizer, art.filters,
-                    term_df=term_df)
+        base = base.drop("doc_freq").unionByName(add)
+    return FtsIndex(_checkpoint(with_doc_freq(base)), rel.df.count(),
+                    art.tokenizer, art.filters)
 
 
 def _lsh_apply(rel, idx: IndexDef, kind: str, rows: DataFrame):
@@ -219,12 +218,20 @@ def _hnsw_field(idx: IndexDef) -> str:
     return fields
 
 
-def search(db, rel, idx_name: str, opts: dict) -> DataFrame:
-    """Execute a `~rel:idx{...}` search; returns rel's rows (+ score/dist col
-    named per bind_* option) for the top-k matches."""
+def search(db, rel, idx_name: str, opts: dict,
+           columns: list) -> tuple[DataFrame, bool]:
+    """Execute a `~rel:idx{...}` search for the top-k matches.
+
+    Returns ``(frame, key_unique)``. The frame holds the relation's key,
+    the ``columns`` of the relation the atom reads, and the score/distance
+    columns named per the bind_* options; FTS and LSH read the relation
+    only when ``columns`` name more than its key. ``key_unique`` says the
+    frame has at most one row per key whenever the relation does (FTS and
+    LSH score each document once; HNSW yields a row per indexed field)."""
     idx = ensure_artifact(db, rel, idx_name)
     key = rel.key_names[0]
     k = int(opts.get("k", 10))
+    key_only = set(columns) <= {key}
     if idx.kind == "fts":
         candidates = None
         if opts.get("filter") is not None:
@@ -236,10 +243,9 @@ def search(db, rel, idx_name: str, opts: dict) -> DataFrame:
             str(opts["query"]), k=k,
             score_kind=str(opts.get("score_kind", "tf_idf")),
             candidates=candidates)
-        score_name = str(opts.get("bind_score", "score"))
-        out = (rel.df.join(posting.withColumnRenamed("doc_id", key), key)
-               .withColumnRenamed("score", score_name))
-        return out
+        out = (posting.withColumnRenamed("doc_id", key)
+               .withColumnRenamed("score", str(opts.get("bind_score", "score"))))
+        return (out if key_only else rel.df.join(out, key)), True
     if idx.kind == "hnsw":
         # every indexed FIELD of every row is a point (hnsw.rs: multi-field
         # indices insert one graph node per field); bind_field/bind_field_idx
@@ -289,15 +295,18 @@ def search(db, rel, idx_name: str, opts: dict) -> DataFrame:
             scored = scored.withColumn(str(opts["bind_field_idx"]), F.col("__fidx"))
         return (scored.orderBy(F.col(dist_name).asc(), F.col(key).asc(),
                                F.col("__fidx").asc())
-                .drop("__fld", "__fidx").limit(k))
+                .drop("__fld", "__fidx").limit(k)), False
     if idx.kind == "lsh":
-        return _lsh_search(db, rel, idx, str(opts["query"]), k,
-                           filter_expr=opts.get("filter"))
+        matches = _lsh_search(db, rel, idx, str(opts["query"]), k,
+                              filter_expr=opts.get("filter"))
+        return (matches if key_only else rel.df.join(matches, key)), True
     raise KeyError(f"index kind {idx.kind!r} is not searchable")
 
 
 def _lsh_search(db, rel, idx: IndexDef, query_text: str, k: int,
                 filter_expr=None) -> DataFrame:
+    """(key, est_jaccard) of the top-k documents whose MinHash signature
+    shares a band with the probe's."""
     from cozo_spark.operators.dedup import minhash_signatures
 
     art = idx.artifact
@@ -338,9 +347,9 @@ def _lsh_search(db, rel, idx: IndexDef, query_text: str, k: int,
         from cozo_spark.datalog.translate import _df_typer, compile_expr
 
         fcol = compile_expr(filter_expr, set(rel.df.columns), _df_typer(rel.df))
-        matches = matches.join(rel.df.filter(fcol).select(key), key)
-    matches = matches.orderBy(F.col("est_jaccard").desc(), F.col(key)).limit(k)
-    return rel.df.join(matches, key)
+        matches = matches.join(rel.df.filter(fcol).select(key), key,
+                               "left_semi")
+    return matches.orderBy(F.col("est_jaccard").desc(), F.col(key)).limit(k)
 
 
 def hnsw_graph_df(db, rel, idx_name: str) -> DataFrame:

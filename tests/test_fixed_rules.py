@@ -514,6 +514,29 @@ def test_betweenness_probe_thread_keeps_session_tags(spark):
     assert not any("Tags will not be inherited" in m for m in msgs), msgs
 
 
+def test_betweenness_probe_thread_leaves_no_open_socket(spark):
+    """The truncation probe thread's py4j connection (pinned-thread mode
+    gives each Python thread its own) is released when the thread ends:
+    a truncated call leaves no ResourceWarning after a garbage collection.
+    The call is consumed with count(): pyspark's own collect() leaves its
+    result socket to the garbage collector on every call, probe or not."""
+    import gc
+    import warnings
+
+    from cozo_spark.fixed_rules import graphs as G
+
+    edges = spark.createDataFrame(_chain_edges(40), "src long, dst long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        G.betweenness_centrality_sampled(edges, sources=4,
+                                         max_depth=3).count()
+        assert G.take_run_info()["truncated"] is True
+        gc.collect()
+    leaks = [str(w.message) for w in caught
+             if issubclass(w.category, ResourceWarning)]
+    assert not leaks, leaks
+
+
 # ---------------------------------------------------------------------------
 # ::explain planned modes and the run info of the mode-switching rules
 # (the reference's explain table is the plan-visibility surface,

@@ -416,15 +416,163 @@ def test_fts_filter_spec_list_args(spark):
 
 
 def test_fts_no_driver_actions_per_term(spark):
-    """Scoring joins the precomputed (term, doc_freq) frame instead of
-    collect()-ing a df count per query term: building the scored plan must
-    trigger zero Spark jobs."""
+    """Scoring reads each term's doc_freq from its posting rows, stored
+    there when the index is built, instead of collect()-ing a df count per
+    query term: building the scored plan must trigger zero Spark jobs."""
     idx = _stop_idx(spark)
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
     _plan = idx.search("quick AND fox", k=5)  # build only, no action
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before
+
+
+def test_fts_score_kind_is_per_call_across_threads(spark):
+    """score_kind belongs to one search call: threads that search one index
+    at once, alternating 'tf' and 'tf_idf', each get their own kind's
+    scores (the kind was once instance state that a concurrent call could
+    overwrite while another built its plan)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    idx = _stop_idx(spark)
+    query = "quick OR lazy OR apples"
+
+    def scores(kind):
+        return sorted((r["doc_id"], round(r["score"], 9))
+                      for r in idx.search(query, k=10,
+                                          score_kind=kind).collect())
+
+    want = {kind: scores(kind) for kind in ("tf", "tf_idf")}
+    assert want["tf"] != want["tf_idf"]
+    kinds = ["tf", "tf_idf"] * 8
+    with ThreadPoolExecutor(4) as pool:
+        got = list(pool.map(scores, kinds))
+    assert [g == want[k] for g, k in zip(got, kinds)] == [True] * len(kinds)
+
+
+def test_fts_binding_a_non_key_column_reads_the_relation(db):
+    """A search atom that binds a column other than the key joins the
+    relation back for it; one that binds only the key reads just the
+    index."""
+    r = db.run_script("""
+    ?[id, content, s] := ~doc:ft{id, content | query: 'quick', k: 10,
+                                 bind_score: 's'}
+    """)
+    text = {1: "the quick brown fox jumps over the lazy dog",
+            4: "a quick movement of the enemy will jeopardize five gunboats",
+            5: "quick zephyrs blow vexing daft jim"}
+    assert sorted((row[0], row[1]) for row in r.rows) == sorted(text.items())
+    keyed = db.run_script(
+        "?[id, s] := ~doc:ft{id | query: 'quick', k: 10, bind_score: 's'}")
+    assert sorted(map(tuple, keyed.rows)) == sorted((row[0], row[2])
+                                                    for row in r.rows)
+    plan = db.run_script_df(
+        "?[id, s] := ~doc:ft{id | query: 'quick', k: 10, bind_score: 's'}"
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert "content" not in plan and "Join" not in plan, plan
+
+
+def test_lsh_binding_a_non_key_column_reads_the_relation(db):
+    """LSH search: the relation is joined back only for a non-key column,
+    and the key-only frame gives the same ids."""
+    q = "the quick brown fox jumped over the lazy dog"
+    full = db.run_script(
+        f"?[id, content] := ~doc:near{{id, content | query: '{q}', k: 5}}")
+    assert any(row[1].startswith("the quick brown fox") for row in full.rows)
+    script = f"?[id] := ~doc:near{{id | query: '{q}', k: 5}}"
+    keyed = db.run_script(script)
+    assert sorted(row[0] for row in keyed.rows) == sorted(
+        row[0] for row in full.rows)
+    plan = db.run_script_df(script)._jdf.queryExecution().optimizedPlan()
+    assert "content" not in plan.toString(), plan.toString()
+
+
+def test_search_frames_claim_the_key_only_when_trusted(spark):
+    """FTS and LSH frames hold one row per document, so over a relation
+    with trusted keys the entry rule needs no distinct. A relation
+    registered without keys makes no uniqueness promise: duplicate rows
+    joined back for a non-key column are still deduplicated."""
+    from cozo_spark.datalog.engine import CozoDb
+    from tests.test_plan_quality import _n_aggregates
+
+    rows = [(1, "red apple pie"), (1, "red apple pie"), (2, "green apple"),
+            (3, "blue sky")]
+    d = CozoDb(spark)
+    d.register_dataframe("kd", spark.createDataFrame(
+        rows[1:], "id long, t string"), keys=["id"])
+    d.register_dataframe("ud", spark.createDataFrame(
+        rows, "id long, t string"))
+    for rel in ("kd", "ud"):
+        d.run_script(f"::fts create {rel}:ft {{extractor: 't'}}")
+        d.run_script(f"::lsh create {rel}:near {{extractor: 't', n_perm: 32, "
+                     "n_gram: 2}")
+    fts = "?[id, t] := ~{rel}:ft{{id, t | query: 'apple', k: 10}}"
+    lsh = "?[id] := ~{rel}:near{{id | query: 'red apple pie', k: 10}}"
+    n_aggs = {}
+    for rel in ("kd", "ud"):
+        out = d.run_script_df(fts.format(rel=rel))
+        assert sorted(map(tuple, out.collect())) == [
+            (1, "red apple pie"), (2, "green apple")]
+        lsh_out = d.run_script_df(lsh.format(rel=rel))
+        assert 1 in {r[0] for r in lsh_out.collect()}
+        n_aggs[rel] = (_n_aggregates(out), _n_aggregates(lsh_out))
+    # the LSH plan aggregates its probe and candidates in both relations;
+    # the untrusted one adds the entry rule's distinct to either search
+    assert n_aggs["kd"][0] == 0, n_aggs
+    assert n_aggs["ud"] == (1, n_aggs["kd"][1] + 1), n_aggs
+
+
+def test_fts_incremental_doc_freq_matches_a_fresh_build(spark):
+    """After a :put that adds documents holding a term and a :rm of some,
+    the patched index carries the same doc_freq, and so the same scores,
+    as an index built from scratch over the final rows."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    def make(rows):
+        d = CozoDb(spark)
+        d.run_script(":create fd {id: Int => t: String}")
+        d.run_script(f"?[id, t] <- {rows!r} :put fd {{id => t}}")
+        d.run_script("::fts create fd:ft {extractor: 't'}")
+        return d
+
+    script = "?[id, s] := ~fd:ft{id | query: 'alpha OR beta', k: 10, bind_score: s}"
+    first = [[1, "alpha beta"], [2, "alpha gamma"], [3, "delta"]]
+    d = make(first)
+    assert len(d.run_script(script).rows) == 2  # builds the index
+    d.run_script("?[id, t] <- [[4, 'alpha alpha'], [5, 'beta epsilon'], "
+                 "[3, 'alpha delta']] :put fd {id => t}")
+    d.run_script("?[id] <- [[2]] :rm fd {id}")
+    fresh = make([[1, "alpha beta"], [3, "alpha delta"], [4, "alpha alpha"],
+                  [5, "beta epsilon"]])
+
+    def index_rows(db):
+        art = db.relations["fd"].indices["ft"].artifact
+        return sorted(tuple(r) for r in art.df.select(
+            "term", "doc_id", "tf", "doc_freq").collect())
+
+    got = sorted(map(tuple, d.run_script(script).rows))
+    want = sorted(map(tuple, fresh.run_script(script).rows))
+    assert [r[0] for r in got] == [1, 3, 4, 5]
+    assert got == want
+    assert index_rows(d) == index_rows(fresh)
+
+
+def test_fts_aborted_transaction_leaves_the_index(spark):
+    """A write inside a transaction patches the transaction's own copy of
+    the index: after an abort the base relation's searches do not see it."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    d = CozoDb(spark)
+    d.run_script(":create tx {id: Int => t: String}")
+    d.run_script("?[id, t] <- [[1, 'alpha']] :put tx {id => t}")
+    d.run_script("::fts create tx:ft {extractor: 't'}")
+    script = "?[id] := ~tx:ft{id | query: 'alpha', k: 5}"
+    assert d.run_script(script).rows == [[1]]
+    txn = d.multi_transaction(write=True)
+    txn.run_script("?[id, t] <- [[2, 'alpha beta']] :put tx {id => t}")
+    assert sorted(r[0] for r in txn.run_script(script).rows) == [1, 2]
+    txn.abort()
+    assert d.run_script(script).rows == [[1]]
 
 
 def test_cangjie_cjk_tokenizer(spark):

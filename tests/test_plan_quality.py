@@ -629,3 +629,38 @@ def test_prepared_window_fuse_keeps_fused_plan(spark):
             sorted(tuple(r) for r in want.collect())
     ent = CozoDb._skel_cache.get(db._skel_key(script, {"g": "a"}))
     assert ent is not None and "head" in ent, "not a hoisted skeleton"
+
+
+# --- index search atoms ---------------------------------------------------------
+
+
+def test_fts_bound_term_read_is_one_job(spark):
+    """A bound single-term FTS read that misses the plan cache scores from
+    the posting rows alone (each carries its term's doc_freq), reads no
+    relation column and needs no distinct (one row per document): the
+    whole call is one Spark job, with no exchange in its plan."""
+    from cozo_spark.datalog.engine import CozoDb
+
+    db = CozoDb(spark)
+    db.register_dataframe("fdocs", spark.range(400).selectExpr(
+        "id AS doc_id",
+        "concat('w', id % 7, ' w', id % 11, ' common') AS text"),
+        keys=["doc_id"])
+    db.run_script("::fts create fdocs:ft {extractor: 'text'}")
+    script = ("?[doc_id, score] := "
+              "~fdocs:ft{doc_id | query: $q, k: 10, bind_score: score}")
+    db.run_script(script, {"q": "common"})  # builds the index
+    sc = spark.sparkContext
+    for i, term in enumerate(("w3", "w5", "w10")):
+        tag = f"fts-bound-{i}"
+        sc.setJobGroup(tag, tag)
+        try:
+            rows = db.run_script(script, {"q": term}).rows
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 10
+        assert len(sc.statusTracker().getJobIdsForGroup(tag) or []) == 1
+    plan = db.run_script_df(script, {"q": "w6"})._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Exchange" not in plan, plan  # no shuffle, no broadcast
